@@ -9,11 +9,11 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.engine.Session.cpus()
     // One engine posture everywhere: the timings must come from the
     // same session config graft.engine.Session defines.
     val spark = graft.engine.Session
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt,
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus,
         appName = "graft-bench")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()

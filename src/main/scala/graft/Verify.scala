@@ -7,9 +7,9 @@ object Verify {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.engine.Session.cpus()
     val spark = graft.engine.Session
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt,
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus,
         appName = "graft-verify")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1036,15 +1036,14 @@ object Dedup {
     // narrow staged file (r17; guide §2.4 — shared exchange).
     val stage = graft.engine.Scratch.dir("graft_dedup_build_")
     try {
-      docs.select(col(id), col(text))
+      val repsP = graft.engine.Scratch.stage(docs.select(col(id), col(text))
         .withColumn("__ch", contentHash(col(text)))
         .withColumn("__rep", min(col(id)).over(Window.partitionBy("__ch")))
         .filter(col(id) === col("__rep"))
         .select(col("__ch").as("content_hash"), col(id),
           when(length(lower(trim(col(text)))) >= shingleK,
-            minhashSignature(col(text), shingleK, np)).as("sig"))
-        .write.mode("overwrite").parquet(s"$stage/reps")
-      val repsP = s.read.parquet(s"$stage/reps")
+            minhashSignature(col(text), shingleK, np)).as("sig")),
+        s"$stage/reps")
       // three independent derived tables over the staged file —
       // disjoint outputs, overlapped (guide §2.6)
       graft.engine.Parallel.run(
@@ -1142,19 +1141,20 @@ object Dedup {
         .join(liveContent
           .select(col("content_hash").as("__ch")), Seq("__ch"), "left_anti")
         .drop("__ch")
-      reps.write.mode("overwrite").parquet(s"$stage/reps")
-      val repsP = s.read.parquet(s"$stage/reps")
+      val repsP = graft.engine.Scratch.stage(reps, s"$stage/reps")
 
-      exact(admitted, id, text).select("content_hash", "keeper_id")
-        .join(liveContent.select("content_hash"),
-          Seq("content_hash"), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/content")
+      val contentP = graft.engine.Scratch.stage(
+        exact(admitted, id, text).select("content_hash", "keeper_id")
+          .join(liveContent.select("content_hash"),
+            Seq("content_hash"), "left_anti"),
+        s"$stage/content")
 
-      repsP.filter(length(lower(trim(col(text)))) >= shK)
-        .select(col(id), minhashSignature(col(text), shK, np).as("sig"))
-        .join(s.read.parquet(s"$indexDir/sigs").select(col(id)),
-          Seq(id), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/sigs")
+      val sigsP = graft.engine.Scratch.stage(
+        repsP.filter(length(lower(trim(col(text)))) >= shK)
+          .select(col(id), minhashSignature(col(text), shK, np).as("sig"))
+          .join(s.read.parquet(s"$indexDir/sigs").select(col(id)),
+            Seq(id), "left_anti"),
+        s"$stage/sigs")
 
       // band delta: drop rows already present (retry convergence —
       // full-key anti-join against the RAW table so a retry can never
@@ -1173,21 +1173,18 @@ object Dedup {
         .join(fresh.select("band", "band_hash").distinct(),
           Seq("band", "band_hash"), "left_semi")
         .groupBy("band", "band_hash").agg(count(lit(1)).as("__n"))
-      fresh
+      val bandsP = graft.engine.Scratch.stage(fresh
         .join(room, Seq("band", "band_hash"), "left")
         .withColumn("__n", coalesce(col("__n"), lit(0L)))
         .withColumn("__rk", row_number().over(
           Window.partitionBy("band", "band_hash").orderBy(col(id))))
         .filter(col("__rk") + col("__n") <= mb)
-        .select(col("band"), col("band_hash"), col(id))
-        .write.mode("overwrite").parquet(s"$stage/bands")
+        .select(col("band"), col("band_hash"), col(id)),
+        s"$stage/bands")
 
-      s.read.parquet(s"$stage/content")
-        .write.mode("append").parquet(s"$indexDir/content")
-      s.read.parquet(s"$stage/sigs")
-        .write.mode("append").parquet(s"$indexDir/sigs")
-      s.read.parquet(s"$stage/bands")
-        .write.mode("append").parquet(s"$indexDir/bands")
+      contentP.write.mode("append").parquet(s"$indexDir/content")
+      sigsP.write.mode("append").parquet(s"$indexDir/sigs")
+      bandsP.write.mode("append").parquet(s"$indexDir/bands")
     } finally graft.engine.Scratch.delete(stage)
   }
 
@@ -1248,8 +1245,7 @@ object Dedup {
     }
     val stage = graft.engine.Scratch.dir("graft_dedup_remove_")
     try {
-      delta.write.mode("overwrite").parquet(s"$stage/delta")
-      s.read.parquet(s"$stage/delta").coalesce(1)
+      graft.engine.Scratch.stage(delta, s"$stage/delta").coalesce(1)
         .write.mode("append").parquet(s"$indexDir/tombstones")
     } finally graft.engine.Scratch.delete(stage)
   }
@@ -1759,16 +1755,15 @@ object Dedup {
     val width = readSpanIndexWidth(s, indexDir)
     val stage = graft.engine.Scratch.dir("graft_span_append_")
     try {
-      val batchKeys = spanSegments(newDocs, id, text, width)
-        .select("span_key").distinct()
-      batchKeys.write.mode("overwrite").parquet(s"$stage/keys")
-      val batchKeysP = s.read.parquet(s"$stage/keys")
+      val batchKeysP = graft.engine.Scratch.stage(
+        spanSegments(newDocs, id, text, width).select("span_key").distinct(),
+        s"$stage/keys")
       // Delta against the RAW key set (not the tombstone-filtered
       // view): the table is a set, and a tombstoned key is still
       // physically present — re-appending it would duplicate the row.
-      batchKeysP
-        .join(spanIndexKeysRaw(s, indexDir), Seq("span_key"), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/delta")
+      val deltaP = graft.engine.Scratch.stage(batchKeysP
+        .join(spanIndexKeysRaw(s, indexDir), Seq("span_key"), "left_anti"),
+        s"$stage/delta")
       // REVIVE tombstoned keys this batch re-ingests: span keys are
       // content-addressed, so a new arrival carrying a removed span
       // means that content is ingested AGAIN and must suppress future
@@ -1790,7 +1785,7 @@ object Dedup {
           s"appendSpanIndex: rename $next -> $live failed")
       }
       val buckets = readSpanIndexBuckets(s, indexDir)
-      s.read.parquet(s"$stage/delta")
+      deltaP
         .write.mode("append").format("parquet")
         .bucketBy(buckets, "span_key").sortBy("span_key")
         .saveAsTable(spanTableName(indexDir))
@@ -1850,7 +1845,7 @@ object Dedup {
     val hasData = fs.exists(p) && fs.listStatus(p)
       .exists(_.getPath.getName.endsWith(".parquet"))
     if (hasData)
-      Some(s.read.parquet(s"$indexDir/tombstones").select("span_key"))
+      Some(s.read.schema("span_key STRING").parquet(s"$indexDir/tombstones"))
     else None
   }
 
@@ -1889,8 +1884,7 @@ object Dedup {
     }
     val stage = graft.engine.Scratch.dir("graft_span_remove_")
     try {
-      delta.write.mode("overwrite").parquet(s"$stage/delta")
-      s.read.parquet(s"$stage/delta").coalesce(1)
+      graft.engine.Scratch.stage(delta, s"$stage/delta").coalesce(1)
         .write.mode("append").parquet(s"$indexDir/tombstones")
     } finally graft.engine.Scratch.delete(stage)
   }

@@ -17,27 +17,59 @@ package graft.engine
   * exception is rethrown (unwrapped) after all tasks settle, so a
   * crash mid-parallel-build leaves the same converging retry state
   * as the sequential order it replaces.
+  *
+  * Never returns while a task is still running. If the caller is
+  * interrupted (or a task future is cancelled) while waiting, the
+  * remaining tasks are cancelled with an interrupt, the pool is
+  * drained, and the exception is rethrown with the caller's
+  * interrupt status restored — so a caller's `finally
+  * Scratch.delete(stage)` cannot race a task thread still writing
+  * there. (The interrupt does not cancel a Spark job such a thread
+  * already submitted; a caller that needs that cancels its job
+  * group.)
   */
 object Parallel {
+  import java.util.concurrent.{Callable, CancellationException,
+    ExecutionException, ExecutorService, Executors, TimeUnit}
+
   def run(tasks: (() => Unit)*): Unit = {
     if (tasks.lengthCompare(1) <= 0) { tasks.foreach(_.apply()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.length)
+    val pool = Executors.newFixedThreadPool(tasks.length)
+    var interrupted = false
     try {
       val futs = tasks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = t()
-        })
+        pool.submit(new Callable[Unit] { def call(): Unit = t() })
       }
       var firstFailure: Throwable = null
-      futs.foreach { f =>
+      try futs.foreach { f =>
         try f.get()
         catch {
-          case e: java.util.concurrent.ExecutionException =>
+          case e: ExecutionException =>
             if (firstFailure == null)
               firstFailure = Option(e.getCause).getOrElse(e)
         }
+      } catch {
+        case e @ (_: InterruptedException | _: CancellationException) =>
+          interrupted = e.isInstanceOf[InterruptedException]
+          futs.foreach(_.cancel(true))
+          throw e
       }
       if (firstFailure != null) throw firstFailure
-    } finally pool.shutdown()
+    } finally {
+      pool.shutdown()
+      interrupted = awaitAll(pool) || interrupted
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+  }
+
+  /** Block until every pool thread has exited, through interrupts;
+    * returns whether one arrived meanwhile.
+    */
+  private def awaitAll(pool: ExecutorService): Boolean = {
+    var interrupted = false
+    while (!pool.isTerminated)
+      try pool.awaitTermination(1, TimeUnit.MINUTES)
+      catch { case _: InterruptedException => interrupted = true }
+    interrupted
   }
 }

@@ -54,6 +54,18 @@ object Scratch {
 
   def delete(f: File): Unit = delete(f.getPath)
 
+  /** Materialize `df` as parquet at `path` (overwriting) and return
+    * the read-back, pinned to `df`'s own schema. A staged read-back
+    * is graft's own file with a known schema: reading it plainly
+    * would launch a one-task schema-inference job per read-back,
+    * several per ingest epoch.
+    */
+  def stage(df: org.apache.spark.sql.DataFrame,
+      path: String): org.apache.spark.sql.DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
   private def deleteFile(f: File): Unit = {
     if (f.isDirectory) {
       val children = f.listFiles()

@@ -61,8 +61,35 @@ object Session {
       // the chunk width, and groups by (sensor, time-chunk) whose
       // per-partition cardinality is modest.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "32768")
+      // Generated-class cache (a static conf: the JVM-wide cache is
+      // sized once, by the session that first generates code). The
+      // default 100 entries are split over 4 LRU segments of 25, so
+      // an ingest-gate epoch's working set (~75-85 distinct classes:
+      // scoring, embedding, probe, fate join, two staged appends,
+      // the between-epoch checks) evicted itself every epoch and
+      // every epoch recompiled it, C2 re-JITting Janino and the
+      // planner along the way. A whole gate benchmark run compiles
+      // 320 distinct classes; 2000 holds that with headroom. Cost: a
+      // compiled class holds ~10 KB of metaspace (measured on JDK 17:
+      // 1,200 compiles of small projection/filter stages, +12.6 MB),
+      // more for join and aggregate stages, so a full cache is tens
+      // of MB, reached only by a JVM that really generates 2000
+      // distinct plans. A gate benchmark run ended +1.1 MB over the
+      // default size.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  /** The core count the CLI mains run `local[n]` with: the
+    * `SPARK_GRAFT_CPUS` value (default 4), parsed once. Anything but a
+    * positive integer fails fast instead of reaching the master URL
+    * or a bench record as a raw string.
+    */
+  def cpus(raw: Option[String] = sys.env.get("SPARK_GRAFT_CPUS")): Int =
+    raw.map(_.trim).fold(4) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
 
   def local(cores: Int = 4): SparkSession = {
     val s = builder(master = s"local[$cores]", shufflePartitions = cores).getOrCreate()

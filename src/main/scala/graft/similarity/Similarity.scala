@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.functions.TextHash
 
@@ -807,10 +808,55 @@ object Similarity {
     * `meta/`) invalidates on every commit swap, so an append (meta
     * untouched) hits and a rebuild (meta swapped) misses — metadata
     * caching with file-level invalidation, the same contract as
-    * Spark's own file-index cache, never a result cache.
+    * Spark's own file-index cache, never a result cache. The same
+    * entry pins the live generation's read schemas ([[IvfMeta]]).
     */
   private val metaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), (String, Int, Int, Long, Int)]
+    (String, String, String), IvfMeta]
+
+  /** One [[metaMemo]] entry: the meta row `(quantizer, lloydIters,
+    * kCentroids, nBuild, gen)` plus the pinned read schemas of the
+    * generation it names.
+    *
+    * Pinned-schema contract: a generation's `centroids` and `lists`
+    * never change after its meta commit (appends land in `tail/`; a
+    * rebuild commits a new generation, hence a new meta fingerprint
+    * and a new entry). So each is schema-inferred at most once per
+    * entry, on its first read, and every later read passes that
+    * schema — no one-task inference job per read, which an ingest
+    * epoch otherwise paid six times. The inferred schema is exactly
+    * what a plain read reports, `cid`'s partition-column type and the
+    * vector element type included. The `tail` schema is derived, not
+    * inferred: [[appendIvfIndex]] writes tail files as the base
+    * lists' columns with `cid` as long. Pre-r14 flat indexes (gen -1)
+    * keep plain inference on every read: pre-r15 appends added cid
+    * partitions to their `lists` in place.
+    */
+  private[graft] final class IvfMeta(
+      val row: (String, Int, Int, Long, Int), val dataDir: String) {
+    private val inferred =
+      new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+    /** The read schema of `table` (`centroids`, `lists` or `tail`). */
+    def schema(s: org.apache.spark.sql.SparkSession,
+        table: String): StructType = table match {
+      case "tail" => StructType(schema(s, "lists").map(f =>
+        if (f.name == "cid") f.copy(dataType = LongType) else f))
+      case _ =>
+        val known = inferred.get(table)
+        if (known != null) known
+        else {
+          val st = s.read.parquet(s"$dataDir/$table").schema
+          inferred.put(table, st)
+          st
+        }
+    }
+
+    def read(s: org.apache.spark.sql.SparkSession,
+        table: String): DataFrame =
+      if (row._5 < 0) s.read.parquet(s"$dataDir/$table")
+      else s.read.schema(schema(s, table)).parquet(s"$dataDir/$table")
+  }
 
   private def metaFingerprint(s: org.apache.spark.sql.SparkSession,
       indexDir: String): String = {
@@ -823,7 +869,11 @@ object Similarity {
   }
 
   private[graft] def ivfMetaFull(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): (String, Int, Int, Long, Int) = {
+      indexDir: String): (String, Int, Int, Long, Int) =
+    ivfMeta(s, indexDir).row
+
+  private[graft] def ivfMeta(s: org.apache.spark.sql.SparkSession,
+      indexDir: String): IvfMeta = {
     val key = (System.identityHashCode(s).toString,
       indexDir, metaFingerprint(s, indexDir))
     val memoized = metaMemo.get(key)
@@ -834,13 +884,13 @@ object Similarity {
       col("k_centroids"),
       (if (cols("n_build")) col("n_build") else lit(-1L)).as("n_build"),
       (if (cols("gen")) col("gen") else lit(-1)).as("gen")).head()
-    val row = (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3),
-      r.getInt(4))
+    val entry = new IvfMeta((r.getString(0), r.getInt(1), r.getInt(2),
+      r.getLong(3), r.getInt(4)), ivfGenDir(indexDir, r.getInt(4)))
     // Re-fingerprint AFTER the read: ivfMetaDf may complete a crashed
     // commit swap (meta.next → meta), which changes the listing the
     // key must reflect.
-    metaMemo.put((key._1, indexDir, metaFingerprint(s, indexDir)), row)
-    row
+    metaMemo.put((key._1, indexDir, metaFingerprint(s, indexDir)), entry)
+    entry
   }
 
   private def ivfMetaFullIfExists(s: org.apache.spark.sql.SparkSession,
@@ -852,27 +902,30 @@ object Similarity {
     else None
   }
 
-  /** The live generation's centroid table (kCentroids rows). */
+  /** The live generation's centroid table (kCentroids rows), read
+    * under the generation's pinned schema ([[IvfMeta]]).
+    */
   def ivfCentroids(s: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame =
-    s.read.parquet(
-      s"${ivfGenDir(indexDir, ivfMetaFull(s, indexDir)._5)}/centroids")
+    ivfMeta(s, indexDir).read(s, "centroids")
 
   /** The live generation's inverted lists `(vid, v, nrm, cid)` —
     * the cid-partitioned base table plus, when [[appendIvfIndex]]
     * has run since the last (re)build, the unpartitioned `tail/`
-    * segment unioned in (schema-aligned to the base read, so the
-    * partition-column type inference on `cid` cannot diverge the
-    * union). Probes joining on `cid` keep dynamic partition pruning
-    * on the base branch; the tail branch is a plain filter over a
-    * segment bounded by the drift-rebuild contract. When no tail
-    * exists (every batch-built index, and every index right after a
-    * rebuild) this returns the plain base read — identical plan to
-    * pre-r15, which is what the d19/d37 plan-pruning assertions pin.
+    * segment unioned in. Both read under the generation's pinned
+    * schemas ([[IvfMeta]]): the base as first inferred, the tail as
+    * the base's columns with `cid` long, cast to the base's `cid`
+    * type for the union. Probes joining on `cid` keep dynamic
+    * partition pruning on the base branch; the tail branch is a
+    * plain filter over a segment bounded by the drift-rebuild
+    * contract. When no tail exists (every batch-built index, and
+    * every index right after a rebuild) this returns the base read
+    * alone — the plan shape of pre-r15, which is what the d19/d37
+    * plan-pruning assertions pin.
     */
   def ivfLists(s: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val raw = listsAndTail(s, ivfGenDir(indexDir, ivfMetaFull(s, indexDir)._5))
+    val raw = listsAndTail(s, ivfMeta(s, indexDir))
     // Tombstoned vids ([[removeFromIvfIndex]]) are dead to every
     // reader — probes, drift rebuilds, ingest-loop stats — from the
     // moment the sidecar lands; their rows stay physical until the
@@ -896,13 +949,24 @@ object Similarity {
     * clears it.
     */
   private def ivfTombstones(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val hasData = fs.exists(p) && fs.listStatus(p)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    if (hasData) Some(s.read.parquet(s"$indexDir/tombstones").select("vid"))
+      indexDir: String): Option[DataFrame] =
+    if (hasParquet(s, s"$indexDir/tombstones"))
+      Some(s.read.schema(TombstoneSchema)
+        .parquet(s"$indexDir/tombstones"))
     else None
+
+  /** The sidecar's one column: [[removeFromIvfIndex]] writes vids
+    * cast to long.
+    */
+  private val TombstoneSchema = StructType.fromDDL("vid BIGINT")
+
+  /** Whether `path` holds any parquet data file. */
+  private def hasParquet(s: org.apache.spark.sql.SparkSession,
+      path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    fs.exists(p) && fs.listStatus(p)
+      .exists(_.getPath.getName.endsWith(".parquet"))
   }
 
   /** DELETE vectors from a persisted IVF index — the takedown/opt-out
@@ -950,8 +1014,7 @@ object Similarity {
     }
     val stage = graft.engine.Scratch.dir("graft_ivf_remove_")
     try {
-      delta.write.mode("overwrite").parquet(s"$stage/delta")
-      s.read.parquet(s"$stage/delta").coalesce(1)
+      graft.engine.Scratch.stage(delta, s"$stage/delta").coalesce(1)
         .write.mode("append").parquet(s"$indexDir/tombstones")
     } finally graft.engine.Scratch.delete(stage)
   }
@@ -967,30 +1030,25 @@ object Similarity {
     */
   def ivfLiveCount(s: org.apache.spark.sql.SparkSession,
       indexDir: String): Long = {
-    val (_, _, _, nBuild, gen) = ivfMetaFull(s, indexDir)
+    val m = ivfMeta(s, indexDir)
+    val nBuild = m.row._4
     if (nBuild < 0L || ivfTombstones(s, indexDir).nonEmpty)
       return ivfLists(s, indexDir).count()
-    val tailPath = new org.apache.hadoop.fs.Path(
-      s"${ivfGenDir(indexDir, gen)}/tail")
-    val fs = tailPath.getFileSystem(s.sessionState.newHadoopConf())
-    val hasTail = fs.exists(tailPath) && fs.listStatus(tailPath)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    if (!hasTail) nBuild
-    else nBuild + s.read.parquet(tailPath.toString).count()
+    if (!hasParquet(s, s"${m.dataDir}/tail")) nBuild
+    else nBuild + m.read(s, "tail").count()
   }
 
-  private[graft] def listsAndTail(s: org.apache.spark.sql.SparkSession,
-      dataDir: String): DataFrame = {
-    val base = s.read.parquet(s"$dataDir/lists")
-    val tailPath = new org.apache.hadoop.fs.Path(s"$dataDir/tail")
-    val fs = tailPath.getFileSystem(s.sessionState.newHadoopConf())
-    val hasTail = fs.exists(tailPath) && fs.listStatus(tailPath)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    if (!hasTail) base
-    else base.unionByName(s.read.parquet(s"$dataDir/tail")
-      .select(base.schema.fields.toSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*))
+  private def listsAndTail(s: org.apache.spark.sql.SparkSession,
+      m: IvfMeta): DataFrame = {
+    val base = m.read(s, "lists")
+    if (!hasParquet(s, s"${m.dataDir}/tail")) base
+    else base.unionByName(castTo(m.read(s, "tail"), base.schema))
   }
+
+  /** `df` projected onto `st`'s columns, each cast to its type. */
+  private def castTo(df: DataFrame, st: StructType): DataFrame =
+    df.select(st.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*)
 
   /** Append new vectors to a persisted IVF index under its FROZEN
     * quantizer — the ingest-loop step after an admission gate admits
@@ -1038,7 +1096,7 @@ object Similarity {
     val s = newVecs.sparkSession
     // resolve the live generation ONCE; every read and the append
     // land in the same generation's dirs
-    val dataDir = ivfGenDir(indexDir, ivfMetaFull(s, indexDir)._5)
+    val m = ivfMeta(s, indexDir)
     // Refuse re-adding a tombstoned vid LOUDLY: its dead rows are
     // still physical, so the duplicate-guard anti-join below would
     // silently drop the new copy (appearing ingested while staying
@@ -1053,23 +1111,22 @@ object Similarity {
         s"appendIvfIndex: batch re-adds vids tombstoned at $indexDir — " +
           "run rebuildIvfIndex first (folds removals out), then append")
     }
-    val cents = s.read.parquet(s"$dataDir/centroids")
+    val cents = m.read(s, "centroids")
     val fresh = newVecs.select(col(id).as("vid"), col(vec).as("v"))
       .withColumn("nrm", norm2(col("v")))
       .filter(col("nrm") > 0)
-      .join(listsAndTail(s, dataDir).select("vid"), Seq("vid"), "left_anti")
+      .join(listsAndTail(s, m).select("vid"), Seq("vid"), "left_anti")
     val stage = graft.engine.Scratch.dir("graft_ivf_append_")
     try {
-      fresh.join(argmaxAssign(fresh, cents), "vid")
-        .write.mode("overwrite").parquet(s"$stage/delta")
-      // cid stored as long unconditionally: the base read infers its
-      // partition-column type per directory contents, and the union
-      // in listsAndTail casts the tail to whatever the base says
-      s.read.parquet(s"$stage/delta")
-        .select(col("vid"), col("v"), col("nrm"),
-          col("cid").cast("long").as("cid"))
+      // Tail files are written in the tail's pinned schema (the base
+      // lists' columns, cid as long) so every tail read can pass it;
+      // cid stays long whatever type the base's partition column has,
+      // as in every tail written before schemas were pinned.
+      castTo(graft.engine.Scratch.stage(
+          fresh.join(argmaxAssign(fresh, cents), "vid"), s"$stage/delta"),
+          m.schema(s, "tail"))
         .coalesce(1)
-        .write.mode("append").parquet(s"$dataDir/tail")
+        .write.mode("append").parquet(s"${m.dataDir}/tail")
     } finally graft.engine.Scratch.delete(stage)
   }
 

@@ -474,7 +474,9 @@ object StreamingOps {
     val epochPath = s"$outDir/epoch=$epochId"
     val marker = new org.apache.hadoop.fs.Path(s"$epochPath/_SUCCESS")
     val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(marker)) {
+    // The fates' schema when this call writes them; a replayed
+    // committed epoch reads back whatever its first attempt wrote.
+    val written: Option[StructType] = if (fs.exists(marker)) None else {
       val scored = graft.functions.HashedLinear.scorePm(
         batch, cfg.weights, cfg.weightDim, id, text, cfg.thresholdPm)
       val pass1 = batch.join(
@@ -492,7 +494,7 @@ object StreamingOps {
       val nov = graft.dedup.Dedup
         .spanNovelty(pass2, id, text, spanIndexDir)
         .select(col(id), col("novel_pm"))
-      scored.select(col(id), col("n_tokens"), col("score_pm"))
+      val fates = scored.select(col(id), col("n_tokens"), col("score_pm"))
         .join(cos, Seq(id), "left")
         .join(nov, Seq(id), "left")
         .select(col(id),
@@ -502,14 +504,16 @@ object StreamingOps {
             .otherwise("admitted").as("fate"),
           col("n_tokens"), col("score_pm"), col("max_cos"),
           col("novel_pm"))
-        .write.mode("overwrite").parquet(epochPath)
+      fates.write.mode("overwrite").parquet(epochPath)
+      Some(fates.schema)
     }
     // From here the COMMITTED fates are the single source of truth:
     // the append plans read them from the epoch output and never
     // re-probe the (possibly already-mutated) indexes.
+    val committed =
+      written.fold(s.read)(st => s.read.schema(st)).parquet(epochPath)
     val admitted = batch.join(
-      s.read.parquet(epochPath).filter(col("fate") === "admitted")
-        .select(col(id)),
+      committed.filter(col("fate") === "admitted").select(col(id)),
       Seq(id), "left_semi").persist()
     try {
       val n = admitted.count()

@@ -19,7 +19,8 @@ import graft.similarity.Similarity
   *    stale parameters can never serve a probe;
   *  - ivfLiveCount's meta/tail fast path equals the exact
   *    tombstone-filtered count in every index state;
-  *  - Parallel.run executes every task and propagates failures.
+  *  - Parallel.run executes every task, propagates failures, and
+  *    never returns while an interrupted caller's tasks still run.
   */
 class Round17OpsSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -181,5 +182,40 @@ class Round17OpsSpec extends AnyFunSuite {
     }
     assert(e.getMessage == "boom")
     assert(hits.get() == 4)
+  }
+
+  test("Parallel.run: an interrupted caller cancels its tasks, keeps its interrupt, and returns only after they exit") {
+    val live = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.CountDownLatch(2)
+    val cancelled = new java.util.concurrent.atomic.AtomicInteger(0)
+    // a writer that takes a moment to wind down once interrupted
+    def writer(): () => Unit = () => {
+      live.incrementAndGet()
+      started.countDown()
+      try Thread.sleep(60000)
+      catch {
+        case _: InterruptedException =>
+          cancelled.incrementAndGet()
+          Thread.sleep(300)
+      } finally { live.decrementAndGet(); () }
+    }
+    @volatile var thrown: Throwable = null
+    @volatile var liveAtReturn = -1
+    @volatile var interruptedAfter = false
+    val caller = new Thread(() => {
+      try graft.engine.Parallel.run(writer(), writer())
+      catch { case t: Throwable => thrown = t }
+      liveAtReturn = live.get()
+      interruptedAfter = Thread.currentThread().isInterrupted
+    })
+    caller.start()
+    assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive, "Parallel.run did not return after the interrupt")
+    assert(thrown.isInstanceOf[InterruptedException], s"threw $thrown")
+    assert(cancelled.get() == 2, "both running tasks must be interrupted")
+    assert(liveAtReturn == 0, "returned while a task was still running")
+    assert(interruptedAfter, "the caller's interrupt status must survive")
   }
 }
