@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.IndexStore
 import graft.functions.TextHash
 
 /** Near-duplicate detection for document corpora (SURVEY §2.D).
@@ -1009,7 +1010,9 @@ object Dedup {
     *            [[incremental]] reads its parameters from here; an
     *            auto-tuned build ([[AutoPerms]], the default)
     *            resolves once at build time and the choice travels
-    *            with the index.
+    *            with the index. Written LAST, after the three tables
+    *            ([[graft.engine.IndexStore]] META COMMIT); any
+    *            tombstone sidecar of the index it replaces is cleared.
     *
     * Each table is one hash-partitioned pass; nothing is collected
     * to the driver. At 100 TB the index is just three bucketed
@@ -1022,9 +1025,6 @@ object Dedup {
     val s = docs.sparkSession
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    Seq((shingleK, np, bands, maxBucket))
-      .toDF("shingle_k", "num_perms", "bands", "max_bucket")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
     // ONE content-hash window pass stages everything the three index
     // tables need — (content_hash, rep id, signature) per content
     // representative, ~(16+np)·8 bytes/row, text NOT staged. The
@@ -1061,6 +1061,11 @@ object Dedup {
         () => repsP.filter(col("sig").isNotNull).select(col(id), col("sig"))
           .write.mode("overwrite").parquet(s"$indexDir/sigs"))
     } finally graft.engine.Scratch.delete(stage)
+    // Meta last (the IndexStore commit); a from-scratch build holds no
+    // removed rows, so any earlier sidecar is cleared after it.
+    IndexStore.commitMeta(s, indexDir, Seq((shingleK, np, bands, maxBucket))
+      .toDF("shingle_k", "num_perms", "bands", "max_bucket"))
+    IndexStore.clearTombstones(s, indexDir)
   }
 
   /** Append an ADMITTED batch to a persisted dedup index
@@ -1102,34 +1107,28 @@ object Dedup {
       indexDir: String): Unit = {
     val s = admitted.sparkSession
     import org.apache.spark.sql.expressions.Window
-    val (shK, np, nb, mb) = readIndexMeta(s, indexDir).getOrElse(
+    val m = IndexStore.meta(s, indexDir)
+    val (shK, np, nb, mb) = m.map(minhashParams).getOrElse(
       throw new IllegalStateException(
         s"appendIndex: index at $indexDir carries no meta — pre-meta " +
           "legacy indexes cannot be appended to; rebuild with buildIndex"))
+    def table(t: String) = IndexStore.read(s, m, s"$indexDir/$t")
     val stage = graft.engine.Scratch.dir("graft_dedup_append_")
     try {
-      // Re-using a tombstoned id is refused loudly: the id-keyed
-      // sidecar would kill the NEW rows too, so the append would
-      // appear ingested while staying dead. compactIndex re-arms the
-      // id. (Same content under a FRESH id is the supported re-ingest
-      // path — the live-view anti-joins below let it land.)
-      val tomb = indexTombstones(s, indexDir, id)
-      tomb.foreach { t =>
-        val clash = admitted.select(col(id))
-          .join(t, Seq(id), "left_semi").limit(1).count()
-        if (clash > 0) throw new IllegalStateException(
-          s"appendIndex: batch re-uses ids tombstoned at $indexDir — " +
-            "run compactIndex first (folds removals out), then append")
-      }
+      // Re-using a tombstoned id is refused loudly; compactIndex
+      // re-arms the id. (Same content under a FRESH id is the
+      // supported re-ingest path — the live-view anti-joins below let
+      // it land.)
+      val tomb = IndexStore.tombstones(s, indexDir, None).map(_.toDF(id))
+      IndexStore.refuseTombstoned(admitted.select(col(id)), tomb,
+        s"appendIndex: batch re-uses ids tombstoned at $indexDir — " +
+          "run compactIndex first (folds removals out), then append")
       // LIVE content view: a content_hash whose keeper was removed no
       // longer blocks re-ingesting that content under its new keeper
       // (the dead row stays physical until compaction; probes filter
       // it, so the hash resolving to two physical rows is benign).
-      val liveContent = tomb match {
-        case Some(t) => s.read.parquet(s"$indexDir/content")
-          .join(t.toDF("keeper_id"), Seq("keeper_id"), "left_anti")
-        case None => s.read.parquet(s"$indexDir/content")
-      }
+      val liveContent = tomb.fold(table("content"))(t =>
+        table("content").join(t.toDF("keeper_id"), Seq("keeper_id"), "left_anti"))
       // Defensive: drop representatives whose CONTENT is already
       // indexed before deriving the sig/band deltas. Callers normally
       // pass only kept rows, but an exact_index row slipping in would
@@ -1152,8 +1151,7 @@ object Dedup {
       val sigsP = graft.engine.Scratch.stage(
         repsP.filter(length(lower(trim(col(text)))) >= shK)
           .select(col(id), minhashSignature(col(text), shK, np).as("sig"))
-          .join(s.read.parquet(s"$indexDir/sigs").select(col(id)),
-            Seq(id), "left_anti"),
+          .join(table("sigs").select(col(id)), Seq(id), "left_anti"),
         s"$stage/sigs")
 
       // band delta: drop rows already present (retry convergence —
@@ -1162,11 +1160,9 @@ object Dedup {
       // capacity smallest-id-first. Capacity counts LIVE rows only:
       // tombstoned rows are invisible to probes, so they must not
       // hold bucket slots against new arrivals.
-      val existing = s.read.parquet(s"$indexDir/bands")
-      val liveExisting = tomb match {
-        case Some(t) => existing.join(t, Seq(id), "left_anti")
-        case None => existing
-      }
+      val existing = table("bands")
+      val liveExisting =
+        tomb.fold(existing)(t => existing.join(t, Seq(id), "left_anti"))
       val fresh = lshBandsResolved(repsP, id, text, shK, np, nb)
         .join(existing, Seq("band", "band_hash", id), "left_anti")
       val room = liveExisting
@@ -1186,21 +1182,6 @@ object Dedup {
       sigsP.write.mode("append").parquet(s"$indexDir/sigs")
       bandsP.write.mode("append").parquet(s"$indexDir/bands")
     } finally graft.engine.Scratch.delete(stage)
-  }
-
-  /** The MinHash index's tombstone sidecar `(<id>)` if any removal
-    * has landed since the last [[compactIndex]] — column named like
-    * the index's id column so joins read naturally.
-    */
-  private def indexTombstones(s: org.apache.spark.sql.SparkSession,
-      indexDir: String, id: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val hasData = fs.exists(p) && fs.listStatus(p)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    if (hasData)
-      Some(s.read.parquet(s"$indexDir/tombstones").toDF(id))
-    else None
   }
 
   /** DELETE documents from a persisted MinHash dedup index
@@ -1227,105 +1208,54 @@ object Dedup {
     * against the tombstone-filtered live view, so the content lands
     * under its new keeper while the dead row stays filtered.
     *
-    * SIZE CONTRACT (r17): the sidecar is for TAKEDOWN-SIZED deltas —
-    * a set every probe can anti-join broadcast (the [[incremental]]
-    * reads hint it) and one task can write (`coalesce(1)`). Bulk
-    * removal of a large corpus fraction should instead filter the
-    * source and [[buildIndex]] fresh (the same full-rewrite cost a
-    * mass removal fundamentally is), leaving no sidecar behind —
-    * the IVF family's [[graft.similarity.Similarity.removeFromIvfIndex]]
-    * documents the identical rule.
+    * Takedown-sized removals only: past the broadcast bound the
+    * removal is refused, and bulk removal filters the source and runs
+    * [[buildIndex]] fresh ([[graft.engine.IndexStore]] SIZE CONTRACT).
     */
-  def removeFromIndex(ids: DataFrame, id: String, indexDir: String): Unit = {
-    val s = ids.sparkSession
-    val dead = ids.select(col(id)).distinct()
-    val delta = indexTombstones(s, indexDir, id) match {
-      case Some(t) => dead.join(t, Seq(id), "left_anti")
-      case None => dead
-    }
-    val stage = graft.engine.Scratch.dir("graft_dedup_remove_")
-    try {
-      graft.engine.Scratch.stage(delta, s"$stage/delta").coalesce(1)
-        .write.mode("append").parquet(s"$indexDir/tombstones")
-    } finally graft.engine.Scratch.delete(stage)
-  }
+  def removeFromIndex(ids: DataFrame, id: String, indexDir: String): Unit =
+    IndexStore.addTombstones(ids.select(col(id)).distinct(), indexDir, None,
+      "filter the source and run buildIndex over it")
 
   /** Fold tombstoned removals ([[removeFromIndex]]) OUT of the index
     * tables physically and clear the sidecar — run once removals
     * accumulate (the compaction half of the delete contract; probes
     * are already correct before it runs, this reclaims the bytes and
-    * re-arms the removed ids for reuse).
-    *
-    * Staged and crash-safe in the [[buildSpanIndex]] swap style:
-    * every table's compacted copy lands in scratch first, then swaps
-    * into place by delete+rename, and the sidecar is deleted LAST —
-    * a crash mid-swap leaves a mix of compacted and uncompacted
-    * tables WITH the sidecar still present, so probes stay correct
-    * (the anti-join filters whatever physical rows remain) and
-    * re-running converges.
+    * re-arms the removed ids for reuse). Each table's compacted copy
+    * is staged, then swapped in, and the sidecar is cleared LAST
+    * ([[graft.engine.IndexStore]] CRASH SWAP).
     */
   def compactIndex(s: org.apache.spark.sql.SparkSession, id: String,
       indexDir: String): Unit =
-    indexTombstones(s, indexDir, id).foreach { tomb =>
-      compactIndexResolved(s, id, indexDir, tomb)
+    IndexStore.tombstones(s, indexDir, None).foreach { sidecar =>
+      val tomb = sidecar.toDF(id)
+      val m = IndexStore.meta(s, indexDir)
+      val stage = graft.engine.Scratch.dir("graft_dedup_compact_")
+      try {
+        Seq("content" -> tomb.toDF("keeper_id"), "sigs" -> tomb, "bands" -> tomb)
+          .foreach { case (t, dead) =>
+            IndexStore.read(s, m, s"$indexDir/$t")
+              .join(dead, dead.columns.toSeq, "left_anti")
+              .write.mode("overwrite").parquet(s"$stage/$t")
+          }
+        Seq("content", "sigs", "bands").foreach(t =>
+          IndexStore.swap(s, s"$stage/$t", s"$indexDir/$t"))
+        IndexStore.clearTombstones(s, indexDir)
+      } finally graft.engine.Scratch.delete(stage)
     }
 
-  private def compactIndexResolved(s: org.apache.spark.sql.SparkSession,
-      id: String, indexDir: String, tomb: DataFrame): Unit = {
-    val stage = graft.engine.Scratch.dir("graft_dedup_compact_")
-    val conf = s.sessionState.newHadoopConf()
-    try {
-      s.read.parquet(s"$indexDir/content")
-        .join(tomb.toDF("keeper_id"), Seq("keeper_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/content")
-      s.read.parquet(s"$indexDir/sigs")
-        .join(tomb, Seq(id), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/sigs")
-      s.read.parquet(s"$indexDir/bands")
-        .join(tomb, Seq(id), "left_anti")
-        .write.mode("overwrite").parquet(s"$stage/bands")
-      Seq("content", "sigs", "bands").foreach { t =>
-        val live = new org.apache.hadoop.fs.Path(s"$indexDir/$t")
-        val staged = new org.apache.hadoop.fs.Path(s"$stage/$t")
-        val fs = live.getFileSystem(conf)
-        fs.delete(live, true)
-        if (!fs.rename(staged, live))
-          throw new java.io.IOException(
-            s"compactIndex: rename $staged -> $live failed")
-      }
-      val tp = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-      tp.getFileSystem(conf).delete(tp, true)
-    } finally graft.engine.Scratch.delete(stage)
-  }
-
-  /** The banding parameters a persisted index was written with
-    * ([[buildIndex]]'s meta table), or None for a pre-meta index.
-    * Memoized per (session, path, meta-file fingerprint) — the same
-    * metadata-caching contract as [[readSpanIndexMeta]]: buildIndex
-    * overwrites meta (fingerprint changes), append/remove never
-    * touch it.
+  /** The banding parameters `(shingle_k, num_perms, bands,
+    * max_bucket)` a persisted index was written with ([[buildIndex]]'s
+    * meta row, memoized by [[graft.engine.IndexStore.meta]]), or None
+    * for a pre-meta index.
     */
-  private val indexMetaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), (Int, Int, Int, Int)]
-
   private[graft] def readIndexMeta(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[(Int, Int, Int, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val fp = fs.listStatus(p).sortBy(_.getPath.getName)
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .mkString("\n")
-      val key = (System.identityHashCode(s).toString, indexDir, fp)
-      val memoized = indexMetaMemo.get(key)
-      if (memoized != null) return Some(memoized)
-      val r = s.read.parquet(s"$indexDir/meta")
-        .select("shingle_k", "num_perms", "bands", "max_bucket").head()
-      val row = (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
-      indexMetaMemo.put(key, row)
-      Some(row)
-    }
+      indexDir: String): Option[(Int, Int, Int, Int)] =
+    IndexStore.meta(s, indexDir).map(minhashParams)
+
+  private def minhashParams(m: IndexStore.Meta): (Int, Int, Int, Int) = {
+    val r = m.row
+    (r.getAs[Int]("shingle_k"), r.getAs[Int]("num_perms"),
+      r.getAs[Int]("bands"), r.getAs[Int]("max_bucket"))
   }
 
   /** Dedup a new document batch against a persisted corpus index
@@ -1374,8 +1304,7 @@ object Dedup {
       bands: Int = 4, maxBucket: Int = 512, estMin: Int = -1): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = newDocs.sparkSession
-    val meta = readIndexMeta(s, indexDir)
-    val (shK, np, nb, mb) = meta match {
+    val (shK, np, nb, mb) = readIndexMeta(s, indexDir) match {
       case Some((mShK, mNp, mNb, mMb)) =>
         if (numPerms != AutoPerms &&
             (mShK, mNp, mNb) != (shingleK, numPerms, bands))
@@ -1404,17 +1333,17 @@ object Dedup {
     // (r17): takedown-sized by the removeFromIndex contract, and an
     // estimate miss would otherwise re-shuffle the corpus-scale index
     // tables by id just to drop a handful of rows.
-    val tomb = indexTombstones(s, indexDir, id)
-    def liveById(df: DataFrame, idCol: String): DataFrame = tomb match {
-      case Some(t) =>
-        df.join(broadcast(t.toDF(idCol)), Seq(idCol), "left_anti")
-      case None => df
+    // Tables read under the schemas pinned in the index's meta entry.
+    val m = IndexStore.meta(s, indexDir)
+    val tomb = IndexStore.tombstones(s, indexDir, None)
+    def liveById(t: String, idCol: String): DataFrame = {
+      val df = IndexStore.read(s, m, s"$indexDir/$t")
+      tomb.fold(df)(d => df.join(broadcast(d.toDF(idCol)), Seq(idCol), "left_anti"))
     }
-    val idxContent = liveById(
-      s.read.parquet(s"$indexDir/content"), "keeper_id")
-    val idxBands = liveById(s.read.parquet(s"$indexDir/bands"), id)
+    val idxContent = liveById("content", "keeper_id")
+    val idxBands = liveById("bands", id)
       .withColumnRenamed(id, "__old")
-    val idxSigs = liveById(s.read.parquet(s"$indexDir/sigs"), id)
+    val idxSigs = liveById("sigs", id)
       .withColumnRenamed(id, "__old").withColumnRenamed("sig", "__osig")
     val withCh = newDocs.select(col(id), col(text))
       .withColumn("__ch", contentHash(col(text)))
@@ -1701,26 +1630,17 @@ object Dedup {
     s.sql(s"DROP TABLE IF EXISTS $stageTbl") // files stay; name freed
     // 2. Swap: catalog entry out, old files out, staged files in.
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val spansPath = new org.apache.hadoop.fs.Path(s"$indexDir/spans")
-    val fs = spansPath.getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(spansPath, true)
-    fs.mkdirs(spansPath.getParent)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(s"$stage/spans"), spansPath))
-      throw new java.io.IOException(
-        s"buildSpanIndex: rename $stage/spans -> $spansPath failed")
+    IndexStore.swap(s, s"$stage/spans", s"$indexDir/spans")
     graft.engine.Scratch.delete(stage)
     // 3. Meta last: readers adopt the new grain only once its keys
     //    are fully in place.
-    Seq((width, buckets)).toDF("width", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
+    IndexStore.commitMeta(s, indexDir,
+      Seq((width, buckets)).toDF("width", "buckets"))
     // 3b. A from-scratch rebuild derives from the LIVE corpus, so any
     //     tombstoned removals are already folded out of the new key
     //     set — clear the sidecar (after the meta commit: a crash
     //     earlier leaves the old index + sidecar intact and correct).
-    Seq(s"$indexDir/tombstones", s"$indexDir/tombstones.next").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-    }
+    IndexStore.clearTombstones(s, indexDir)
     // 4. Re-declare the catalog table over the swapped files (same
     //    DDL path probes use to re-attach in a fresh session).
     //    Declare WITHOUT resolving: resolving here would cache this
@@ -1736,18 +1656,11 @@ object Dedup {
     * bucketed (the delta is inserted through the table API, so new
     * files carry bucket ids like the originals).
     *
-    * Crash-safe by staging (r13 — the direct read-append this
-    * replaces read `spans/` and appended to the same path inside one
-    * job): the delta is MATERIALIZED to a scratch directory first,
-    * so the anti-join's read of the index completes before anything
-    * writes to the index location; the append job then reads only
-    * the staged files. A crash mid-append leaves at worst a
-    * partially visible delta — re-running the same batch converges
-    * (already-visible keys drop out of the anti-join, missing ones
-    * are re-staged; the key set never gains duplicates) — and a
-    * crash before the append leaves the index untouched with only an
-    * orphaned scratch dir, which the [[graft.engine.Scratch]] exit
-    * sweep removes.
+    * Crash-safe by staging: the delta is MATERIALIZED to a scratch
+    * directory before anything writes to the index location, so a
+    * crash leaves at worst a partially visible delta and re-running
+    * the same batch converges without duplicating a key (the sidecar
+    * rewrite follows [[graft.engine.IndexStore]] CRASH SWAP).
     */
   def appendSpanIndex(newDocs: DataFrame, id: String, text: String,
       indexDir: String): Unit = {
@@ -1768,21 +1681,13 @@ object Dedup {
       // content-addressed, so a new arrival carrying a removed span
       // means that content is ingested AGAIN and must suppress future
       // occurrences — the sidecar is rewritten minus the batch's keys
-      // via the tombstones.next swap ([[spanIndexTombstones]] heals
-      // the one residual rename window). Runs BEFORE the table
+      // via the tombstones.next swap. Runs BEFORE the table
       // append: a crash between the two leaves the revived keys
       // already-physical and live (correct), and the staged delta's
       // missing keys re-stage on retry.
-      spanIndexTombstones(s, indexDir).foreach { t =>
-        val live = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-        val next = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones.next")
-        val fs = live.getFileSystem(s.sessionState.newHadoopConf())
-        fs.delete(next, true)
-        t.join(batchKeysP, Seq("span_key"), "left_anti")
-          .coalesce(1).write.parquet(s"$indexDir/tombstones.next")
-        fs.delete(live, true)
-        if (!fs.rename(next, live)) throw new java.io.IOException(
-          s"appendSpanIndex: rename $next -> $live failed")
+      IndexStore.tombstones(s, indexDir, SpanTombstones).foreach { t =>
+        IndexStore.rewriteTombstones(s, indexDir,
+          t.join(batchKeysP, Seq("span_key"), "left_anti"))
       }
       val buckets = readSpanIndexBuckets(s, indexDir)
       deltaP
@@ -1809,11 +1714,13 @@ object Dedup {
     // whole plan, bit-identical to pre-tombstone — the anti-join
     // only appears while a sidecar exists, and the sidecar is
     // removal-sized, so it broadcasts.
-    spanIndexTombstones(s, indexDir) match {
-      case Some(t) => raw.join(broadcast(t), Seq("span_key"), "left_anti")
-      case None => raw
-    }
+    IndexStore.tombstones(s, indexDir, SpanTombstones)
+      .fold(raw)(t => raw.join(broadcast(t), Seq("span_key"), "left_anti"))
   }
+
+  /** The span sidecar's one column. */
+  private val SpanTombstones =
+    Some(org.apache.spark.sql.types.StructType.fromDDL("span_key STRING"))
 
   private def spanIndexKeysRaw(s: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
@@ -1828,25 +1735,6 @@ object Dedup {
       // by the bucket file count, not the corpus.
       s.catalog.refreshTable(tbl)
     s.table(tbl).select("span_key")
-  }
-
-  /** The span index's tombstone sidecar `(span_key)`, completing a
-    * crashed [[appendSpanIndex]] revive swap first (`tombstones`
-    * absent, `tombstones.next` present → finish the rename — the
-    * commitIvfMeta self-heal applied here, so the one residual
-    * window of the rewrite cannot silently resurrect removals).
-    */
-  private def spanIndexTombstones(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    val next = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones.next")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p) && fs.exists(next)) fs.rename(next, p)
-    val hasData = fs.exists(p) && fs.listStatus(p)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    if (hasData)
-      Some(s.read.schema("span_key STRING").parquet(s"$indexDir/tombstones"))
-    else None
   }
 
   /** DELETE documents' spans from a persisted span index — the
@@ -1868,26 +1756,17 @@ object Dedup {
     * later append that re-ingests the span also revives it exactly
     * ([[appendSpanIndex]] clears matching tombstones).
     *
-    * Idempotent: the delta is anti-joined against the sidecar
-    * (retries converge, no duplicate rows) and staged to scratch
-    * before anything writes under the index.
+    * Idempotent, and takedown-sized only: past the broadcast bound
+    * the removal is refused, and bulk removal rebuilds over the
+    * filtered corpus ([[graft.engine.IndexStore]] SIZE CONTRACT).
     */
   def removeFromSpanIndex(docs: DataFrame, id: String, text: String,
-      indexDir: String): Unit = {
-    val s = docs.sparkSession
-    val width = readSpanIndexWidth(s, indexDir)
-    val dead = spanSegments(docs, id, text, width)
-      .select("span_key").distinct()
-    val delta = spanIndexTombstones(s, indexDir) match {
-      case Some(t) => dead.join(t, Seq("span_key"), "left_anti")
-      case None => dead
-    }
-    val stage = graft.engine.Scratch.dir("graft_span_remove_")
-    try {
-      graft.engine.Scratch.stage(delta, s"$stage/delta").coalesce(1)
-        .write.mode("append").parquet(s"$indexDir/tombstones")
-    } finally graft.engine.Scratch.delete(stage)
-  }
+      indexDir: String): Unit =
+    IndexStore.addTombstones(
+      spanSegments(docs, id, text, readSpanIndexWidth(docs.sparkSession, indexDir))
+        .select("span_key").distinct(),
+      indexDir, SpanTombstones,
+      "filter the corpus and run buildSpanIndex over it")
 
   /** Declare the catalog table over an existing span index's bucketed
     * files (no resolution, so nothing is cached in this session).
@@ -1899,12 +1778,7 @@ object Dedup {
     // meta/ without spans/ is a half-built index (crash mid-rebuild),
     // and an empty external table would silently score every span
     // novel instead of failing.
-    val spansPath = new org.apache.hadoop.fs.Path(s"$indexDir/spans")
-    val fs = spansPath.getFileSystem(s.sessionState.newHadoopConf())
-    val hasData = fs.exists(spansPath) &&
-      fs.listStatus(spansPath).exists(st =>
-        st.isFile && st.getLen > 0 && !st.getPath.getName.startsWith("_"))
-    if (!hasData)
+    if (!IndexStore.hasParquet(s, s"$indexDir/spans"))
       throw new IllegalStateException(
         s"span index at $indexDir has meta but no span data files — " +
           "half-built index (crash mid-rebuild?); re-run buildSpanIndex")
@@ -1927,6 +1801,7 @@ object Dedup {
   def deleteSpanIndex(s: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS ${spanTableName(indexDir)}")
+    IndexStore.forget(s, indexDir)
     graft.engine.Scratch.delete(indexDir)
   }
 
@@ -1941,79 +1816,29 @@ object Dedup {
     s"graft_span_idx_$h"
   }
 
-  /** Span-index meta `(width, buckets?)`, memoized per (session,
-    * path, meta-file fingerprint) — r17: every probe/append resolved
-    * the one-row meta parquet as its own ~0.1 s Spark job, several
-    * times per ingest epoch. The fingerprint (name/length/mtime of
-    * the files under `meta/`) invalidates on rebuild (which
-    * overwrites meta) and is untouched by appends — metadata caching
-    * with file-level invalidation, same contract as the IVF meta
-    * memo ([[graft.similarity.Similarity]]).
+  /** The span index's meta row `(width, buckets)`, memoized by
+    * [[graft.engine.IndexStore.meta]].
     */
-  private val spanMetaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), (Int, Option[Int])]
-
-  private def readSpanIndexMeta(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): (Int, Option[Int]) = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val fp =
-      if (!fs.exists(p)) ""
-      else fs.listStatus(p).sortBy(_.getPath.getName)
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .mkString("\n")
-    val key = (System.identityHashCode(s).toString, indexDir, fp)
-    val memoized = spanMetaMemo.get(key)
-    if (memoized != null) return memoized
-    val df = s.read.parquet(s"$indexDir/meta")
-    val row = (df.select("width").head().getInt(0),
-      if (df.columns.contains("buckets"))
-        Some(df.select("buckets").head().getInt(0))
-      else None)
-    spanMetaMemo.put(key, row)
-    row
-  }
+  private def spanMeta(s: org.apache.spark.sql.SparkSession,
+      indexDir: String): org.apache.spark.sql.Row =
+    IndexStore.meta(s, indexDir).getOrElse(throw new IllegalStateException(
+      s"no span index at $indexDir (no meta) — build it with buildSpanIndex")).row
 
   private def readSpanIndexWidth(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Int = readSpanIndexMeta(s, indexDir)._1
+      indexDir: String): Int = spanMeta(s, indexDir).getAs[Int]("width")
 
   private def readSpanIndexBuckets(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Int =
-    readSpanIndexMeta(s, indexDir)._2.getOrElse {
-      // pre-r13 indexes carry no bucket meta — their spans/ files are
-      // unbucketed, which a bucket-spec'd table would silently
-      // misread (bucket pruning against wrong file naming), so
-      // refuse loudly
-      throw new IllegalStateException(
-        s"span index at $indexDir predates the bucketed layout " +
-          "(no bucket meta) — rebuild it with buildSpanIndex")
-    }
+      indexDir: String): Int = {
+    val r = spanMeta(s, indexDir)
+    // pre-r13 indexes carry no bucket meta — their spans/ files are
+    // unbucketed, which a bucket-spec'd table would silently misread
+    // (bucket pruning against wrong file naming), so refuse loudly
+    if (!r.schema.fieldNames.contains("buckets")) throw new IllegalStateException(
+      s"span index at $indexDir predates the bucketed layout " +
+        "(no bucket meta) — rebuild it with buildSpanIndex")
+    r.getAs[Int]("buckets")
+  }
 
-  /** Dedup a NEW batch's spans against a persisted span index
-    * ([[buildSpanIndex]]) — same output shape as [[spanDedup]]
-    * (`n_spans`, `kept_spans`, rebuilt-text md5 per batch document),
-    * but the already-ingested corpus is represented ONLY by its
-    * index: a span survives iff it is absent from the index AND this
-    * occurrence is the batch-internal first owner (min `(id,
-    * seg_idx)` within the batch — d39's rule applied to the batch).
-    *
-    * Ordering semantics: "first" is INGESTION order, not id order —
-    * any indexed occurrence beats every new one regardless of ids
-    * (what a crawl pipeline means by first). When every ingested id
-    * precedes every batch id the result coincides with batch-global
-    * [[spanDedup]] restricted to the batch (pinned in
-    * SpanIndexSpec); with interleaved ids the incremental result is
-    * the ingestion-faithful one.
-    *
-    * Scale shape: the batch-first owner is the same partial-agg
-    * `min(struct)` as d39 (a boilerplate span repeated across the
-    * whole batch collapses map-side); the index probe is a LEFT
-    * equi-join of batch span keys against the `spans/` key set (AQE
-    * skew-split territory, never a rescan of ingested text); the
-    * rebuild is one combiner-friendly groupBy. `width = 0` (default)
-    * adopts the index's grain; a non-zero width contradicting the
-    * meta throws.
-    */
   /** STREAMING-SAFE span-novelty probe of a persisted span index
     * ([[buildSpanIndex]]): per document, how much of its content is
     * NEW relative to the ingested corpus — `(id, n_spans,
@@ -2049,6 +1874,31 @@ object Dedup {
       .withColumn("novel_pm", expr("novel_spans * 1000 div n_spans"))
   }
 
+  /** Dedup a NEW batch's spans against a persisted span index
+    * ([[buildSpanIndex]]) — same output shape as [[spanDedup]]
+    * (`n_spans`, `kept_spans`, rebuilt-text md5 per batch document),
+    * but the already-ingested corpus is represented ONLY by its
+    * index: a span survives iff it is absent from the index AND this
+    * occurrence is the batch-internal first owner (min `(id,
+    * seg_idx)` within the batch — d39's rule applied to the batch).
+    *
+    * Ordering semantics: "first" is INGESTION order, not id order —
+    * any indexed occurrence beats every new one regardless of ids
+    * (what a crawl pipeline means by first). When every ingested id
+    * precedes every batch id the result coincides with batch-global
+    * [[spanDedup]] restricted to the batch (pinned in
+    * SpanIndexSpec); with interleaved ids the incremental result is
+    * the ingestion-faithful one.
+    *
+    * Scale shape: the batch-first owner is the same partial-agg
+    * `min(struct)` as d39 (a boilerplate span repeated across the
+    * whole batch collapses map-side); the index probe is a LEFT
+    * equi-join of batch span keys against the `spans/` key set (AQE
+    * skew-split territory, never a rescan of ingested text); the
+    * rebuild is one combiner-friendly groupBy. `width = 0` (default)
+    * adopts the index's grain; a non-zero width contradicting the
+    * meta throws.
+    */
   def spanDedupIncremental(newDocs: DataFrame, id: String, text: String,
       indexDir: String, width: Int = 0): DataFrame = {
     val s = newDocs.sparkSession

@@ -1,0 +1,222 @@
+package graft.engine
+
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** The lifecycle the three persisted index families share — MinHash
+  * ([[graft.dedup.Dedup.buildIndex]]), span
+  * ([[graft.dedup.Dedup.buildSpanIndex]]) and IVF
+  * ([[graft.similarity.Similarity.buildIvfIndex]]): build, probe,
+  * append, take down, compact or rebuild. Each family keeps its own
+  * payload tables, segmentation and probe; the decisions below are
+  * made here once. The layout is the one every family has always
+  * written under its index dir:
+  *
+  *   meta/            one row of build parameters, the family's
+  *                    commit point ([[commitMeta]])
+  *   tombstones/      one-column sidecar of removed ids or keys
+  *                    ([[addTombstones]])
+  *   meta.next/, tombstones.next/ — transient copies of a swap in
+  *                    flight ([[swap]])
+  *
+  * META COMMIT: meta is written LAST, after every payload table it
+  * describes has landed, through the `meta.next` swap. Readers see the
+  * complete old index or the complete new one.
+  *
+  * CRASH SWAP: every replacement of a live directory — the meta
+  * commit, a compaction's table swap, the span rebuild's key-set swap
+  * and the span revive's sidecar rewrite — stages the new copy fully,
+  * deletes the live directory and renames the copy into place; the
+  * rename is the commit. The residual window between the delete and
+  * the rename heals on the next read for `meta` and `tombstones`
+  * ([[meta]], [[tombstones]] finish the rename). A compaction clears
+  * the sidecar only after its table swaps, so a crash mid-swap leaves
+  * a mix of compacted and uncompacted tables WITH the sidecar still
+  * filtering them: probes stay correct and re-running converges.
+  *
+  * SIZE CONTRACT: the tombstone sidecar is for TAKEDOWN-SIZED deltas
+  * (opt-outs, DMCA lists, audit removals). Every probe anti-joins it
+  * under a broadcast hint and one task writes each removal batch.
+  * [[addTombstones]] enforces this: the sidecar holds at most the rows
+  * `spark.sql.autoBroadcastJoinThreshold` admits for its one column
+  * (the threshold divided by the column type's default size; none
+  * when automatic broadcast is disabled). A removal past the bound is
+  * refused before anything is written. Bulk removal of a large corpus
+  * fraction filters the source and rebuilds instead — the full rewrite
+  * a mass removal costs anyway — and leaves no sidecar behind.
+  */
+object IndexStore {
+
+  /** One memo entry: an index's meta row under the `meta/` listing
+    * fingerprint it was read at, plus the read schemas pinned for it.
+    *
+    * Pinned-schema contract: a table the entry describes keeps its
+    * schema until the next meta commit (appends add rows, never
+    * columns; a rebuild commits new meta, hence a new entry). So each
+    * table path is schema-inferred at most once per entry, on its
+    * first read, and every later read passes that schema — no
+    * one-task inference job per read. The pinned schema is exactly
+    * what a plain read reports.
+    */
+  final class Meta private[IndexStore] (val fingerprint: String,
+      val row: Row) {
+    private val pinned = new ConcurrentHashMap[String, StructType]
+
+    def schema(s: SparkSession, path: String): StructType =
+      pinned.computeIfAbsent(path, p => s.read.parquet(p).schema)
+  }
+
+  /** One entry per index dir, keyed by its qualified path. */
+  private val memo = new ConcurrentHashMap[String, Meta]
+
+  private def fsOf(s: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    (fs, fs.makeQualified(p))
+  }
+
+  /** Finish a crashed swap: `live` absent, `live.next` present. */
+  private def heal(fs: FileSystem, live: Path): Unit = {
+    val next = live.suffix(".next")
+    if (!fs.exists(live) && fs.exists(next)) fs.rename(next, live)
+  }
+
+  /** The index's meta entry, or None when it has no meta. Memoized on
+    * the name/length/mtime listing of `meta/`, taken after the heal:
+    * a commit changes the listing, so the entry is replaced, while
+    * appends and removals leave it. The entry is stored only if the
+    * listing still matches after the read, so a commit landing
+    * mid-read cannot file an old row under a new fingerprint.
+    */
+  def meta(s: SparkSession, dir: String): Option[Meta] = {
+    val (fs, p) = fsOf(s, s"$dir/meta")
+    heal(fs, p)
+    def fingerprint: String =
+      if (!fs.exists(p)) ""
+      else fs.listStatus(p).sortBy(_.getPath.getName)
+        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+        .mkString("\n")
+    val key = p.getParent.toString
+    val fp = fingerprint
+    val known = memo.get(key)
+    if (fp.isEmpty) { memo.remove(key); None }
+    else if (known != null && known.fingerprint == fp) Some(known)
+    else {
+      val m = new Meta(fp, s.read.parquet(p.toString).head())
+      if (fingerprint == fp) memo.put(key, m)
+      Some(m)
+    }
+  }
+
+  /** Commit `row` (a one-row frame) as the index's meta through the
+    * `meta.next` swap, replacing the memo entry.
+    */
+  def commitMeta(s: SparkSession, dir: String, row: DataFrame): Unit = {
+    row.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.next")
+    swap(s, s"$dir/meta.next", s"$dir/meta")
+    forget(s, dir)
+  }
+
+  /** Drop the index's memo entry (its dir is deleted or rebuilt). */
+  def forget(s: SparkSession, dir: String): Unit =
+    memo.remove(fsOf(s, dir)._2.toString)
+
+  /** Replace directory `live` by the fully written `staged` one:
+    * delete, then rename (see CRASH SWAP above).
+    */
+  def swap(s: SparkSession, staged: String, live: String): Unit = {
+    val (fs, to) = fsOf(s, live)
+    val from = new Path(staged)
+    fs.delete(to, true)
+    fs.mkdirs(to.getParent)
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"swap: rename $from -> $to failed")
+  }
+
+  /** Whether `path` holds any parquet data file. */
+  def hasParquet(s: SparkSession, path: String): Boolean = {
+    val (fs, p) = fsOf(s, path)
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** `path` read under `m`'s pinned schema, or inferred when the index
+    * has no meta entry.
+    */
+  def read(s: SparkSession, m: Option[Meta], path: String): DataFrame =
+    m.fold(s.read.parquet(path))(e => s.read.schema(e.schema(s, path)).parquet(path))
+
+  /** The tombstone sidecar, if any removal has landed since the last
+    * compaction or rebuild, read under `schema` — or, when None, under
+    * the schema pinned in the index's meta entry. Heals a crashed
+    * [[rewriteTombstones]] first.
+    */
+  def tombstones(s: SparkSession, dir: String,
+      schema: Option[StructType]): Option[DataFrame] = {
+    val path = s"$dir/tombstones"
+    val (fs, p) = fsOf(s, path)
+    heal(fs, p)
+    if (!hasParquet(s, path)) None
+    else Some(schema.fold(read(s, meta(s, dir), path))(s.read.schema(_).parquet(path)))
+  }
+
+  /** Tombstone `dead` (one distinct column, named and typed as the
+    * sidecar; `schema` as in [[tombstones]]) — the one sidecar writer.
+    * Idempotent: ids already in the sidecar drop out of the delta,
+    * which is staged to scratch before anything is written under the
+    * index. Enforces the SIZE CONTRACT: a sidecar that would outgrow
+    * the broadcast bound throws IllegalArgumentException naming
+    * `route`, the family's bulk removal, and is left unchanged.
+    */
+  def addTombstones(dead: DataFrame, dir: String, schema: Option[StructType],
+      route: String): Unit = {
+    val s = dead.sparkSession
+    val existing = tombstones(s, dir, schema).map(_.toDF(dead.columns.toSeq: _*))
+    val delta = existing.fold(dead)(t => dead.join(t, dead.columns.toSeq, "left_anti"))
+    val stage = Scratch.dir("graft_tombstones_")
+    try {
+      val staged = Scratch.stage(delta, s"$stage/delta")
+      val rows = existing.fold(0L)(_.count()) + staged.count()
+      val bound = math.max(0L,
+        s.sessionState.conf.autoBroadcastJoinThreshold / dead.schema.defaultSize)
+      if (rows > bound) throw new IllegalArgumentException(
+        s"tombstone sidecar at $dir would hold $rows rows, past the $bound " +
+          "that spark.sql.autoBroadcastJoinThreshold admits for its column — " +
+          s"a removal this large is a bulk removal: $route")
+      staged.coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
+    } finally Scratch.delete(stage)
+  }
+
+  /** Rewrite the sidecar as `kept` through the `tombstones.next` swap. */
+  def rewriteTombstones(s: SparkSession, dir: String, kept: DataFrame): Unit = {
+    kept.coalesce(1).write.mode("overwrite").parquet(s"$dir/tombstones.next")
+    swap(s, s"$dir/tombstones.next", s"$dir/tombstones")
+  }
+
+  /** Delete the sidecar — once a compaction or rebuild has folded its
+    * rows out.
+    */
+  def clearTombstones(s: SparkSession, dir: String): Unit = {
+    val (fs, root) = fsOf(s, dir)
+    Seq("tombstones", "tombstones.next").foreach(t => fs.delete(new Path(root, t), true))
+  }
+
+  /** Refuse a batch that re-uses a tombstoned id: the id-keyed sidecar
+    * would kill the new rows too, so the batch would appear ingested
+    * while staying dead. `ids` carries the sidecar's column.
+    */
+  def refuseTombstoned(ids: DataFrame, tomb: Option[DataFrame],
+      message: => String): Unit =
+    tomb.foreach { t =>
+      if (ids.join(t, t.columns.toSeq, "left_semi").limit(1).count() > 0)
+        throw new IllegalStateException(message)
+    }
+
+  /** Memo keys, for specs. */
+  private[graft] def memoKeys: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    memo.keySet().asScala.toSeq
+  }
+}

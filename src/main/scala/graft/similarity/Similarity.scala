@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
+import graft.engine.IndexStore
 import graft.functions.TextHash
 
 /** Embedding similarity search (SURVEY §2.D9-D11).
@@ -605,8 +606,8 @@ object Similarity {
     *              and the LIVE generation; [[ivfProbe]] validates
     *              caller expectations against this row, so an index
     *              built under one configuration cannot silently
-    *              serve another. Meta is written LAST via an
-    *              atomic-rename swap ([[commitIvfMeta]]): readers see
+    *              serve another. Meta is written LAST
+    *              ([[graft.engine.IndexStore.commitMeta]]): readers see
     *              either the complete old index or the complete new
     *              one, never a half-built generation, and a crash
     *              mid-build leaves the live index intact (pre-r14
@@ -630,7 +631,7 @@ object Similarity {
     // counts as gen -1, so its successor is gen-0). The live data
     // stays fully probe-able until the meta commit swings readers to
     // the new generation.
-    val prevGen = ivfMetaFullIfExists(s, indexDir).map(_._5)
+    val prevGen = IndexStore.meta(s, indexDir).map(ivfRow(_)._5)
     val newGen = prevGen.map(g => math.max(g, -1) + 1).getOrElse(0)
     buildIvfGeneration(corpus.select(col(id).as("vid"), col(vec).as("v")),
       indexDir, newGen, kCentroids, quantizer, lloydIters)
@@ -644,7 +645,8 @@ object Similarity {
     * zero-norm vectors are excluded (the ivfTopK NaN guard). Meta is
     * written LAST: a crash anywhere before the commit leaves the
     * prior generation live and intact (plus an orphaned gen dir the
-    * next build overwrites or sweeps).
+    * next build overwrites or sweeps). The commit clears the
+    * tombstone sidecar.
     */
   private def buildIvfGeneration(vidV: DataFrame, indexDir: String,
       gen: Int, kCentroids: Int, quantizer: String,
@@ -685,8 +687,15 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cid")
         .parquet(s"$dataDir/lists")
       cents.unpersist()
-      commitIvfMeta(s, indexDir, quantizer, lloydIters, kc,
-        nBuild = nValid, gen = gen)
+      import s.implicits._
+      IndexStore.commitMeta(s, indexDir,
+        Seq((quantizer, lloydIters, kc, nValid, gen)).toDF(
+          "quantizer", "lloyd_iters", "k_centroids", "n_build", "gen"))
+      // A new generation holds no removed vids (a rebuild reads the
+      // tombstone-filtered lists), so the sidecar is cleared — only
+      // AFTER the commit: a crash mid-build leaves the old generation
+      // live with its sidecar intact.
+      IndexStore.clearTombstones(s, indexDir)
     } finally v.unpersist()
   }
 
@@ -718,14 +727,6 @@ object Similarity {
     val kc = if (kCentroids > 0) kCentroids else sqrtKc(vidV.count())
     val newGen = math.max(gen, -1) + 1
     buildIvfGeneration(vidV, indexDir, newGen, kc, quant, iters)
-    // Clear tombstones only AFTER the meta commit: a crash mid-build
-    // leaves the old generation live with its sidecar intact. A crash
-    // between the commit and this delete leaves stale tombstones for
-    // vids the new generation no longer holds — the anti-join then
-    // filters nothing (harmless) and the next rebuild clears them.
-    val tomb = new org.apache.hadoop.fs.Path(s"$indexDir/tombstones")
-    val fs = tomb.getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(tomb, true)
     sweepIvfGenerations(s, indexDir, keepGen = newGen,
       sweepLegacyFlat = true)
   }
@@ -741,28 +742,6 @@ object Similarity {
 
   private def ivfGenDir(indexDir: String, gen: Int): String =
     if (gen < 0) indexDir else s"$indexDir/gen-$gen"
-
-  /** Commit a generation by swapping `meta` — write `meta.next`
-    * fully, delete `meta`, rename `meta.next` → `meta`. The rename is
-    * the atomic commit; the one residual window (crash between the
-    * delete and the rename) is self-healing: [[ivfMetaDf]] completes
-    * the rename on the next read.
-    */
-  private def commitIvfMeta(s: org.apache.spark.sql.SparkSession,
-      indexDir: String, quantizer: String, lloydIters: Int,
-      kCentroids: Int, nBuild: Long, gen: Int): Unit = {
-    import s.implicits._
-    Seq((quantizer, lloydIters, kCentroids, nBuild, gen))
-      .toDF("quantizer", "lloyd_iters", "k_centroids", "n_build", "gen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta.next")
-    val meta = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val next = new org.apache.hadoop.fs.Path(s"$indexDir/meta.next")
-    val fs = meta.getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(meta, true)
-    if (!fs.rename(next, meta))
-      throw new java.io.IOException(
-        s"commitIvfMeta: rename $next -> $meta failed")
-  }
 
   /** Drop every generation dir except `keepGen` (and, when asked,
     * the legacy flat `centroids`/`lists` dirs) — run AFTER the meta
@@ -783,73 +762,26 @@ object Similarity {
     }
   }
 
-  /** Read the meta frame, completing a crashed [[commitIvfMeta]]
-    * swap first (meta absent, meta.next present → finish the
-    * rename).
-    */
-  private def ivfMetaDf(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val meta = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val next = new org.apache.hadoop.fs.Path(s"$indexDir/meta.next")
-    val fs = meta.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(meta) && fs.exists(next)) fs.rename(next, meta)
-    s.read.parquet(s"$indexDir/meta")
-  }
-
-  /** Full meta row with legacy defaults: `(quantizer, lloydIters,
-    * kCentroids, nBuild, gen)` — pre-r14 indexes carry neither
-    * `n_build` (→ -1: the drift check cannot run) nor `gen` (→ -1:
-    * the flat `centroids`/`lists` layout).
-    *
-    * Memoized per (session, path, meta-file fingerprint) — r17: one
-    * probe resolves meta THREE times (kc for nprobe, centroids dir,
-    * lists dir) and an ingest epoch five+, each a ~0.1 s one-row
-    * Spark job; the fingerprint (file name/length/mtime listing of
-    * `meta/`) invalidates on every commit swap, so an append (meta
-    * untouched) hits and a rebuild (meta swapped) misses — metadata
-    * caching with file-level invalidation, the same contract as
-    * Spark's own file-index cache, never a result cache. The same
-    * entry pins the live generation's read schemas ([[IvfMeta]]).
-    */
-  private val metaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), IvfMeta]
-
-  /** One [[metaMemo]] entry: the meta row `(quantizer, lloydIters,
-    * kCentroids, nBuild, gen)` plus the pinned read schemas of the
-    * generation it names.
-    *
-    * Pinned-schema contract: a generation's `centroids` and `lists`
-    * never change after its meta commit (appends land in `tail/`; a
-    * rebuild commits a new generation, hence a new meta fingerprint
-    * and a new entry). So each is schema-inferred at most once per
-    * entry, on its first read, and every later read passes that
-    * schema — no one-task inference job per read, which an ingest
-    * epoch otherwise paid six times. The inferred schema is exactly
-    * what a plain read reports, `cid`'s partition-column type and the
-    * vector element type included. The `tail` schema is derived, not
-    * inferred: [[appendIvfIndex]] writes tail files as the base
-    * lists' columns with `cid` as long. Pre-r14 flat indexes (gen -1)
-    * keep plain inference on every read: pre-r15 appends added cid
+  /** The live generation, resolved from the index's meta entry
+    * ([[graft.engine.IndexStore.meta]]): the meta row `(quantizer,
+    * lloydIters, kCentroids, nBuild, gen)` plus the generation's read
+    * schemas, pinned in that entry. A generation's `centroids` and
+    * `lists` never change after its meta commit (appends land in
+    * `tail/`), so each is inferred once per entry. The `tail` schema is
+    * derived, not inferred: [[appendIvfIndex]] writes tail files as the
+    * base lists' columns with `cid` as long. Pre-r14 flat indexes (gen
+    * -1) keep plain inference on every read: pre-r15 appends added cid
     * partitions to their `lists` in place.
     */
-  private[graft] final class IvfMeta(
-      val row: (String, Int, Int, Long, Int), val dataDir: String) {
-    private val inferred =
-      new java.util.concurrent.ConcurrentHashMap[String, StructType]
+  private[graft] final class IvfMeta(val row: (String, Int, Int, Long, Int),
+      val dataDir: String, entry: IndexStore.Meta) {
 
     /** The read schema of `table` (`centroids`, `lists` or `tail`). */
     def schema(s: org.apache.spark.sql.SparkSession,
         table: String): StructType = table match {
       case "tail" => StructType(schema(s, "lists").map(f =>
         if (f.name == "cid") f.copy(dataType = LongType) else f))
-      case _ =>
-        val known = inferred.get(table)
-        if (known != null) known
-        else {
-          val st = s.read.parquet(s"$dataDir/$table").schema
-          inferred.put(table, st)
-          st
-        }
+      case _ => entry.schema(s, s"$dataDir/$table")
     }
 
     def read(s: org.apache.spark.sql.SparkSession,
@@ -858,14 +790,17 @@ object Similarity {
       else s.read.schema(schema(s, table)).parquet(s"$dataDir/$table")
   }
 
-  private def metaFingerprint(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) ""
-    else fs.listStatus(p).sortBy(_.getPath.getName)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .mkString("\n")
+  /** Full meta row with legacy defaults: pre-r14 indexes carry neither
+    * `n_build` (→ -1: the drift check cannot run) nor `gen` (→ -1: the
+    * flat `centroids`/`lists` layout).
+    */
+  private def ivfRow(m: IndexStore.Meta): (String, Int, Int, Long, Int) = {
+    val r = m.row
+    val cols = r.schema.fieldNames.toSet
+    (r.getAs[String]("quantizer"), r.getAs[Int]("lloyd_iters"),
+      r.getAs[Int]("k_centroids"),
+      if (cols("n_build")) r.getAs[Long]("n_build") else -1L,
+      if (cols("gen")) r.getAs[Int]("gen") else -1)
   }
 
   private[graft] def ivfMetaFull(s: org.apache.spark.sql.SparkSession,
@@ -874,32 +809,10 @@ object Similarity {
 
   private[graft] def ivfMeta(s: org.apache.spark.sql.SparkSession,
       indexDir: String): IvfMeta = {
-    val key = (System.identityHashCode(s).toString,
-      indexDir, metaFingerprint(s, indexDir))
-    val memoized = metaMemo.get(key)
-    if (memoized != null) return memoized
-    val df = ivfMetaDf(s, indexDir)
-    val cols = df.columns.toSet
-    val r = df.select(col("quantizer"), col("lloyd_iters"),
-      col("k_centroids"),
-      (if (cols("n_build")) col("n_build") else lit(-1L)).as("n_build"),
-      (if (cols("gen")) col("gen") else lit(-1)).as("gen")).head()
-    val entry = new IvfMeta((r.getString(0), r.getInt(1), r.getInt(2),
-      r.getLong(3), r.getInt(4)), ivfGenDir(indexDir, r.getInt(4)))
-    // Re-fingerprint AFTER the read: ivfMetaDf may complete a crashed
-    // commit swap (meta.next → meta), which changes the listing the
-    // key must reflect.
-    metaMemo.put((key._1, indexDir, metaFingerprint(s, indexDir)), entry)
-    entry
-  }
-
-  private def ivfMetaFullIfExists(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[(String, Int, Int, Long, Int)] = {
-    val meta = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val next = new org.apache.hadoop.fs.Path(s"$indexDir/meta.next")
-    val fs = meta.getFileSystem(s.sessionState.newHadoopConf())
-    if (fs.exists(meta) || fs.exists(next)) Some(ivfMetaFull(s, indexDir))
-    else None
+    val m = IndexStore.meta(s, indexDir).getOrElse(throw new IllegalStateException(
+      s"no IVF index at $indexDir (no meta) — build it with buildIvfIndex"))
+    val row = ivfRow(m)
+    new IvfMeta(row, ivfGenDir(indexDir, row._5), m)
   }
 
   /** The live generation's centroid table (kCentroids rows), read
@@ -936,38 +849,17 @@ object Similarity {
     // takedown-sized by contract (see removeFromIvfIndex), and
     // without the hint a size-estimate miss would re-shuffle the
     // corpus-sized lists by vid just to drop a handful of rows.
-    ivfTombstones(s, indexDir) match {
-      case Some(t) => raw.join(broadcast(t), Seq("vid"), "left_anti")
-      case None => raw
-    }
+    IndexStore.tombstones(s, indexDir, TombstoneSchema)
+      .fold(raw)(t => raw.join(broadcast(t), Seq("vid"), "left_anti"))
   }
 
-  /** The tombstone sidecar `(vid)` if any removal has landed since
-    * the last rebuild. Lives at the index ROOT (not inside a
+  /** The sidecar's one column: [[removeFromIvfIndex]] writes vids
+    * cast to long. The sidecar lives at the index ROOT (not inside a
     * generation): removal survives an append and applies to whatever
     * generation is live; the rebuild that physically drops the rows
     * clears it.
     */
-  private def ivfTombstones(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] =
-    if (hasParquet(s, s"$indexDir/tombstones"))
-      Some(s.read.schema(TombstoneSchema)
-        .parquet(s"$indexDir/tombstones"))
-    else None
-
-  /** The sidecar's one column: [[removeFromIvfIndex]] writes vids
-    * cast to long.
-    */
-  private val TombstoneSchema = StructType.fromDDL("vid BIGINT")
-
-  /** Whether `path` holds any parquet data file. */
-  private def hasParquet(s: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-  }
+  private val TombstoneSchema = Some(StructType.fromDDL("vid BIGINT"))
 
   /** DELETE vectors from a persisted IVF index — the takedown/opt-out
     * action the ingest-loop family needs (corpora delete documents;
@@ -992,32 +884,15 @@ object Similarity {
     * a rebuild has folded the tombstone out: its dead rows are still
     * physical, so a same-vid append would resurrect BOTH copies.
     *
-    * SIZE CONTRACT (r17, the r16 verdict's mass-removal note): the
-    * sidecar is for TAKEDOWN-SIZED deltas — opt-outs, DMCA lists,
-    * audit removals — a set that broadcasts (every [[ivfLists]] read
-    * anti-joins it with a broadcast hint) and that one task can
-    * write (`coalesce(1)` below keeps the sidecar one file per
-    * removal batch). Removing a large fraction of the corpus through
-    * this path would serialize the delta write and grow every
-    * probe's broadcast; the supported bulk-removal route is
-    * filter-and-[[rebuildIvfIndex]] (one generation build over the
-    * filtered lists — the same cost a mass removal fundamentally
-    * is), after which no sidecar exists at all.
+    * Takedown-sized removals only: past the broadcast bound the
+    * removal is refused, and bulk removal builds fresh over the
+    * filtered corpus ([[graft.engine.IndexStore]] SIZE CONTRACT).
     */
   def removeFromIvfIndex(ids: DataFrame, id: String,
-      indexDir: String): Unit = {
-    val s = ids.sparkSession
-    val dead = ids.select(col(id).cast("long").as("vid")).distinct()
-    val delta = ivfTombstones(s, indexDir) match {
-      case Some(t) => dead.join(t, Seq("vid"), "left_anti")
-      case None => dead
-    }
-    val stage = graft.engine.Scratch.dir("graft_ivf_remove_")
-    try {
-      graft.engine.Scratch.stage(delta, s"$stage/delta").coalesce(1)
-        .write.mode("append").parquet(s"$indexDir/tombstones")
-    } finally graft.engine.Scratch.delete(stage)
-  }
+      indexDir: String): Unit =
+    IndexStore.addTombstones(
+      ids.select(col(id).cast("long").as("vid")).distinct(), indexDir,
+      TombstoneSchema, "filter the corpus and run buildIvfIndex over it")
 
   /** Live row count of the index — the drift-check seed
     * ([[graft.streaming.StreamingOps]]). Fast path (r17): with no
@@ -1032,16 +907,16 @@ object Similarity {
       indexDir: String): Long = {
     val m = ivfMeta(s, indexDir)
     val nBuild = m.row._4
-    if (nBuild < 0L || ivfTombstones(s, indexDir).nonEmpty)
+    if (nBuild < 0L || IndexStore.tombstones(s, indexDir, TombstoneSchema).nonEmpty)
       return ivfLists(s, indexDir).count()
-    if (!hasParquet(s, s"${m.dataDir}/tail")) nBuild
+    if (!IndexStore.hasParquet(s, s"${m.dataDir}/tail")) nBuild
     else nBuild + m.read(s, "tail").count()
   }
 
   private def listsAndTail(s: org.apache.spark.sql.SparkSession,
       m: IvfMeta): DataFrame = {
     val base = m.read(s, "lists")
-    if (!hasParquet(s, s"${m.dataDir}/tail")) base
+    if (!IndexStore.hasParquet(s, s"${m.dataDir}/tail")) base
     else base.unionByName(castTo(m.read(s, "tail"), base.schema))
   }
 
@@ -1099,18 +974,12 @@ object Similarity {
     val m = ivfMeta(s, indexDir)
     // Refuse re-adding a tombstoned vid LOUDLY: its dead rows are
     // still physical, so the duplicate-guard anti-join below would
-    // silently drop the new copy (appearing ingested while staying
-    // dead), and skipping the guard would resurrect both copies.
-    // Rebuild first (physical removal + sidecar clear), then append.
-    // Cost: one small-side semi-join count, only when a sidecar
-    // exists at all.
-    ivfTombstones(s, indexDir).foreach { t =>
-      val clash = newVecs.select(col(id).cast("long").as("vid"))
-        .join(t, Seq("vid"), "left_semi").limit(1).count()
-      if (clash > 0) throw new IllegalStateException(
-        s"appendIvfIndex: batch re-adds vids tombstoned at $indexDir — " +
-          "run rebuildIvfIndex first (folds removals out), then append")
-    }
+    // silently drop the new copy, and skipping the guard would
+    // resurrect both copies. Rebuild first, then append.
+    IndexStore.refuseTombstoned(newVecs.select(col(id).cast("long").as("vid")),
+      IndexStore.tombstones(s, indexDir, TombstoneSchema),
+      s"appendIvfIndex: batch re-adds vids tombstoned at $indexDir — " +
+        "run rebuildIvfIndex first (folds removals out), then append")
     val cents = m.read(s, "centroids")
     val fresh = newVecs.select(col(id).as("vid"), col(vec).as("v"))
       .withColumn("nrm", norm2(col("v")))
