@@ -24,21 +24,34 @@ package graft.engine
   * drained, and the exception is rethrown with the caller's
   * interrupt status restored — so a caller's `finally
   * Scratch.delete(stage)` cannot race a task thread still writing
-  * there. (The interrupt does not cancel a Spark job such a thread
-  * already submitted; a caller that needs that cancels its job
-  * group.)
+  * there. Each task thread tags its Spark jobs with a tag unique to
+  * the call; on interrupt those jobs are cancelled too, and `run`
+  * returns only once the status tracker shows none of them running
+  * (for at most 30 s), so an abandoned append stops holding
+  * executors.
   */
 object Parallel {
   import java.util.concurrent.{Callable, CancellationException,
     ExecutionException, ExecutorService, Executors, TimeUnit}
+  import org.apache.spark.SparkContext
+  import org.apache.spark.sql.SparkSession
+
+  /** Longest wait for cancelled jobs to leave the status tracker. */
+  private val CancelWaitMs = 30000L
 
   def run(tasks: (() => Unit)*): Unit = {
     if (tasks.lengthCompare(1) <= 0) { tasks.foreach(_.apply()); return }
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-parallel-${java.util.UUID.randomUUID()}"
     val pool = Executors.newFixedThreadPool(tasks.length)
     var interrupted = false
+    var cancelled = false
     try {
       val futs = tasks.map { t =>
-        pool.submit(new Callable[Unit] { def call(): Unit = t() })
+        pool.submit(new Callable[Unit] {
+          def call(): Unit = { sc.foreach(_.addJobTag(tag)); t() }
+        })
       }
       var firstFailure: Throwable = null
       try futs.foreach { f =>
@@ -51,6 +64,8 @@ object Parallel {
       } catch {
         case e @ (_: InterruptedException | _: CancellationException) =>
           interrupted = e.isInstanceOf[InterruptedException]
+          cancelled = true
+          sc.foreach(_.cancelJobsWithTag(tag, "Parallel.run interrupted"))
           futs.foreach(_.cancel(true))
           throw e
       }
@@ -58,8 +73,26 @@ object Parallel {
     } finally {
       pool.shutdown()
       interrupted = awaitAll(pool) || interrupted
+      if (cancelled) sc.foreach(c => interrupted = awaitCancelled(c, tag) || interrupted)
       if (interrupted) Thread.currentThread().interrupt()
     }
+  }
+
+  /** Cancel again whatever a task thread submitted while it was being
+    * interrupted, then wait until the status tracker shows no running
+    * job with `tag`; returns whether an interrupt arrived meanwhile.
+    */
+  private def awaitCancelled(sc: SparkContext, tag: String): Boolean = {
+    sc.cancelJobsWithTag(tag, "Parallel.run interrupted")
+    val deadline = System.currentTimeMillis() + CancelWaitMs
+    def running = {
+      val active = sc.statusTracker.getActiveJobIds().toSet
+      sc.statusTracker.getJobIdsForTag(tag).exists(active)
+    }
+    try {
+      while (running && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      false
+    } catch { case _: InterruptedException => true }
   }
 
   /** Block until every pool thread has exited, through interrupts;

@@ -16,8 +16,6 @@ case class PipelineConfig(
     jdbcNumPartitions: Int = 8,
     writeMode: String = "overwrite",
     maxRecordsPerFile: Int = 100000,
-    useAqe: Boolean = true,
-    enableSkewHandling: Boolean = true,
     integrityMin: Double = 0.0,
     integrityMax: Double = 1e9)
 
@@ -49,7 +47,6 @@ object PipelineConfig {
     def str(k: String, d: String) = kv.getOrElse(k, d)
     def int(k: String, d: Int) = kv.get(k).map(_.toInt).getOrElse(d)
     def dbl(k: String, d: Double) = kv.get(k).map(_.toDouble).getOrElse(d)
-    def bool(k: String, d: Boolean) = kv.get(k).map(_.toBoolean).getOrElse(d)
     val base = PipelineConfig()
     PipelineConfig(
       inputDir = str("inputDir", base.inputDir),
@@ -62,8 +59,6 @@ object PipelineConfig {
       jdbcNumPartitions = int("jdbcNumPartitions", base.jdbcNumPartitions),
       writeMode = str("writeMode", base.writeMode),
       maxRecordsPerFile = int("maxRecordsPerFile", base.maxRecordsPerFile),
-      useAqe = bool("useAqe", base.useAqe),
-      enableSkewHandling = bool("enableSkewHandling", base.enableSkewHandling),
       integrityMin = dbl("integrityMin", base.integrityMin),
       integrityMax = dbl("integrityMax", base.integrityMax))
   }

@@ -188,23 +188,9 @@ object StreamingOps {
     * the probe join is the bucketed span table (exchange-free), and
     * the append touches only the batch's novel keys.
     *
-    * Exactly-once posture on retries — INCLUDING the
-    * crash-after-append window (r14): a re-delivered micro-batch
-    * re-gates against an index the first attempt may have already
-    * mutated, so its admitted docs would now score `novel_pm = 0`
-    * and the per-epoch overwrite would drop them from the sink
-    * forever (their spans stay ingested, so every future copy is
-    * rejected too — silent loss). The epoch function is therefore
-    * RETRY-AWARE: if `outDir/epoch=<n>` already holds a committed
-    * result, its doc ids are honored as this epoch's prior
-    * admissions and unioned into the admit set, so replay converges
-    * to the first attempt's output. The sink write lands BEFORE the
-    * index append: a crash during the write (no `_SUCCESS`) means
-    * the index was not yet mutated and a plain re-gate reproduces
-    * the same set; a crash during/after the append finds the
-    * committed output and honors it. `appendSpanIndex` itself
-    * converges on partial appends, so no ordering of failures
-    * duplicates or drops a row (pinned in StreamingSpec, including
+    * Retries follow [[ingestEpoch]]'s protocol (a committed epoch
+    * replays verbatim; `appendSpanIndex` converges on partial
+    * appends — pinned in StreamingSpec and Round14OpsSpec, including
     * a literal kill-restart replay). Admission is vs the INGESTED
     * corpus only (c27's rule): two copies inside one micro-batch
     * both admit — run
@@ -220,46 +206,23 @@ object StreamingOps {
       minNovelPm: Long = 500L,
       trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val n = spanIngestEpoch(batch, epochId, id, text, indexDir,
-          outDir, minNovelPm)
-        logger.info(s"spanIngestLoop epoch $epochId: admitted $n")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    startLoop(stream, checkpoint, trigger)(
+      spanIngestEpoch(_, _, id, text, indexDir, outDir, minNovelPm))
 
   /** One epoch of [[spanIngestLoop]] — gate, sink, append. Factored
     * out so the crash-retry path is directly testable: calling it
     * twice with the same `epochId` is exactly what a checkpoint
-    * replay does, and the second call must converge to the first's
-    * admitted set. Returns the admitted-row count.
+    * replay does. Returns the admitted-row count.
     */
   private[graft] def spanIngestEpoch(batch: DataFrame, epochId: Long,
       id: String, text: String, indexDir: String, outDir: String,
-      minNovelPm: Long): Long = {
-    val s = batch.sparkSession
-    val epochPath = s"$outDir/epoch=$epochId"
-    val retryStage = priorEpochStage(s, epochPath, id)
-    try {
-      val novel = graft.dedup.Dedup.spanNovelty(batch, id, text, indexDir)
-        .filter(col("novel_pm") >= minNovelPm).select(col(id))
-      val admitIds = retryStage match {
-        case Some(st) =>
-          novel.unionByName(s.read.parquet(s"$st/ids")).distinct()
-        case None => novel
-      }
-      val admitted = batch.join(admitIds, Seq(id), "left_semi").persist()
-      try {
-        val n = admitted.count()
-        admitted.write.mode("overwrite").parquet(epochPath)
-        if (n > 0)
-          graft.dedup.Dedup.appendSpanIndex(admitted, id, text, indexDir)
-        n
-      } finally { admitted.unpersist(); () }
-    } finally retryStage.foreach(graft.engine.Scratch.delete)
-  }
+      minNovelPm: Long): Long =
+    ingestEpoch("spanIngestLoop", batch, epochId, id, outDir)(
+      batch.join(graft.dedup.Dedup.spanNovelty(batch, id, text, indexDir)
+        .filter(col("novel_pm") >= minNovelPm).select(col(id)),
+        Seq(id), "left_semi")) { (admitted, _) =>
+      graft.dedup.Dedup.appendSpanIndex(admitted, id, text, indexDir)
+    }
 
   /** STREAMING ingest loop for the EMBEDDING gate — the IVF twin of
     * [[spanIngestLoop]], completing the ingest-loop family: each
@@ -291,18 +254,13 @@ object StreamingOps {
     * the check; a pre-r14 index without `n_build` in meta logs once
     * and skips it.
     *
-    * Exactly-once posture on retries is [[spanIngestLoop]]'s: the
-    * sink write lands before the append; a committed
-    * `outDir/epoch=<n>` is honored as that epoch's prior admissions
-    * on replay (else the replay would re-gate against an index the
-    * first attempt already mutated and drop its own admissions);
-    * `appendIvfIndex` anti-joins already-indexed vids, so partial
-    * appends converge. Admission is vs the INGESTED corpus only:
-    * two near-dups inside one micro-batch both admit (run a batch
-    * near-dup pass downstream when intra-batch dedup is wanted).
-    * Rows with a zero-norm vector are admitted (no candidates) but
-    * never indexed (the build-time NaN guard); `id` must be unique
-    * within a batch.
+    * Retries follow [[ingestEpoch]]'s protocol; `appendIvfIndex`
+    * anti-joins already-indexed vids, so partial appends converge.
+    * Admission is vs the INGESTED corpus only: two near-dups inside
+    * one micro-batch both admit (run a batch near-dup pass downstream
+    * when intra-batch dedup is wanted). Rows with a zero-norm vector
+    * are admitted (no candidates) but never indexed (the build-time
+    * NaN guard); `id` must be unique within a batch.
     *
     * Output: admitted source rows under `outDir/epoch=<n>/`. Returns
     * the started query; callers drive it.
@@ -313,56 +271,27 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val ingested = new java.util.concurrent.atomic.AtomicLong(-1L)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val n = ivfIngestEpoch(batch, epochId, id, vec, indexDir,
-          outDir, maxCos, rebuildFactor, ingested)
-        logger.info(s"ivfIngestLoop epoch $epochId: admitted $n")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    startLoop(stream, checkpoint, trigger)(ivfIngestEpoch(_, _, id, vec,
+      indexDir, outDir, maxCos, rebuildFactor, ingested))
   }
 
   /** One epoch of [[ivfIngestLoop]] — probe, gate, sink, append,
     * drift-check. Factored out so the crash-retry path is directly
-    * testable (same contract as [[spanIngestEpoch]]: re-invoking with
-    * the same `epochId` converges to the first call's admitted set).
-    * Returns the admitted-row count.
+    * testable (same contract as [[spanIngestEpoch]]). Returns the
+    * admitted-row count.
     */
   private[graft] def ivfIngestEpoch(batch: DataFrame, epochId: Long,
       id: String, vec: String, indexDir: String, outDir: String,
       maxCos: Double, rebuildFactor: Double,
-      ingested: java.util.concurrent.atomic.AtomicLong): Long = {
-    import graft.similarity.Similarity
-    val s = batch.sparkSession
-    val epochPath = s"$outDir/epoch=$epochId"
-    val retryStage = priorEpochStage(s, epochPath, id)
-    try {
-      val kc = Similarity.ivfIndexMeta(s, indexDir)._3
-      val dup = Similarity.litIndexCandidates(s, batch, indexDir, id,
-          vec, nprobe = Similarity.adaptiveNprobe(kc))
-        .groupBy(col(id)).agg(max(col("cos")).as("__mc"))
-        .filter(col("__mc") >= maxCos).select(col(id))
-      val novel = batch.select(col(id)).join(dup, Seq(id), "left_anti")
-      val admitIds = retryStage match {
-        case Some(st) =>
-          novel.unionByName(s.read.parquet(s"$st/ids")).distinct()
-        case None => novel
-      }
-      val admitted = batch.join(admitIds, Seq(id), "left_semi").persist()
-      try {
-        val n = admitted.count()
-        admitted.write.mode("overwrite").parquet(epochPath)
-        if (n > 0) {
-          Similarity.appendIvfIndex(admitted, id, vec, indexDir)
-          if (rebuildFactor > 0)
-            maybeRebuildIvf(s, indexDir, rebuildFactor, ingested, n)
-        }
-        n
-      } finally { admitted.unpersist(); () }
-    } finally retryStage.foreach(graft.engine.Scratch.delete)
-  }
+      ingested: java.util.concurrent.atomic.AtomicLong): Long =
+    ingestEpoch("ivfIngestLoop", batch, epochId, id, outDir)(
+      batch.join(ivfMaxCos(batch, indexDir, id, vec)
+        .filter(col("max_cos") >= maxCos).select(col(id)),
+        Seq(id), "left_anti")) { (admitted, n) =>
+      graft.similarity.Similarity.appendIvfIndex(admitted, id, vec, indexDir)
+      if (rebuildFactor > 0)
+        maybeRebuildIvf(batch.sparkSession, indexDir, rebuildFactor, ingested, n)
+    }
 
   /** [[ivfIngestLoop]]'s drift check: track the ingested count
     * incrementally (seeded from one lists count at the first epoch —
@@ -431,14 +360,8 @@ object StreamingOps {
     *      micro-batches gate against them (the [[spanIngestLoop]] /
     *      [[ivfIngestLoop]] feedback, composed).
     *
-    * Retry posture: the committed fate output is the single source
-    * of truth. A re-delivered epoch that finds `outDir/epoch=<n>`
-    * committed SKIPS re-gating (the first attempt may already have
-    * mutated the indexes — re-gating would flip its own admissions
-    * to `near_dup`/`span_dup` and lose them) and only re-runs the
-    * convergent appends; a crash during the fate write leaves no
-    * commit marker and the indexes untouched, so a plain re-gate
-    * reproduces the same fates. Admission is vs the INGESTED corpus
+    * Retries follow [[ingestEpoch]]'s protocol, with the fate frame
+    * as the committed output. Admission is vs the INGESTED corpus
     * (intra-batch copies both admit); `id` must be unique per batch.
     * The IVF drift contract is honored mid-stream exactly as in
     * [[ivfIngestLoop]].
@@ -449,15 +372,8 @@ object StreamingOps {
       trigger: Trigger = Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val ingested = new java.util.concurrent.atomic.AtomicLong(-1L)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val n = ingestGateEpoch(batch, epochId, id, text, spanIndexDir,
-          ivfIndexDir, cfg, outDir, ingested)
-        logger.info(s"ingestGateLoop epoch $epochId: admitted $n")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    startLoop(stream, checkpoint, trigger)(ingestGateEpoch(_, _, id, text,
+      spanIndexDir, ivfIndexDir, cfg, outDir, ingested))
   }
 
   /** One epoch of [[ingestGateLoop]] — gate (unless already
@@ -469,32 +385,22 @@ object StreamingOps {
       id: String, text: String, spanIndexDir: String,
       ivfIndexDir: String, cfg: IngestGateConfig, outDir: String,
       ingested: java.util.concurrent.atomic.AtomicLong): Long = {
-    import graft.similarity.Similarity
-    val s = batch.sparkSession
-    val epochPath = s"$outDir/epoch=$epochId"
-    val marker = new org.apache.hadoop.fs.Path(s"$epochPath/_SUCCESS")
-    val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-    // The fates' schema when this call writes them; a replayed
-    // committed epoch reads back whatever its first attempt wrote.
-    val written: Option[StructType] = if (fs.exists(marker)) None else {
+    def embed(docs: DataFrame) = graft.functions.HashEmbed
+      .embed(docs, id, text, cfg.embedDim).select(col(id), col("emb").as("__ev"))
+    ingestEpoch("ingestGateLoop", batch, epochId, id, outDir,
+        col("fate") === "admitted") {
       val scored = graft.functions.HashedLinear.scorePm(
         batch, cfg.weights, cfg.weightDim, id, text, cfg.thresholdPm)
       val pass1 = batch.join(
         scored.filter(col("keep")).select(col(id)), Seq(id), "left_semi")
-      val kc = Similarity.ivfIndexMeta(s, ivfIndexDir)._3
-      val emb1 = graft.functions.HashEmbed
-        .embed(pass1, id, text, cfg.embedDim)
-        .select(col(id), col("emb").as("__ev"))
-      val cos = Similarity.litIndexCandidates(s, emb1, ivfIndexDir, id,
-          "__ev", nprobe = Similarity.adaptiveNprobe(kc))
-        .groupBy(col(id)).agg(max(col("cos")).as("max_cos"))
+      val cos = ivfMaxCos(embed(pass1), ivfIndexDir, id, "__ev")
       val pass2 = pass1.join(
         cos.filter(col("max_cos") >= cfg.maxCos).select(col(id)),
         Seq(id), "left_anti")
       val nov = graft.dedup.Dedup
         .spanNovelty(pass2, id, text, spanIndexDir)
         .select(col(id), col("novel_pm"))
-      val fates = scored.select(col(id), col("n_tokens"), col("score_pm"))
+      scored.select(col(id), col("n_tokens"), col("score_pm"))
         .join(cos, Seq(id), "left")
         .join(nov, Seq(id), "left")
         .select(col(id),
@@ -504,61 +410,99 @@ object StreamingOps {
             .otherwise("admitted").as("fate"),
           col("n_tokens"), col("score_pm"), col("max_cos"),
           col("novel_pm"))
-      fates.write.mode("overwrite").parquet(epochPath)
-      Some(fates.schema)
+    } { (admitted, n) =>
+      // The two appends touch DISJOINT indexes and both read the
+      // (persisted, just-materialized) admitted frame — overlap them
+      // so the epoch pays one append-latency, not two (guide §2.6;
+      // each append is a chain of small staged jobs whose cost is
+      // fixed overhead, not data).
+      graft.engine.Parallel.run(
+        () => graft.dedup.Dedup.appendSpanIndex(admitted, id, text,
+          spanIndexDir),
+        () => graft.similarity.Similarity.appendIvfIndex(
+          embed(admitted), id, "__ev", ivfIndexDir))
+      if (cfg.rebuildFactor > 0)
+        maybeRebuildIvf(batch.sparkSession, ivfIndexDir, cfg.rebuildFactor,
+          ingested, n)
     }
-    // From here the COMMITTED fates are the single source of truth:
-    // the append plans read them from the epoch output and never
-    // re-probe the (possibly already-mutated) indexes.
-    val committed =
-      written.fold(s.read)(st => s.read.schema(st)).parquet(epochPath)
+  }
+
+  /** The one epoch protocol of the three ingest loops — the
+    * gate → commit → append feedback step of Continuously Adaptive
+    * Similarity Search, made retry-safe. `judge` is the loop's
+    * verdict over `batch` (admitted source rows, or the gate's fate
+    * rows); `admittedOnly` picks the admitted rows out of it; `append`
+    * feeds the admitted source rows (persisted) and their count to
+    * the loop's indexes.
+    *
+    * Retry posture: the COMMITTED epoch output is the single source
+    * of truth. The output lands under `outDir/epoch=<n>` BEFORE any
+    * index is touched, and the append reads the admitted ids back
+    * from it, never from a re-probe. A re-delivered epoch whose
+    * `_SUCCESS` marker exists therefore SKIPS gating — the first
+    * attempt may already have mutated the indexes (its own
+    * admissions would now score as duplicates), and a takedown since
+    * may have changed them the other way (its rejections would now
+    * pass) — and re-runs only the appends, which converge on partial
+    * and repeated application. A crash during the output write
+    * leaves no marker and the indexes untouched, so a plain re-gate
+    * reproduces the same verdict. No ordering of failures duplicates
+    * or drops a row, and a replay leaves the sink exactly as the
+    * first attempt committed it.
+    *
+    * The read-back of a just-written output uses the schema it was
+    * written with (no inference job); a replay reads it plainly.
+    * This is also the one per-epoch log site of the loops.
+    */
+  private def ingestEpoch(loop: String, batch: DataFrame, epochId: Long,
+      id: String, outDir: String,
+      admittedOnly: org.apache.spark.sql.Column = lit(true))(
+      judge: => DataFrame)(append: (DataFrame, Long) => Unit): Long = {
+    val s = batch.sparkSession
+    val epochPath = s"$outDir/epoch=$epochId"
+    val marker = new org.apache.hadoop.fs.Path(s"$epochPath/_SUCCESS")
+    val replay = marker.getFileSystem(s.sessionState.newHadoopConf())
+      .exists(marker)
+    val read = if (replay) s.read else {
+      val judged = judge
+      judged.write.mode("overwrite").parquet(epochPath)
+      s.read.schema(judged.schema)
+    }
     val admitted = batch.join(
-      committed.filter(col("fate") === "admitted").select(col(id)),
+      read.parquet(epochPath).filter(admittedOnly).select(col(id)),
       Seq(id), "left_semi").persist()
     try {
       val n = admitted.count()
-      if (n > 0) {
-        // The two appends touch DISJOINT indexes and both read the
-        // (persisted, just-materialized) admitted frame — overlap
-        // them so the epoch pays one append-latency, not two
-        // (guide §2.6; each append is a chain of small staged jobs
-        // whose cost is fixed overhead, not data).
-        graft.engine.Parallel.run(
-          () => graft.dedup.Dedup.appendSpanIndex(admitted, id, text,
-            spanIndexDir),
-          () => Similarity.appendIvfIndex(
-            graft.functions.HashEmbed
-              .embed(admitted, id, text, cfg.embedDim)
-              .select(col(id), col("emb").as("__ev")),
-            id, "__ev", ivfIndexDir))
-        if (cfg.rebuildFactor > 0)
-          maybeRebuildIvf(s, ivfIndexDir, cfg.rebuildFactor, ingested, n)
-      }
+      if (n > 0) append(admitted, n)
+      logger.info(s"$loop epoch $epochId: admitted $n" +
+        (if (replay) " (committed replay)" else ""))
       n
     } finally { admitted.unpersist(); () }
   }
 
-  /** Retry detection shared by the ingest-loop epoch functions: if
-    * `epochPath` already holds a COMMITTED result (`_SUCCESS`
-    * present — a half-written dir from a crash mid-write is ignored;
-    * the index was not yet mutated in that window, so a plain
-    * re-gate reproduces the same set), its admitted ids are STAGED
-    * to a scratch dir and the stage path returned. Staging is
-    * mandatory, not an optimization: the epoch's own overwrite
-    * deletes the very files a lazy plan would read.
+  /** Best ingested cosine `max_cos` per `id` of `vecs` against the IVF
+    * index — the window-free probe at the index's adaptive nprobe.
     */
-  private def priorEpochStage(s: SparkSession, epochPath: String,
-      id: String): Option[String] = {
-    val marker = new org.apache.hadoop.fs.Path(s"$epochPath/_SUCCESS")
-    val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(marker)) None
-    else {
-      val st = graft.engine.Scratch.dir("graft_epoch_retry_")
-      s.read.parquet(epochPath).select(col(id))
-        .write.mode("overwrite").parquet(s"$st/ids")
-      Some(st)
-    }
+  private def ivfMaxCos(vecs: DataFrame, indexDir: String, id: String,
+      vec: String): DataFrame = {
+    import graft.similarity.Similarity
+    val s = vecs.sparkSession
+    val kc = Similarity.ivfIndexMeta(s, indexDir)._3
+    Similarity.litIndexCandidates(s, vecs, indexDir, id, vec,
+        nprobe = Similarity.adaptiveNprobe(kc))
+      .groupBy(col(id)).agg(max(col("cos")).as("max_cos"))
   }
+
+  /** Start an ingest loop: `epoch` runs once per micro-batch. */
+  private def startLoop(stream: DataFrame, checkpoint: String,
+      trigger: Trigger)(epoch: (DataFrame, Long) => Long)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, epochId: Long) =>
+        epoch(batch, epochId); () }
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .start()
 
   /** Run a streaming frame to completion against the currently
     * available data and return the result as a batch table

@@ -33,7 +33,6 @@ class EngineSpec extends AnyFunSuite {
         |"integrityMax": 500.5, "sensorPatterns": "a,b"}""".stripMargin)
     assert(c.inputDir == "/in")
     assert(c.lookbackDays == 7)
-    assert(!c.useAqe)
     assert(c.integrityMax == 500.5)
     assert(c.sensorPatterns == Seq("a", "b"))
     assert(c.writeMode == "overwrite") // default preserved

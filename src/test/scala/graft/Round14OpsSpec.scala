@@ -62,6 +62,15 @@ class Round14OpsSpec extends AnyFunSuite {
     val n3 = StreamingOps.spanIngestEpoch(batch, 0L, "doc_id", "text",
       idx, out, minNovelPm = 500L)
     assert(n3 == 1L && Dedup.spanIndexKeys(spark, idx).count() == keys)
+    // a takedown between the attempts: doc 11 was rejected as a copy
+    // of doc 1, which is now removed — a re-gate would admit it, but
+    // the replay must keep attempt 1's committed verdict verbatim
+    Dedup.removeFromSpanIndex(docsDf(Seq(1L -> "a b c d")),
+      "doc_id", "text", idx)
+    val n4 = StreamingOps.spanIngestEpoch(batch, 0L, "doc_id", "text",
+      idx, out, minNovelPm = 500L)
+    assert(n4 == 1L && sinkIds(out) == Set(10L),
+      "a replay after a takedown must not admit what attempt 1 rejected")
   }
 
   test("spanIngestLoop: literal kill-restart — a deleted commit marker replays the epoch losslessly") {
@@ -185,6 +194,11 @@ class Round14OpsSpec extends AnyFunSuite {
     val lists = Similarity.ivfLists(spark, idx).count()
     epoch()
     assert(Similarity.ivfLists(spark, idx).count() == lists)
+    // a takedown between the attempts: 101 was rejected as a copy of
+    // vector 3, which is now removed — the replay keeps the verdict
+    Similarity.removeFromIvfIndex(vecsDf(Seq(3L -> tv(3L))), "vec_id", idx)
+    assert(epoch() == 1L && vecSinkIds(out) == Set(100L),
+      "a replay after a takedown must not admit what attempt 1 rejected")
   }
 
   test("ivfIngestLoop: later micro-batches see earlier admissions, and rejection resolves to the admitted id") {

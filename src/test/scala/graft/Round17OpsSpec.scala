@@ -20,7 +20,8 @@ import graft.similarity.Similarity
   *  - ivfLiveCount's meta/tail fast path equals the exact
   *    tombstone-filtered count in every index state;
   *  - Parallel.run executes every task, propagates failures, and
-  *    never returns while an interrupted caller's tasks still run.
+  *    never returns while an interrupted caller's tasks, or the
+  *    Spark jobs they submitted, still run.
   */
 class Round17OpsSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -217,5 +218,40 @@ class Round17OpsSpec extends AnyFunSuite {
     assert(cancelled.get() == 2, "both running tasks must be interrupted")
     assert(liveAtReturn == 0, "returned while a task was still running")
     assert(interruptedAfter, "the caller's interrupt status must survive")
+  }
+
+  test("Parallel.run: an interrupted caller cancels the Spark jobs its tasks submitted") {
+    val sc = spark.sparkContext
+    val tags = Seq("r17-slow-a", "r17-slow-b")
+    // a job whose tasks run until killed (or a minute passes)
+    def slowJob(tag: String): () => Unit = () => {
+      sc.addJobTag(tag)
+      sc.parallelize(1 to 2, 2).foreach { _ =>
+        val tc = org.apache.spark.TaskContext.get()
+        val end = System.currentTimeMillis() + 60000L
+        while (!tc.isInterrupted() && System.currentTimeMillis() < end)
+          Thread.sleep(20)
+      }
+    }
+    def running(tag: String): Boolean = {
+      val active = sc.statusTracker.getActiveJobIds().toSet
+      sc.statusTracker.getJobIdsForTag(tag).exists(active)
+    }
+    @volatile var runningAtReturn = Seq.empty[String]
+    val caller = new Thread(() => {
+      try graft.engine.Parallel.run(tags.map(slowJob): _*)
+      catch { case _: Throwable => () }
+      runningAtReturn = tags.filter(running)
+    })
+    caller.start()
+    val deadline = System.currentTimeMillis() + 30000L
+    while (!tags.forall(running) && System.currentTimeMillis() < deadline)
+      Thread.sleep(20)
+    assert(tags.forall(running), "both slow jobs must be running")
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive, "Parallel.run did not return after the interrupt")
+    assert(runningAtReturn.isEmpty,
+      s"jobs still running when Parallel.run returned: $runningAtReturn")
   }
 }
