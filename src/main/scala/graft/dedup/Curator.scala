@@ -35,8 +35,8 @@ object Curator {
       numPerms: Int = Dedup.AutoPerms): DataFrame = {
     // Resolve AutoPerms on the RAW input, not the survivor frame:
     // chooseBanding content-dedups within its sample, so both frames
-    // resolve identically (verified by TuneCheck at sf0.1 — same
-    // per-width waste stats), but the raw frame's count is
+    // resolve identically (GATE_SF1.md, "Curator at the 100× octave":
+    // same per-width waste stats), but the raw frame's count is
     // metadata-only on a plain scan and its memo entry is SHARED
     // with d7/d13, which tune the same scan — one tuning pass per
     // session instead of one per derived frame.

@@ -108,7 +108,8 @@ object Bpe {
     * fold's cost is O(words × merges × Passes) string scans per row
     * REGARDLESS of which merges fire — at a real tokenizer's 32k
     * merges that is 640k scans per word (measured ~minutes per 1k
-    * docs; BpeScale carries the octave table). The kernel's
+    * docs; GATE_SF1.md's "BpeScale: the d38 vocab-octave table"
+    * carries the octaves). The kernel's
     * rank-cursor scan costs O(L²) pair lookups per word (L =
     * wordCap), INDEPENDENT of vocab size, and is proven equivalent
     * to the fold on every table — including adversarial rank orders

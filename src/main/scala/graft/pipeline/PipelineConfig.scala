@@ -7,7 +7,6 @@ package graft.pipeline
   * engine scope; everything that shapes a Spark plan is here.
   */
 case class PipelineConfig(
-    inputDir: String = "/tmp/data",
     outputDir: String = "/tmp/out",
     sensorPatterns: Seq[String] = Seq(".*"),
     defaultStartDate: String = "2024-01-01",
@@ -49,7 +48,6 @@ object PipelineConfig {
     def dbl(k: String, d: Double) = kv.get(k).map(_.toDouble).getOrElse(d)
     val base = PipelineConfig()
     PipelineConfig(
-      inputDir = str("inputDir", base.inputDir),
       outputDir = str("outputDir", base.outputDir),
       sensorPatterns = kv.get("sensorPatterns").map(_.split(',').toSeq)
         .getOrElse(base.sensorPatterns),

@@ -277,8 +277,9 @@ object StreamingQueries {
     * [[graft.similarity.Similarity.adaptiveNprobe]] = max(4, ⌈√kc⌉),
     * so probed work per arrival is ~N^(3/4) at every scale;
     * planted-near-dup recall under exactly this policy is measured
-    * in StreamingSpec's admission-recall case and the AdmissionScale
-    * octave table (GATE_SF1.md), including octaves past the retired
+    * in StreamingSpec's admission-recall case and GATE_SF1.md's
+    * "AdmissionScale: the c26 recall/scale table", including octaves
+    * past the retired
     * clamp where the boxed-literal path carries the probe. The
     * oracle derives the same kc and nprobe from the data (both
     * ranking paths select identically, pinned in SimilaritySpec). Output rows are the arrivals with ≥ 1

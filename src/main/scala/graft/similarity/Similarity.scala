@@ -138,7 +138,8 @@ object Similarity {
     * 1−(1−r₁)^T. Doubling T to 16 once P reaches 12 (N ≈ 2^12·32 =
     * 131k at the default occupancy) buys back what the deeper
     * hashing costs, bounded: measured at N=200k unclustered
-    * (AnnSweep r9), defaults-with-8-tables recall@3 = 0.47 vs 0.60
+    * (GATE_SF1.md, "Multi-probe ANN at the fourth octave"),
+    * defaults-with-8-tables recall@3 = 0.47 vs 0.60
     * at 16 tables (candidate fraction 0.20 → 0.235). One doubling
     * is the whole ladder — beyond N ~ 10⁶ unclustered, hyperplane
     * LSH's recall keeps sliding at any affordable T and the routing
@@ -220,8 +221,9 @@ object Similarity {
     * side; the corpus is still hashed exactly `tables` times.
     *
     * Measured on the synthetic unclustered corpus (worst case for
-    * hyperplane LSH — no cluster structure to exploit; round-9
-    * AnnSweep, four octaves): recall@3 at the adaptive defaults is
+    * hyperplane LSH — no cluster structure to exploit; GATE_SF1.md,
+    * "Multi-probe ANN at the fourth octave"): recall@3 at the
+    * adaptive defaults is
     * 1.00 at N=500 (P=4, T=8), 0.97 at N=2000 (P=6, T=8), 0.80 at
     * N=20000 (P=10, T=8), 0.60 at N=200000 (P=13, T=16 — the
     * [[adaptiveTables]] doubling), while the candidate fraction of
@@ -273,7 +275,8 @@ object Similarity {
     * routing answer is IVF: the point where [[adaptivePlanes]] at the
     * default occupancy would exceed its 18-plane clamp
     * (2^18 · 32 = 2^23 ≈ 8.4M vectors). Below it the measured
-    * recall@3 curve (AnnSweep, four octaves to 200k) stays ≥ 0.6;
+    * recall@3 curve (GATE_SF1.md's multi-probe ANN table, four
+    * octaves to 200k) stays ≥ 0.6;
     * past it occupancy — and with it the candidate count — grows
     * linearly again while recall keeps sliding.
     */
@@ -287,7 +290,8 @@ object Similarity {
 
   /** Probed-list count for the routed IVF configuration: √kc, floor
     * 4. A FIXED nprobe collapses on hard corpora as kc grows with √N
-    * — measured (IvfCheck r11, 64-dim synthetic): at nprobe=4 the
+    * — measured (GATE_SF1.md, "Round-11 addendum: IVF recall at the
+    * ROUTED configuration", 64-dim synthetic): at nprobe=4 the
     * probed fraction is 4/kc and unclustered recall@3 falls 0.168
     * (200k, kc=448) → 0.137 (1M, kc=1000), an order below the LSH
     * side's 0.6 contract — the router would route INTO a worse
@@ -429,7 +433,8 @@ object Similarity {
     * list sizes and raises probed-list recall); `"lowid"` keeps the
     * legacy `kCentroids` lowest-id corpus vectors (centroids are then
     * whatever those rows happen to be — kept for comparison, measured
-    * against kmeans in the AnnSweep ivf leg). Both are exactly
+    * against kmeans in GATE_SF1.md's "d19 quantizer leg"). Both are
+    * exactly
     * reproducible, so the operator carries a full SQL oracle either
     * way.
     *
@@ -1345,7 +1350,8 @@ object Similarity {
     * scale-continuous: no approximation cliff appears when an index
     * crosses litMax (SimilaritySpec pins path equality on the same
     * index). Two hierarchical-pruning cuts were tried first and
-    * measured short on planted-dup recall (AdmissionScale, 800k/1.6M
+    * measured short on planted-dup recall (GATE_SF1.md, "AdmissionScale:
+    * the c26 recall/scale table", 800k/1.6M
     * octaves: 0.86/0.82 pruning super-cells, 0.945/0.90 top-1 per
     * cell, 0.990/0.975 with 2× within-cell overscan — vs 0.995 exact
     * at the small octaves); exactness costs kc ≈ √N interpreted

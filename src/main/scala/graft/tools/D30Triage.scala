@@ -22,9 +22,9 @@ import graft.dedup.Dedup
 object D30Triage {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.engine.Session.cpus()
     val spark = graft.engine.Session
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt,
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus,
         appName = "graft-d30-triage")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
 object GateTriage {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 1) args(1).toInt else 32
+    val cpus = if (args.length > 1) args(1).toInt
+      else graft.engine.Session.cpus()
     val spark = graft.engine.Session
       .builder(master = s"local[$cpus]", shufflePartitions = cpus,
         appName = "graft-gate-triage")

@@ -107,25 +107,49 @@ class BpeSpec extends AnyFunSuite {
     assert(n == 2L, "kernel must not revisit a passed rank")
   }
 
+  /** Deterministic WELL-FORMED merge table of `m` merges over
+    * [a-z0-9]: breadth-first pairing of already-formable symbols
+    * with single characters (the chained shape of a trained vocab),
+    * so early merges are short pairs that actually fire on real
+    * text. Distinct sides by construction.
+    */
+  private def syntheticMerges(m: Int): Seq[(String, String)] = {
+    val chars = (('a' to 'z') ++ ('0' to '9')).map(_.toString)
+    val formed = scala.collection.mutable.ArrayBuffer[String](chars: _*)
+    val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    var i = 0
+    while (out.length < m) {
+      val l = formed(i)
+      chars.foreach { r =>
+        if (out.length < m && l != r) {
+          out += ((l, r))
+          formed += (l + r)
+        }
+      }
+      i += 1
+    }
+    out.toSeq
+  }
+
   test("kernel octave sanity: large merge tables stay cheap and agree with the fold at small scale") {
     // The fold costs O(merges × Passes) scans per word whether or
     // not a merge fires; the kernel is vocab-size independent. At 1k
     // synthetic merges both still run here — they must agree — and
     // the kernel at 32k merges must stay interactive (the fold at
     // 32k is minutes-per-1000-docs territory and is not exercised;
-    // BpeScale carries the measured table).
+    // GATE_SF1.md's "BpeScale: the d38 vocab-octave table" carries
+    // the measurements).
     import spark.implicits._
     val docs = (1 to 200).map(i =>
       (i.toLong, s"the quick brown fox jumps over lazy dog$i " * 4))
       .toDF("doc_id", "text")
-    def table(m: Int) = graft.tools.BpeScale.syntheticMerges(m)
-    val mergesDf1k = table(1000).zipWithIndex
+    val mergesDf1k = syntheticMerges(1000).zipWithIndex
       .map { case ((l, r), i) => (i.toLong, l, r) }
       .toDF("rank", "left", "right")
     val a = Bpe.tokenCount(docs, mergesDf1k, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val fold = docs.select(col("doc_id"),
-      Bpe.encodeDelimited(col("text"), table(1000)).as("enc"))
+      Bpe.encodeDelimited(col("text"), syntheticMerges(1000)).as("enc"))
       .collect().map { r =>
         r.getLong(0) -> r.getSeq[String](1).map(e =>
           e.split('|').count(_.nonEmpty).toLong).sum
@@ -134,8 +158,9 @@ class BpeSpec extends AnyFunSuite {
     // smoke only: the 32k-merge kernel run must COMPLETE (the fold
     // extrapolates to minutes here). No wall-clock assertion — that
     // measured machine speed, not correctness, and flaked on loaded
-    // hosts; BpeScale carries the measured octave table.
-    val merges32k = table(32000).zipWithIndex
+    // hosts; GATE_SF1.md's "BpeScale: the d38 vocab-octave table"
+    // carries the measurements.
+    val merges32k = syntheticMerges(32000).zipWithIndex
       .map { case ((l, r), i) => (i.toLong, l, r) }
       .toDF("rank", "left", "right")
     val rows32k = Bpe.tokenCount(docs, merges32k, "doc_id", "text").count()

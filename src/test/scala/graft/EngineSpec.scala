@@ -31,7 +31,6 @@ class EngineSpec extends AnyFunSuite {
     val c = PipelineConfig.fromJson(
       """{"inputDir": "/in", "lookbackDays": 7, "useAqe": false,
         |"integrityMax": 500.5, "sensorPatterns": "a,b"}""".stripMargin)
-    assert(c.inputDir == "/in")
     assert(c.lookbackDays == 7)
     assert(c.integrityMax == 500.5)
     assert(c.sensorPatterns == Seq("a", "b"))

@@ -90,7 +90,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("routed IVF probes sqrt(kc) lists — the r11 nprobe-scaling rule") {
     // fixed nprobe=4 measured 0.137-0.168 recall@3 on hard corpora at
-    // the routed kc=sqrt(N) (IvfCheck r11) — the rule is probed
+    // the routed kc=sqrt(N) (GATE_SF1.md's round-11 IVF recall
+    // table) — the rule is probed
     // fraction kc^(-1/2), floor 4, and these pins keep it deployed
     assert(Similarity.adaptiveNprobe(16) == 4)
     assert(Similarity.adaptiveNprobe(142) == 12)
@@ -309,7 +310,8 @@ class SimilaritySpec extends AnyFunSuite {
     // source). lowid's 16 near-parallel centroids fragment routing;
     // the seeded-kmeans quantizer's md5-spread seeds + Lloyd step
     // move centroids onto the occupied clusters. On UNCLUSTERED data
-    // the two measure at parity within noise (IvfCheck at 200k:
+    // the two measure at parity within noise (GATE_SF1.md's round-11
+    // IVF recall table at 200k:
     // kmeans 0.58-0.60 vs lowid 0.61; sf0.001/sf0.1: kmeans ahead by
     // 0.01-0.05) — this test pins the clustered case, where the
     // adaptation is the whole point.

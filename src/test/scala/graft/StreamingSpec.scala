@@ -742,22 +742,22 @@ class StreamingSpec extends AnyFunSuite {
     // truth: 100 arrivals that ARE near-dups of ingested documents
     // (text + one appended token, cosine ≈ 0.99 against the source)
     // and 100 fresh arrivals, then runs the admission cycle at the
-    // deployed r12 policy (kc = ⌈√N⌉ clamped, nprobe =
-    // adaptiveNprobe(kc)) via the same harness GATE_SF1.md's octave
-    // table uses.
-    val (kc, np, _, _, caught, nDup, admitted, nFresh, _) =
-      graft.tools.AdmissionScale.run(spark, n = 2000L,
-        nDup = 100, nFresh = 100)
-    assert(kc == 45 && np == 7, s"policy drift: kc=$kc nprobe=$np")
+    // deployed policy (kc = Similarity.sqrtKc, nprobe =
+    // adaptiveNprobe(kc)) via the harness behind GATE_SF1.md's
+    // "AdmissionScale: the c26 recall/scale table".
+    val (nDup, nFresh) = (100, 100)
+    val r = AdmissionRecall.run(spark, n = 2000L, nDup, nFresh)
+    val caught = r.caught
+    assert(r.kc == 45 && r.nprobe == 7,
+      s"policy drift: kc=${r.kc} nprobe=${r.nprobe}")
     assert(caught >= (nDup * 95) / 100,
       s"admission recall too low: caught $caught of $nDup planted near-dups")
-    assert(admitted >= (nFresh * 90) / 100,
-      s"false-rejection too high: only $admitted of $nFresh fresh admitted")
+    assert(r.admitted >= (nFresh * 90) / 100,
+      s"false-rejection too high: only ${r.admitted} of $nFresh fresh admitted")
     // and the r11 pinned nprobe=2 for comparison — must not beat the
     // deployed policy (if it does, the adaptive rule is mis-tuned)
-    val (_, _, _, _, caught2, _, _, _, _) =
-      graft.tools.AdmissionScale.run(spark, n = 2000L,
-        nDup = 100, nFresh = 100, nprobeOverride = 2)
+    val caught2 = AdmissionRecall.run(spark, n = 2000L, nDup, nFresh,
+      nprobeOverride = 2).caught
     assert(caught2 <= caught,
       s"nprobe=2 caught $caught2 > adaptive $caught — revisit the rule")
   }
