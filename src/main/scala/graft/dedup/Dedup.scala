@@ -789,10 +789,28 @@ object Dedup {
     ids.foreach(i => live.get(i).foreach(_.unpersist(blocking = false)))
   }
 
-  private[graft] def ccMinLabel(edges: DataFrame): (DataFrame, Int) = {
+  /** Run a CC loop in a clone of `edges`' session and rebind its
+    * result to the caller's session. The loops size their shuffles
+    * per round by setting `spark.sql.shuffle.partitions`; on the
+    * clone that setting never reaches the caller's session, where
+    * work running beside the loop (under [[graft.engine.Parallel]])
+    * plans its own shuffles and span-index bucket counts.
+    */
+  private def inLoopSession(edges: DataFrame)(
+      loop: DataFrame => (DataFrame, Int)): (DataFrame, Int) = {
+    import org.apache.spark.sql.graftshims.SparkShims
+    val caller = edges.sparkSession
+    val (out, n) = loop(SparkShims.rebind(SparkShims.cloneSession(caller), edges))
+    (SparkShims.rebind(caller, out), n)
+  }
+
+  private[graft] def ccMinLabel(edges: DataFrame): (DataFrame, Int) =
+    inLoopSession(edges)(minLabelRounds)
+
+  /** The min-label rounds to convergence; returns (labels, actions). */
+  private def minLabelRounds(edges: DataFrame): (DataFrame, Int) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges.sparkSession
-    val spDefault = sess.conf.get("spark.sql.shuffle.partitions")
+    val loop = edges.sparkSession
     val adj = edges
       .unionByName(edges.select(col("d2").as("d1"), col("d1").as("d2")))
       .persist(lvl)
@@ -811,32 +829,30 @@ object Dedup {
     // Loop-scoped shuffle sizing from the measured adjacency count
     // (cached — the count reads the persist), the ccSmallLargeStar
     // rule: tiny iterative shuffles must not pay core-count tasks
-    // per round. Restored in the finally.
+    // per round.
     var changed = 1L
     var actions = 0
-    try {
-      sess.conf.set("spark.sql.shuffle.partitions",
-        ccRoundPartitions(adj.count(), spDefault.toInt).toString)
-      while (changed > 0) {
-        // Two propagation rounds per scheduled action; a zero change
-        // count on the second round is a fixpoint proof (a round
-        // applied to already-converged labels changes nothing). Each
-        // step references `labels` twice, so lineage would grow
-        // geometrically over actions — the EAGER localCheckpoint
-        // truncates the plan per action (it is also the action that
-        // materializes both rounds; the change count then reads the
-        // checkpointed partitions).
-        val (next, nextIds) =
-          checkpointTracked(step(step(labels).select("n", "lbl")))
-        changed = next.filter(col("chg")).count()
-        actions += 1
-        // The superseded round's checkpoint is dead once `next` is
-        // materialized — free it now instead of leaving it to GC.
-        freeRdds(next, labelIds)
-        labels = next.select("n", "lbl")
-        labelIds = nextIds
-      }
-    } finally sess.conf.set("spark.sql.shuffle.partitions", spDefault)
+    loop.conf.set("spark.sql.shuffle.partitions",
+      ccRoundPartitions(adj.count(), loop.sessionState.conf.numShufflePartitions).toString)
+    while (changed > 0) {
+      // Two propagation rounds per scheduled action; a zero change
+      // count on the second round is a fixpoint proof (a round
+      // applied to already-converged labels changes nothing). Each
+      // step references `labels` twice, so lineage would grow
+      // geometrically over actions — the EAGER localCheckpoint
+      // truncates the plan per action (it is also the action that
+      // materializes both rounds; the change count then reads the
+      // checkpointed partitions).
+      val (next, nextIds) =
+        checkpointTracked(step(step(labels).select("n", "lbl")))
+      changed = next.filter(col("chg")).count()
+      actions += 1
+      // The superseded round's checkpoint is dead once `next` is
+      // materialized — free it now instead of leaving it to GC.
+      freeRdds(next, labelIds)
+      labels = next.select("n", "lbl")
+      labelIds = nextIds
+    }
     adj.unpersist()
     (labels, actions)
   }
@@ -917,9 +933,23 @@ object Dedup {
     math.max(1L, math.min(ceiling.toLong, edgeCount / 65536L + 1L)).toInt
 
   private[graft] def ccSmallLargeStar(edges0: DataFrame): (DataFrame, Int) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges0.sparkSession
-    val spDefault = sess.conf.get("spark.sql.shuffle.partitions")
+    val (forest, rounds) = inLoopSession(edges0)(starRounds)
+    // Star forest: every edge is (component min, member). Roots label
+    // themselves.
+    val labels = forest.select(col("g").as("n"), col("s").as("lbl"))
+      .unionByName(forest.select(col("s").as("n"), col("s").as("lbl")))
+      .distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (labels, rounds)
+  }
+
+  /** The star-CC rounds to the converged star forest, each round's
+    * shuffles sized from its input's edge count; returns (forest,
+    * rounds).
+    */
+  private def starRounds(edges0: DataFrame): (DataFrame, Int) = {
+    val loop = edges0.sparkSession
+    val width = loop.sessionState.conf.numShufflePartitions
     // (s, g) with s < g throughout; self-loops dropped. Each round
     // references the previous round's edge set several times (sym
     // doubles it, mins joins back onto it), so the logical plan would
@@ -940,12 +970,11 @@ object Dedup {
     var sig = signature(edges)
     var converged = edges.isEmpty
     // Loop-scoped shuffle-partition override, sized per round from
-    // the signature's edge count (already computed for convergence).
-    // Session-level conf is restored in the finally; the loop is
-    // driver-sequential, so nothing else plans under the override.
-    try while (!converged) {
-      sess.conf.set("spark.sql.shuffle.partitions",
-        ccRoundPartitions(sig._1, spDefault.toInt).toString)
+    // the signature's edge count (already computed for convergence);
+    // set on the loop's own session clone ([[inLoopSession]]).
+    while (!converged) {
+      loop.conf.set("spark.sql.shuffle.partitions",
+        ccRoundPartitions(sig._1, width).toString)
       val (next, nextIds) = checkpointTracked(ccSmallStar(ccLargeStar(edges)))
       rounds += 1
       val nextSig = signature(next)
@@ -954,14 +983,8 @@ object Dedup {
       edgeIds = nextIds
       converged = nextSig == sig
       sig = nextSig
-    } finally sess.conf.set("spark.sql.shuffle.partitions", spDefault)
-    // Star forest: every edge is (component min, member). Roots label
-    // themselves.
-    val labels = edges.select(col("g").as("n"), col("s").as("lbl"))
-      .unionByName(edges.select(col("s").as("n"), col("s").as("lbl")))
-      .distinct()
-      .persist(lvl)
-    (labels, rounds)
+    }
+    (edges, rounds)
   }
 
   /** LSH band hash of one signature band: base-31 fold of the band's
@@ -1588,8 +1611,17 @@ object Dedup {
     *          100 TB the index is the big side of the join; paying
     *          its shuffle once at build instead of per trigger is the
     *          difference between per-batch cost tracking the BATCH
-    *          and tracking the CORPUS.
-    *   meta/  (width, buckets) — the span grain and bucket count;
+    *          and tracking the CORPUS. The bucket count is the
+    *          building session's `spark.sql.shuffle.partitions`:
+    *          every [[appendSpanIndex]] writes one file per bucket,
+    *          and every probe and append opens every file, so the
+    *          count sets how many files an ingest loop's index gains
+    *          per epoch; at the session's shuffle width a probe's
+    *          join runs one task per bucket, as its other shuffles
+    *          do.
+    *   meta/  (width, buckets) — the span grain and bucket count
+    *          (appends and re-attaches use the recorded count, not
+    *          their own session's width);
     *          the probe must segment exactly like the writer did, so
     *          it adopts these values and throws on a contradicting
     *          explicit width (the d30 contract: parameters travel
@@ -1609,10 +1641,10 @@ object Dedup {
     * the rebuild is re-run; re-running converges.
     */
   def buildSpanIndex(docs: DataFrame, id: String, text: String,
-      indexDir: String, width: Int = 8, buckets: Int = 32): Unit = {
+      indexDir: String, width: Int = 8): Unit = {
     require(width >= 1, s"span width must be >= 1, got $width")
-    require(buckets >= 1, s"bucket count must be >= 1, got $buckets")
     val s = docs.sparkSession
+    val buckets = s.sessionState.conf.numShufflePartitions
     import s.implicits._
     val tbl = spanTableName(indexDir)
     val stage = graft.engine.Scratch.dir("graft_span_build_")

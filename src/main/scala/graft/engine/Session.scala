@@ -79,6 +79,8 @@ object Session {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Permissions on local files without forking `chmod` ([[LocalFs]]).
+      .config(LocalFs.conf)
 
   /** The core count the CLI mains run `local[n]` with: the
     * `SPARK_GRAFT_CPUS` value (default 4), parsed once. Anything but a

@@ -42,9 +42,15 @@ class Round13OpsSpec extends AnyFunSuite {
     // Broadcast disabled so the at-scale (non-broadcast) plan is the
     // one asserted.
     val idx = scratch()
-    Dedup.buildSpanIndex(
-      docsDf((0L until 200L).map(i => (i, s"a$i b$i c$i d$i"))),
-      "doc_id", "text", idx, width = 2, buckets = 8)
+    // the index takes its bucket count from the building session's
+    // shuffle width: build at 8 buckets, probe at the suite's width
+    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
+      Dedup.buildSpanIndex(
+        docsDf((0L until 200L).map(i => (i, s"a$i b$i c$i d$i"))),
+        "doc_id", "text", idx, width = 2)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
     val batch = docsDf(Seq(1000L -> "a1 b1 q r", 1001L -> "s t u v"))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
