@@ -15,7 +15,6 @@ object Bench {
     val spark = graft.engine.Session
       .builder(master = s"local[$cpus]", shufflePartitions = cpus,
         appName = "graft-bench")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1123,18 +1123,14 @@ object Dedup {
     * a retry after any partial append converges — a table that
     * committed contributes an empty delta, one that did not is
     * re-staged, and no table ever gains duplicate rows. Banding
-    * parameters come from the index meta (the d30 contract);
-    * pre-meta legacy indexes refuse loudly.
+    * parameters come from the index meta (the d30 contract).
     */
   def appendIndex(admitted: DataFrame, id: String, text: String,
       indexDir: String): Unit = {
     val s = admitted.sparkSession
     import org.apache.spark.sql.expressions.Window
-    val m = IndexStore.meta(s, indexDir)
-    val (shK, np, nb, mb) = m.map(minhashParams).getOrElse(
-      throw new IllegalStateException(
-        s"appendIndex: index at $indexDir carries no meta — pre-meta " +
-          "legacy indexes cannot be appended to; rebuild with buildIndex"))
+    val m = IndexStore.committed(s, indexDir, MinHashLayout)
+    val (shK, np, nb, mb) = minhashParams(m)
     def table(t: String) = IndexStore.read(s, m, s"$indexDir/$t")
     val stage = graft.engine.Scratch.dir("graft_dedup_append_")
     try {
@@ -1235,9 +1231,11 @@ object Dedup {
     * removal is refused, and bulk removal filters the source and runs
     * [[buildIndex]] fresh ([[graft.engine.IndexStore]] SIZE CONTRACT).
     */
-  def removeFromIndex(ids: DataFrame, id: String, indexDir: String): Unit =
+  def removeFromIndex(ids: DataFrame, id: String, indexDir: String): Unit = {
+    IndexStore.committed(ids.sparkSession, indexDir, MinHashLayout)
     IndexStore.addTombstones(ids.select(col(id)).distinct(), indexDir, None,
       "filter the source and run buildIndex over it")
+  }
 
   /** Fold tombstoned removals ([[removeFromIndex]]) OUT of the index
     * tables physically and clear the sidecar — run once removals
@@ -1248,10 +1246,10 @@ object Dedup {
     * ([[graft.engine.IndexStore]] CRASH SWAP).
     */
   def compactIndex(s: org.apache.spark.sql.SparkSession, id: String,
-      indexDir: String): Unit =
+      indexDir: String): Unit = {
+    val m = IndexStore.committed(s, indexDir, MinHashLayout)
     IndexStore.tombstones(s, indexDir, None).foreach { sidecar =>
       val tomb = sidecar.toDF(id)
-      val m = IndexStore.meta(s, indexDir)
       val stage = graft.engine.Scratch.dir("graft_dedup_compact_")
       try {
         Seq("content" -> tomb.toDF("keeper_id"), "sigs" -> tomb, "bands" -> tomb)
@@ -1265,15 +1263,19 @@ object Dedup {
         IndexStore.clearTombstones(s, indexDir)
       } finally graft.engine.Scratch.delete(stage)
     }
+  }
+
+  /** The MinHash index's meta columns ([[buildIndex]]). */
+  private val MinHashLayout = IndexStore.Layout("MinHash", "buildIndex",
+    Seq("shingle_k", "num_perms", "bands", "max_bucket"))
 
   /** The banding parameters `(shingle_k, num_perms, bands,
     * max_bucket)` a persisted index was written with ([[buildIndex]]'s
-    * meta row, memoized by [[graft.engine.IndexStore.meta]]), or None
-    * for a pre-meta index.
+    * meta row, memoized by [[graft.engine.IndexStore.meta]]).
     */
   private[graft] def readIndexMeta(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[(Int, Int, Int, Int)] =
-    IndexStore.meta(s, indexDir).map(minhashParams)
+      indexDir: String): (Int, Int, Int, Int) =
+    minhashParams(IndexStore.committed(s, indexDir, MinHashLayout))
 
   private def minhashParams(m: IndexStore.Meta): (Int, Int, Int, Int) = {
     val r = m.row
@@ -1317,28 +1319,21 @@ object Dedup {
     * default — adopts the stored parameters, and EXPLICIT parameters
     * that contradict a stored meta throw rather than silently probe
     * with mismatched hashes (every band key would miss, reporting
-    * `kept` for every near-duplicate). A pre-meta index falls back
-    * to the legacy 16/4 layout. `estMin < 0` (default) resolves to
-    * half the resolved signature width — the same agreement
-    * fraction at every selectivity.
+    * `kept` for every near-duplicate); an index without that meta is
+    * refused ([[graft.engine.IndexStore]] LAYOUT RULE). `estMin < 0`
+    * (default) resolves to half the resolved signature width — the
+    * same agreement fraction at every selectivity.
     */
   def incremental(newDocs: DataFrame, id: String, text: String,
       indexDir: String, shingleK: Int = 8, numPerms: Int = AutoPerms,
-      bands: Int = 4, maxBucket: Int = 512, estMin: Int = -1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      bands: Int = 4, estMin: Int = -1): DataFrame = {
     val s = newDocs.sparkSession
-    val (shK, np, nb, mb) = readIndexMeta(s, indexDir) match {
-      case Some((mShK, mNp, mNb, mMb)) =>
-        if (numPerms != AutoPerms &&
-            (mShK, mNp, mNb) != (shingleK, numPerms, bands))
-          throw new IllegalArgumentException(
-            s"index at $indexDir was built with shingleK=$mShK numPerms=$mNp " +
-              s"bands=$mNb but caller passed shingleK=$shingleK " +
-              s"numPerms=$numPerms bands=$bands — probes would never match")
-        (mShK, mNp, mNb, mMb)
-      case None =>
-        (shingleK, if (numPerms == AutoPerms) 16 else numPerms, bands, maxBucket)
-    }
+    val (shK, np, nb, mb) = readIndexMeta(s, indexDir)
+    if (numPerms != AutoPerms && (shK, np, nb) != (shingleK, numPerms, bands))
+      throw new IllegalArgumentException(
+        s"index at $indexDir was built with shingleK=$shK numPerms=$np " +
+          s"bands=$nb but caller passed shingleK=$shingleK " +
+          s"numPerms=$numPerms bands=$bands — probes would never match")
     val em = if (estMin < 0) np / 2 else estMin
     incrementalResolved(newDocs, id, text, indexDir, shK, np, nb, mb, em)
   }
@@ -1357,7 +1352,7 @@ object Dedup {
     // estimate miss would otherwise re-shuffle the corpus-scale index
     // tables by id just to drop a handful of rows.
     // Tables read under the schemas pinned in the index's meta entry.
-    val m = IndexStore.meta(s, indexDir)
+    val m = IndexStore.committed(s, indexDir, MinHashLayout)
     val tomb = IndexStore.tombstones(s, indexDir, None)
     def liveById(t: String, idCol: String): DataFrame = {
       val df = IndexStore.read(s, m, s"$indexDir/$t")
@@ -1853,23 +1848,16 @@ object Dedup {
     */
   private def spanMeta(s: org.apache.spark.sql.SparkSession,
       indexDir: String): org.apache.spark.sql.Row =
-    IndexStore.meta(s, indexDir).getOrElse(throw new IllegalStateException(
-      s"no span index at $indexDir (no meta) — build it with buildSpanIndex")).row
+    IndexStore.committed(s, indexDir, SpanLayout).row
+
+  private val SpanLayout = IndexStore.Layout("span", "buildSpanIndex",
+    Seq("width", "buckets"))
 
   private def readSpanIndexWidth(s: org.apache.spark.sql.SparkSession,
       indexDir: String): Int = spanMeta(s, indexDir).getAs[Int]("width")
 
   private def readSpanIndexBuckets(s: org.apache.spark.sql.SparkSession,
-      indexDir: String): Int = {
-    val r = spanMeta(s, indexDir)
-    // pre-r13 indexes carry no bucket meta — their spans/ files are
-    // unbucketed, which a bucket-spec'd table would silently misread
-    // (bucket pruning against wrong file naming), so refuse loudly
-    if (!r.schema.fieldNames.contains("buckets")) throw new IllegalStateException(
-      s"span index at $indexDir predates the bucketed layout " +
-        "(no bucket meta) — rebuild it with buildSpanIndex")
-    r.getAs[Int]("buckets")
-  }
+      indexDir: String): Int = spanMeta(s, indexDir).getAs[Int]("buckets")
 
   /** STREAMING-SAFE span-novelty probe of a persisted span index
     * ([[buildSpanIndex]]): per document, how much of its content is

@@ -47,8 +47,20 @@ import org.apache.spark.sql.types.StructType
   * refused before anything is written. Bulk removal of a large corpus
   * fraction filters the source and rebuilds instead — the full rewrite
   * a mass removal costs anyway — and leaves no sidecar behind.
+  *
+  * LAYOUT RULE: an index is read only in the layout its family writes
+  * today. Its committed meta row must exist and carry every column of
+  * the family's [[Layout]]; [[committed]] returns that entry or throws
+  * IllegalStateException naming the family's build call. No family
+  * reads a default for a missing meta column, and an older layout is
+  * never migrated or deleted: it is refused until rebuilt.
   */
 object IndexStore {
+
+  /** What a family's meta row carries today: `columns`, written by
+    * `build`, the call a refused index is rebuilt with.
+    */
+  final case class Layout(family: String, build: String, columns: Seq[String])
 
   /** One memo entry: an index's meta row under the `meta/` listing
     * fingerprint it was read at, plus the read schemas pinned for it.
@@ -111,6 +123,27 @@ object IndexStore {
     }
   }
 
+  /** The committed meta entry of the `layout` index at `dir` (see
+    * LAYOUT RULE), or IllegalStateException naming `layout.build`.
+    */
+  def committed(s: SparkSession, dir: String, layout: Layout): Meta =
+    existing(s, dir, layout).getOrElse(throw new IllegalStateException(
+      s"no ${layout.family} index at $dir (no meta) — build it with ${layout.build}"))
+
+  /** As [[committed]], but None when `dir` holds no index yet — for a
+    * build, which starts fresh there. An index in an older layout is
+    * still refused.
+    */
+  def existing(s: SparkSession, dir: String, layout: Layout): Option[Meta] =
+    meta(s, dir).map { m =>
+      val missing = layout.columns.filterNot(m.row.schema.fieldNames.contains)
+      if (missing.nonEmpty) throw new IllegalStateException(
+        s"${layout.family} index at $dir predates the current layout (meta " +
+          s"lacks ${missing.mkString(", ")}) — rebuild it with ${layout.build} " +
+          "into a fresh directory")
+      m
+    }
+
   /** Commit `row` (a one-row frame) as the index's meta through the
     * `meta.next` swap, replacing the memo entry.
     */
@@ -142,11 +175,9 @@ object IndexStore {
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
   }
 
-  /** `path` read under `m`'s pinned schema, or inferred when the index
-    * has no meta entry.
-    */
-  def read(s: SparkSession, m: Option[Meta], path: String): DataFrame =
-    m.fold(s.read.parquet(path))(e => s.read.schema(e.schema(s, path)).parquet(path))
+  /** `path` read under `m`'s pinned schema. */
+  def read(s: SparkSession, m: Meta, path: String): DataFrame =
+    s.read.schema(m.schema(s, path)).parquet(path)
 
   /** The tombstone sidecar, if any removal has landed since the last
     * compaction or rebuild, read under `schema` — or, when None, under
@@ -159,7 +190,8 @@ object IndexStore {
     val (fs, p) = fsOf(s, path)
     heal(fs, p)
     if (!hasParquet(s, path)) None
-    else Some(schema.fold(read(s, meta(s, dir), path))(s.read.schema(_).parquet(path)))
+    else Some(schema.orElse(meta(s, dir).map(_.schema(s, path)))
+      .fold(s.read.parquet(path))(s.read.schema(_).parquet(path)))
   }
 
   /** Tombstone `dead` (one distinct column, named and typed as the

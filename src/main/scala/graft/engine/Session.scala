@@ -78,9 +78,18 @@ object Session {
       // default size.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.session.timeZone", "UTC")
+      // TIMESTAMP(NANOS) parquet (older events.parquet generators) reads
+      // as nanosecond longs, set once here rather than flipped by each
+      // reader mid-session ([[graft.queries.QueryUtil.events]]).
+      .config(NanosAsLong, "true")
       .config("spark.ui.enabled", "false")
       // Permissions on local files without forking `chmod` ([[LocalFs]]).
       .config(LocalFs.conf)
+
+  /** The flag the event readers need on
+    * ([[graft.queries.QueryUtil.requireNanosAsLong]]).
+    */
+  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** The core count the CLI mains run `local[n]` with: the
     * `SPARK_GRAFT_CPUS` value (default 4), parsed once. Anything but a

@@ -24,10 +24,13 @@ object QueryUtil {
     * µs-precision UTC TimestampType: the long path divides by 1000
     * as integers (exact floor, no doubles); the NTZ path reinterprets
     * wall time under the session's UTC zone (value-preserving — the
-    * generator writes UTC instants either way).
+    * generator writes UTC instants either way). The long path needs
+    * the nanosAsLong flag, which [[graft.engine.Session]] sets once
+    * per session; a session without it is refused
+    * ([[requireNanosAsLong]]).
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(s)
     val raw = t(s, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -35,6 +38,18 @@ object QueryUtil {
       case _ =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
     }
+  }
+
+  /** Refuse a session that reads TIMESTAMP(NANOS) parquet as an error
+    * instead of as nanosecond longs. The event readers never set the
+    * flag themselves: a mid-session flip would change how every other
+    * reader of the session sees such files.
+    */
+  def requireNanosAsLong(s: SparkSession): Unit = {
+    val flag = graft.engine.Session.NanosAsLong
+    if (!s.conf.get(flag, "false").toBoolean) throw new IllegalStateException(
+      s"$flag is off in this session — the events readers need it on; " +
+        "build the session with graft.engine.Session.builder")
   }
 
   /** Event time as epoch milliseconds — stable across Spark's µs

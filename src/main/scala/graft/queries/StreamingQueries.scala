@@ -260,29 +260,21 @@ object StreamingQueries {
     * of ivfProbe's window, because windows do not run on streaming
     * frames; the candidate join is stream ⋈ static.
     *
-    * Sizing policy (r13 — the r12 `clamp(⌈√N⌉, 16, LitCentroidMax)`
-    * rule saturated at N ≈ 360k, past which lists deepened linearly
-    * and per-arrival probe work degraded toward N/24):
-    * `kc = clamp(⌈√N⌉, 16, KCentroidsMax)` — the SAME ceiling as the
-    * batch router — keeps the build at N^1.5 and list depth at ~√N
-    * to ~4·10⁹ ingested docs. The literal-plan bound that forced the
-    * old clamp is gone: past
-    * [[graft.similarity.Similarity.LitCentroidMax]] centroids the
-    * probe ranks the centroid table as ONE boxed typedLit data node
-    * (`Similarity.litArrayCandidates` — no per-element expression
-    * literals, so no janino cliff at any kc, and selection stays
-    * EXACT: the gate's semantics are scale-continuous across the
-    * boundary), still window-free with ONE stateful operator.
+    * Sizing policy: `kc = clamp(⌈√N⌉, 16, KCentroidsMax)` — the SAME
+    * ceiling as the batch router — keeps the build at N^1.5 and list
+    * depth at ~√N to ~4·10⁹ ingested docs. The probe ranks the
+    * centroid table as ONE boxed typedLit data node, so its plan does
+    * not grow with kc and its selection is EXACT at every kc; it stays
+    * window-free with ONE stateful operator.
     * `nprobe` is the deployed IVF-routing rule
     * [[graft.similarity.Similarity.adaptiveNprobe]] = max(4, ⌈√kc⌉),
     * so probed work per arrival is ~N^(3/4) at every scale;
     * planted-near-dup recall under exactly this policy is measured
     * in StreamingSpec's admission-recall case and GATE_SF1.md's
     * "AdmissionScale: the c26 recall/scale table", including octaves
-    * past the retired
-    * clamp where the boxed-literal path carries the probe. The
-    * oracle derives the same kc and nprobe from the data (both
-    * ranking paths select identically, pinned in SimilaritySpec). Output rows are the arrivals with ≥ 1
+    * past 600 centroids. The oracle derives the same kc and nprobe
+    * from the data (the probe's exact selection is pinned against a
+    * driver-side reference in SimilaritySpec). Output rows are the arrivals with ≥ 1
     * ingested candidate in their probed lists (absent arrivals are
     * trivially admitted); complete mode for the memory-sink oracle,
     * update mode deployed.

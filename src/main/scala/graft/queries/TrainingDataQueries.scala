@@ -4053,11 +4053,10 @@ object TrainingDataQueries {
     * report. kc and nprobe are DERIVED FROM THE DATA exactly as the
     * engine derives them: kc = clamp(⌈√N⌉, 16, KCentroidsMax) over
     * the ingested slice, nprobe = max(4, ⌈√kc⌉) (the deployed
-    * adaptiveNprobe rule). Both of the engine's ranking paths —
-    * expression-literal below LitCentroidMax, boxed-literal above —
-    * select the EXACT same top-nprobe (pinned in SimilaritySpec), so
-    * this SQL mirrors the plan at every scale; the oracle-tested SFs
-    * happen to run the expression-literal form.
+    * adaptiveNprobe rule). The engine's boxed-literal ranking
+    * selects the EXACT top-nprobe (pinned against a driver-side
+    * reference in SimilaritySpec), so this SQL mirrors the plan at
+    * every scale.
     */
   private[graft] def c26NearDupSql: String = {
     val kcExpr = "LEAST(" + graft.similarity.Similarity.KCentroidsMax +

@@ -471,15 +471,22 @@ object Similarity {
     probeTopK(queries, cents, lists, id, vec, k, nprobe)
   }
 
-  /** Shared probe stage of [[ivfTopK]] and [[ivfProbe]]: rank the
-    * broadcast centroids per query, keep the `nprobe` nearest lists,
-    * equi-join the (small, broadcast) probe set against the inverted
-    * lists on cid, exact-cosine within, window top-k. `lists` must
-    * carry (cid, vid, v, nrm) with zero-norm vectors already
-    * excluded; `cents` (cid, cv, cnrm).
+  /** Shared probe stage of [[ivfTopK]] and [[ivfProbe]]:
+    * [[probeScores]] then [[windowTopK]].
     */
   private def probeTopK(queries: DataFrame, cents: DataFrame,
       lists: DataFrame, id: String, vec: String, k: Int,
+      nprobe: Int): DataFrame =
+    windowTopK(probeScores(queries, cents, lists, id, vec, nprobe), k)
+
+  /** Rank the broadcast centroids per query, keep the `nprobe`
+    * nearest lists, equi-join the (small, broadcast) probe set against
+    * the inverted lists on cid and score exact cosines within:
+    * `(q_id, n_id, cos)`. `lists` must carry (cid, vid, v, nrm) with
+    * zero-norm vectors already excluded; `cents` (cid, cv, cnrm).
+    */
+  private def probeScores(queries: DataFrame, cents: DataFrame,
+      lists: DataFrame, id: String, vec: String,
       nprobe: Int): DataFrame = {
     val q = queries.select(col(id).as("q_id"), col(vec).as("qv"))
       .withColumn("qnrm", norm2(col("qv")))
@@ -491,10 +498,16 @@ object Similarity {
         Window.partitionBy("q_id").orderBy(col("csim").desc, col("cid"))))
       .filter(col("crk") <= nprobe)
       .select("q_id", "qv", "qnrm", "cid")
-    val scored = lists.join(broadcast(probes), Seq("cid"))
+    lists.join(broadcast(probes), Seq("cid"))
       .filter(col("vid") =!= col("q_id"))
       .select(col("q_id"), col("vid").as("n_id"),
         (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
+  }
+
+  /** Per-query window top-k of `(q_id, n_id, cos)` scores, ties to the
+    * smaller `n_id`: `(q_id, rk, n_id, cos)`.
+    */
+  private def windowTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -568,25 +581,8 @@ object Similarity {
       .persist(lvl)
     val cents = kmeansCentroids(v, kCentroids)
     val lists = v.join(closureAssign(v, cents, deltaMilli, maxAssign), "vid")
-    val q = queries.select(col(id).as("q_id"), col(vec).as("qv"))
-      .withColumn("qnrm", norm2(col("qv")))
-      .filter(col("qnrm") > 0)
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("qnrm"), col("cid"),
-        (dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm"))).as("csim"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("csim").desc, col("cid"))))
-      .filter(col("crk") <= nprobe)
-      .select("q_id", "qv", "qnrm", "cid")
-    val scored = lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        (dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cos"))
-      .distinct()
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select("q_id", "rk", "n_id", "cos")
+    windowTopK(
+      probeScores(queries, cents, lists, id, vec, nprobe).distinct(), k)
   }
 
   /** Build the persisted IVF index a production similarity service
@@ -594,8 +590,8 @@ object Similarity {
     * d30 proved for the dedup index, applied to d19 (whose kmeans
     * quantizer costs two broadcast corpus passes per [[ivfTopK]]
     * call, the most expensive build step in the family). Layout at
-    * `indexDir` (all parquet, GENERATION-versioned since r14 so a
-    * build over an existing index is non-destructive):
+    * `indexDir` (all parquet, GENERATION-versioned so a build over an
+    * existing index is non-destructive):
     *
     *   gen-<g>/centroids/ (cid, cv, cnrm) — the coarse quantizer,
     *              kCentroids rows, broadcast at probe time
@@ -615,9 +611,10 @@ object Similarity {
     *              ([[graft.engine.IndexStore.commitMeta]]): readers see
     *              either the complete old index or the complete new
     *              one, never a half-built generation, and a crash
-    *              mid-build leaves the live index intact (pre-r14
-    *              indexes with flat `centroids`/`lists` and a 3-column
-    *              meta keep reading as generation -1).
+    *              mid-build leaves the live index intact. A directory
+    *              whose meta lacks any of these columns is refused,
+    *              not rebuilt over ([[graft.engine.IndexStore]] LAYOUT
+    *              RULE).
     * Per-generation directory count equals kCentroids (≤ 65536 at
     * the router's √N clamp) — at boundary scale each list holds
     * ≥ √N ≈ 2900 vectors, well above small-file territory. Zero-norm
@@ -632,16 +629,14 @@ object Similarity {
       indexDir: String, kCentroids: Int = 0, quantizer: String = "kmeans",
       lloydIters: Int = 1): Unit = {
     val s = corpus.sparkSession
-    // Next generation: one past the live index's (a legacy flat index
-    // counts as gen -1, so its successor is gen-0). The live data
-    // stays fully probe-able until the meta commit swings readers to
-    // the new generation.
-    val prevGen = IndexStore.meta(s, indexDir).map(ivfRow(_)._5)
-    val newGen = prevGen.map(g => math.max(g, -1) + 1).getOrElse(0)
+    // Next generation: one past the live index's. The live data stays
+    // fully probe-able until the meta commit swings readers to the new
+    // generation.
+    val newGen = IndexStore.existing(s, indexDir, IvfLayout)
+      .fold(0)(ivfRow(_)._5 + 1)
     buildIvfGeneration(corpus.select(col(id).as("vid"), col(vec).as("v")),
       indexDir, newGen, kCentroids, quantizer, lloydIters)
-    sweepIvfGenerations(s, indexDir, keepGen = newGen,
-      sweepLegacyFlat = prevGen.isDefined)
+    sweepIvfGenerations(s, indexDir, keepGen = newGen)
   }
 
   /** Build one index generation's data dirs and COMMIT it by the
@@ -730,10 +725,8 @@ object Similarity {
     // of [[removeFromIvfIndex]]'s contract.
     val vidV = ivfLists(s, indexDir).select(col("vid"), col("v"))
     val kc = if (kCentroids > 0) kCentroids else sqrtKc(vidV.count())
-    val newGen = math.max(gen, -1) + 1
-    buildIvfGeneration(vidV, indexDir, newGen, kc, quant, iters)
-    sweepIvfGenerations(s, indexDir, keepGen = newGen,
-      sweepLegacyFlat = true)
+    buildIvfGeneration(vidV, indexDir, gen + 1, kc, quant, iters)
+    sweepIvfGenerations(s, indexDir, keepGen = gen + 1)
   }
 
   /** The deployed centroid-count policy shared by the batch router,
@@ -746,24 +739,19 @@ object Similarity {
       math.max(16L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
 
   private def ivfGenDir(indexDir: String, gen: Int): String =
-    if (gen < 0) indexDir else s"$indexDir/gen-$gen"
+    s"$indexDir/gen-$gen"
 
-  /** Drop every generation dir except `keepGen` (and, when asked,
-    * the legacy flat `centroids`/`lists` dirs) — run AFTER the meta
+  /** Drop every generation dir except `keepGen` — run AFTER the meta
     * commit, so a crash before the sweep only orphans files the next
     * sweep removes.
     */
   private def sweepIvfGenerations(s: org.apache.spark.sql.SparkSession,
-      indexDir: String, keepGen: Int, sweepLegacyFlat: Boolean): Unit = {
+      indexDir: String, keepGen: Int): Unit = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(s.sessionState.newHadoopConf())
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
-      val stale =
-        (n.startsWith("gen-") && n != s"gen-$keepGen") ||
-          (sweepLegacyFlat &&
-            (n == "centroids" || n == "lists" || n == "tail"))
-      if (stale) fs.delete(st.getPath, true)
+      if (n.startsWith("gen-") && n != s"gen-$keepGen") fs.delete(st.getPath, true)
     }
   }
 
@@ -774,9 +762,7 @@ object Similarity {
     * `lists` never change after its meta commit (appends land in
     * `tail/`), so each is inferred once per entry. The `tail` schema is
     * derived, not inferred: [[appendIvfIndex]] writes tail files as the
-    * base lists' columns with `cid` as long. Pre-r14 flat indexes (gen
-    * -1) keep plain inference on every read: pre-r15 appends added cid
-    * partitions to their `lists` in place.
+    * base lists' columns with `cid` as long.
     */
   private[graft] final class IvfMeta(val row: (String, Int, Int, Long, Int),
       val dataDir: String, entry: IndexStore.Meta) {
@@ -791,21 +777,17 @@ object Similarity {
 
     def read(s: org.apache.spark.sql.SparkSession,
         table: String): DataFrame =
-      if (row._5 < 0) s.read.parquet(s"$dataDir/$table")
-      else s.read.schema(schema(s, table)).parquet(s"$dataDir/$table")
+      s.read.schema(schema(s, table)).parquet(s"$dataDir/$table")
   }
 
-  /** Full meta row with legacy defaults: pre-r14 indexes carry neither
-    * `n_build` (→ -1: the drift check cannot run) nor `gen` (→ -1: the
-    * flat `centroids`/`lists` layout).
-    */
+  /** The IVF index's meta columns ([[buildIvfIndex]]). */
+  private val IvfLayout = IndexStore.Layout("IVF", "buildIvfIndex",
+    Seq("quantizer", "lloyd_iters", "k_centroids", "n_build", "gen"))
+
   private def ivfRow(m: IndexStore.Meta): (String, Int, Int, Long, Int) = {
     val r = m.row
-    val cols = r.schema.fieldNames.toSet
     (r.getAs[String]("quantizer"), r.getAs[Int]("lloyd_iters"),
-      r.getAs[Int]("k_centroids"),
-      if (cols("n_build")) r.getAs[Long]("n_build") else -1L,
-      if (cols("gen")) r.getAs[Int]("gen") else -1)
+      r.getAs[Int]("k_centroids"), r.getAs[Long]("n_build"), r.getAs[Int]("gen"))
   }
 
   private[graft] def ivfMetaFull(s: org.apache.spark.sql.SparkSession,
@@ -814,8 +796,7 @@ object Similarity {
 
   private[graft] def ivfMeta(s: org.apache.spark.sql.SparkSession,
       indexDir: String): IvfMeta = {
-    val m = IndexStore.meta(s, indexDir).getOrElse(throw new IllegalStateException(
-      s"no IVF index at $indexDir (no meta) — build it with buildIvfIndex"))
+    val m = IndexStore.committed(s, indexDir, IvfLayout)
     val row = ivfRow(m)
     new IvfMeta(row, ivfGenDir(indexDir, row._5), m)
   }
@@ -838,8 +819,7 @@ object Similarity {
     * plain filter over a segment bounded by the drift-rebuild
     * contract. When no tail exists (every batch-built index, and
     * every index right after a rebuild) this returns the base read
-    * alone — the plan shape of pre-r15, which is what the d19/d37
-    * plan-pruning assertions pin.
+    * alone, which is what the d19/d37 plan-pruning assertions pin.
     */
   def ivfLists(s: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
@@ -894,10 +874,12 @@ object Similarity {
     * filtered corpus ([[graft.engine.IndexStore]] SIZE CONTRACT).
     */
   def removeFromIvfIndex(ids: DataFrame, id: String,
-      indexDir: String): Unit =
+      indexDir: String): Unit = {
+    IndexStore.committed(ids.sparkSession, indexDir, IvfLayout)
     IndexStore.addTombstones(
       ids.select(col(id).cast("long").as("vid")).distinct(), indexDir,
       TombstoneSchema, "filter the corpus and run buildIvfIndex over it")
+  }
 
   /** Live row count of the index — the drift-check seed
     * ([[graft.streaming.StreamingOps]]). Fast path (r17): with no
@@ -906,15 +888,15 @@ object Similarity {
     * a footer-metadata job over the few per-epoch tail files instead
     * of a scan-plan over kCentroids partition directories. Falls back
     * to the exact tombstone-filtered [[ivfLists]].count() whenever a
-    * sidecar exists or the index predates `n_build`.
+    * sidecar exists.
     */
   def ivfLiveCount(s: org.apache.spark.sql.SparkSession,
       indexDir: String): Long = {
     val m = ivfMeta(s, indexDir)
     val nBuild = m.row._4
-    if (nBuild < 0L || IndexStore.tombstones(s, indexDir, TombstoneSchema).nonEmpty)
-      return ivfLists(s, indexDir).count()
-    if (!IndexStore.hasParquet(s, s"${m.dataDir}/tail")) nBuild
+    if (IndexStore.tombstones(s, indexDir, TombstoneSchema).nonEmpty)
+      ivfLists(s, indexDir).count()
+    else if (!IndexStore.hasParquet(s, s"${m.dataDir}/tail")) nBuild
     else nBuild + m.read(s, "tail").count()
   }
 
@@ -1237,30 +1219,12 @@ object Similarity {
       .select(col("vid").as(id), col("cid"), col("samp_pm"), col("rate_pm"))
   }
 
-  /** Centroid-count ceiling for the literal-centroid streaming probe
-    * ([[litIndexCandidates]]): each centroid becomes one struct
-    * literal inside a single `array(...)` expression node, and this
-    * repo measured janino's generated-method-size cliff at ~736
-    * literal elements (r9, the ANN probe fan-out rebuild) — past it
-    * the stage silently drops to interpreted execution, if it
-    * compiles at all. 600 leaves margin. This bounds the number of
-    * per-element EXPRESSION literals, not the index size: an index
-    * past this many centroids streams through the boxed-literal
-    * ranking ([[litArrayCandidates]] — one typedLit array NODE
-    * holding the centroid table as data, exact selection, no codegen
-    * cliff; r13, retiring the kc clamp that used to bind c26 at
-    * N ≈ 360k).
-    */
-  val LitCentroidMax: Int = 600
-
   /** Centroid-count ceiling for the √N kc policy (annOrIvfTopK, c26):
     * at the 2^23-vector routing boundary √N ≈ 2900 and lists hold
     * ~√N vectors each; 65536 leaves the policy headroom to ~4·10⁹
-    * vectors per index before lists deepen past √N. Streaming probes
-    * of an index past [[LitCentroidMax]] centroids route through the
-    * boxed-literal exact ranking ([[litArrayCandidates]] — one
-    * typedLit data node, no per-element expression literals, so no
-    * janino cliff at any kc).
+    * vectors per index before lists deepen past √N. The streaming
+    * probe ([[litIndexCandidates]]) ranks any of these centroid counts
+    * exactly, with a plan whose size does not grow with kc.
     */
   val KCentroidsMax: Int = 65536
 
@@ -1271,14 +1235,27 @@ object Similarity {
     * [[ivfProbe]]'s plan ranks probed centroids with a window — fine
     * in batch, unsupported on a streaming frame. Here the centroid
     * table is driver-collected (kCentroids rows — dim-table class,
-    * the same collect contract as HashedLinear's weights) and baked
-    * into the plan as LITERAL arrays: centroid ranking becomes
-    * `slice(array_sort(array(struct(-sim, cid)...)), 1, nprobe)` —
-    * pure per-row column arithmetic, no window, no sort, no extra
+    * the same collect contract as HashedLinear's weights) and rides
+    * the plan as ONE `typedLit` array value: a single Literal node
+    * holding kc `(cid, cv, cnrm)` structs as boxed data. Per-row
+    * ranking is `slice(array_sort(transform(...)), 1, nprobe)` over
+    * it — pure per-row column arithmetic, no window, no sort, no extra
     * shuffle — followed by one equi-join against the static inverted
-    * lists. The identical plan therefore runs on a batch OR
-    * streaming query frame (stream ⋈ static joins are supported),
-    * which is what a streaming near-dup admission gate needs.
+    * lists. The identical plan therefore runs on a batch OR streaming
+    * query frame (stream ⋈ static joins are supported), which is what
+    * a streaming near-dup admission gate needs.
+    *
+    * Plan size is independent of kc: generated code references the
+    * literal as one object, so no per-centroid expression node grows
+    * the generated methods (an `array(struct, struct, ...)` of one
+    * expression literal per centroid hits janino's method-size cliff
+    * at ~736 elements). The literal is data — ~9 MB at the
+    * [[KCentroidsMax]] ceiling, serialized once per stage. Ranking
+    * costs kc interpreted sims plus one kc-element sort per row,
+    * subdominant by ~nprobe× to the codegen'd list scan (nprobe·N/kc
+    * ≈ N^(3/4)) that follows. Selection is EXACT at every kc; two
+    * hierarchical-pruning cuts measured short on planted-dup recall
+    * (GATE_SF1.md, "AdmissionScale: the c26 recall/scale table").
     *
     * Ties in the centroid ranking break to the smallest cid (the
     * struct sorts ascending by (-sim, cid)), matching the SQL
@@ -1289,92 +1266,29 @@ object Similarity {
     */
   def litIndexCandidates(s: org.apache.spark.sql.SparkSession,
       queries: DataFrame, indexDir: String, id: String, vec: String,
-      nprobe: Int, litMax: Int = LitCentroidMax): DataFrame = {
+      nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val centRows = ivfCentroids(s, indexDir)
       .select(col("cid"), toDouble(col("cv")).as("cv"), col("cnrm"))
       .collect()
-    val q = queries
+    val centLit = typedLit(centRows.map(r =>
+      (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq)
+    queries
       .select(col(id), col(vec).as("__qv"))
       .withColumn("__qnrm", norm2(col("__qv")))
       .filter(col("__qnrm") > 0)
-    val probed =
-      if (centRows.length <= litMax)
-        litRankCandidates(q, id, centRows, nprobe)
-      else
-        litArrayCandidates(q, id, centRows, nprobe)
-    probed
-      .join(ivfLists(s, indexDir), "cid")
-      .select(col(id), col("vid").as("n_id"),
-        (dot(col("__qv"), col("v")) / (col("__qnrm") * col("nrm")))
-          .as("cos"))
-  }
-
-  /** Single-level literal ranking (kc ≤ `litMax`): every centroid a
-    * struct literal in one array node; EXACT top-`nprobe` centroid
-    * selection per query — the plan the SQL oracle mirrors.
-    */
-  private def litRankCandidates(q: DataFrame, id: String,
-      centRows: Array[org.apache.spark.sql.Row],
-      nprobe: Int): DataFrame = {
-    val ranked = centRows.map { r =>
-      struct(
-        (negate(dot(col("__qv"), typedLit(r.getSeq[Double](1).toIndexedSeq)))
-          / (col("__qnrm") * lit(r.getDouble(2)))).as("negsim"),
-        lit(r.getLong(0)).as("cid"))
-    }
-    q.withColumn("__probe",
-        explode(slice(array_sort(array(ranked.toIndexedSeq: _*)), 1,
-          math.min(nprobe, centRows.length))))
-      .select(col(id), col("__qv"), col("__qnrm"),
-        col("__probe.cid").as("cid"))
-  }
-
-  /** BOXED-LITERAL streaming centroid selection (kc > `litMax` —
-    * r13, retiring the hard ceiling that clamped c26's kc policy at
-    * N ≈ 360k): the whole centroid table rides the plan as ONE
-    * `typedLit` array value — a single Literal NODE holding kc
-    * (cid, cv, cnrm) structs as boxed data — and per-row ranking is
-    * `slice(array_sort(transform(...)), 1, nprobe)` over it. The r9
-    * janino cliff that [[LitCentroidMax]] guards is about
-    * per-element EXPRESSION nodes (an `array(struct, struct, ...)`
-    * with one codegen'd child per centroid blows the generated
-    * method size at ~736 elements); a boxed literal is referenced by
-    * the generated code as one object, so plan compilation is
-    * independent of kc — bounded at every scale the √N policy
-    * reaches (the literal is data: ~9 MB at the 65536-centroid
-    * ceiling, serialized once per stage).
-    *
-    * Selection is EXACT — identical top-`nprobe` (ties to smallest
-    * cid) as [[litRankCandidates]], so the gate's recall is
-    * scale-continuous: no approximation cliff appears when an index
-    * crosses litMax (SimilaritySpec pins path equality on the same
-    * index). Two hierarchical-pruning cuts were tried first and
-    * measured short on planted-dup recall (GATE_SF1.md, "AdmissionScale:
-    * the c26 recall/scale table", 800k/1.6M
-    * octaves: 0.86/0.82 pruning super-cells, 0.945/0.90 top-1 per
-    * cell, 0.990/0.975 with 2× within-cell overscan — vs 0.995 exact
-    * at the small octaves); exactness costs kc ≈ √N interpreted
-    * sims + one kc-element sort per row, subdominant by ~nprobe× to
-    * the codegen'd list scan (nprobe·N/kc ≈ N^(3/4)) that follows.
-    * Still window- and aggregation-free, so the plan runs on a
-    * streaming frame with the downstream per-doc roll-up as the
-    * query's single stateful operator.
-    */
-  private def litArrayCandidates(q: DataFrame, id: String,
-      centRows: Array[org.apache.spark.sql.Row],
-      nprobe: Int): DataFrame = {
-    val centLit = typedLit(centRows.map(r =>
-      (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq)
-    q.withColumn("__probe",
+      .withColumn("__probe",
         explode(slice(array_sort(transform(centLit, c =>
           struct(
             (negate(dot(col("__qv"), c.getField("_2")))
               / (col("__qnrm") * c.getField("_3"))).as("negsim"),
             c.getField("_1").as("cid")))), 1,
           math.min(nprobe, centRows.length))))
-      .select(col(id), col("__qv"), col("__qnrm"),
-        col("__probe.cid").as("cid"))
+      .select(col(id), col("__qv"), col("__qnrm"), col("__probe.cid").as("cid"))
+      .join(ivfLists(s, indexDir), "cid")
+      .select(col(id), col("vid").as("n_id"),
+        (dot(col("__qv"), col("v")) / (col("__qnrm") * col("nrm")))
+          .as("cos"))
   }
 
   /** Near-duplicate pairs above a cosine threshold, blocked by a

@@ -37,8 +37,9 @@ object StreamingOps {
     }
 
   /** Explicit source schema — file stream sources require one. `ts`
-    * arrives either as nanosecond INT64 (read as long via
-    * nanosAsLong and divided down) or as native TIMESTAMP(MICROS)
+    * arrives either as nanosecond INT64 (read as long under the
+    * session's nanosAsLong flag, which [[graft.engine.Session]] sets,
+    * and divided down) or as native TIMESTAMP(MICROS)
     * NTZ, depending on the generator (see QueryUtil.events); both
     * normalize to a µs UTC TimestampType column for event-time ops.
     */
@@ -53,7 +54,7 @@ object StreamingOps {
 
   def readEventsStream(s: SparkSession, dir: String,
       glob: String = "events.parquet"): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.queries.QueryUtil.requireNanosAsLong(s)
     // Streams need the schema up front; one static footer peek picks
     // the ts encoding (long nanos vs native timestamp) so the stream
     // schema matches the files instead of assuming one generator.
@@ -251,8 +252,7 @@ object StreamingOps {
     * += admitted per epoch — no per-epoch index scan); a retried
     * epoch may double-count its admissions, which only makes the
     * rebuild fire EARLIER, never later. `rebuildFactor = 0` disables
-    * the check; a pre-r14 index without `n_build` in meta logs once
-    * and skips it.
+    * the check.
     *
     * Retries follow [[ingestEpoch]]'s protocol; `appendIvfIndex`
     * anti-joins already-indexed vids, so partial appends converge.
@@ -309,11 +309,7 @@ object StreamingOps {
       ingested.set(Similarity.ivfLiveCount(s, indexDir))
     else ingested.addAndGet(admittedN)
     val nBuild = Similarity.ivfMetaFull(s, indexDir)._4
-    if (nBuild < 0L)
-      logger.warn(s"ivfIngestLoop: index at $indexDir carries no " +
-        "n_build (pre-r14 build) — drift check skipped; rebuild with " +
-        "buildIvfIndex to enable it")
-    else if (ingested.get() >= (factor * nBuild).toLong) {
+    if (ingested.get() >= (factor * nBuild).toLong) {
       logger.info(s"ivfIngestLoop: ingested ${ingested.get()} >= " +
         s"$factor x n_build $nBuild — rebuilding index at $indexDir")
       Similarity.rebuildIvfIndex(s, indexDir)
@@ -507,24 +503,19 @@ object StreamingOps {
   /** Run a streaming frame to completion against the currently
     * available data and return the result as a batch table
     * (memory sink + processAllAvailable). Local-test harness only;
-    * production uses a durable sink + checkpoint.
+    * production uses a durable sink + checkpoint. The query runs at
+    * the session's own shuffle width (so do its state stores): the
+    * width is session-global, and changing it here would change it
+    * for every other thread planning in the session.
     */
   def runToTable(df: DataFrame, spark: SparkSession, name: String,
       outputMode: String): DataFrame = {
-    // State-store count is fixed at the query's shuffle-partition
-    // setting; size it to the state, not the core count (results
-    // are partitioning-independent, only state overhead changes).
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val q = try {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(prev.toInt, 8).toString)
-      df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val q = df.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .start()
     try {
       q.processAllAvailable()
     } finally {

@@ -96,7 +96,7 @@ class BandingSpec extends AnyFunSuite {
   test("buildIndex persists its banding meta; incremental adopts it") {
     val dir = java.nio.file.Files.createTempDirectory("banding_idx").toString
     Dedup.buildIndex(docsDF, "doc_id", "text", dir)
-    assert(Dedup.readIndexMeta(spark, dir).contains((8, 16, 4, 512)))
+    assert(Dedup.readIndexMeta(spark, dir) == ((8, 16, 4, 512)))
     // Default (AutoPerms) probe adopts the stored parameters and runs.
     val fates = Dedup.incremental(
       docsDF.filter(col("doc_id") % 7 === 0), "doc_id", "text", dir)
@@ -171,13 +171,14 @@ class BandingSpec extends AnyFunSuite {
   }
 
   test("estMin default scales with the resolved signature width") {
-    // A pre-meta (legacy) index path: explicit 24-perm build with the
-    // meta removed must fall back to legacy 16 — wrong on purpose —
-    // while the meta-present path resolves 24 and estMin 12. Checked
-    // indirectly: same corpus probed against a 24-perm index finds
-    // its exact copies either way (exact path is banding-independent).
+    // A 24-perm index: the default probe adopts 24 perms from meta,
+    // so estMin resolves to 12, not the 8 of a 16-perm default. Checked
+    // indirectly: the same corpus probed against it finds its exact
+    // copies (the exact path is banding-independent) and the probe
+    // runs at the stored width without a contradiction.
     val dir = java.nio.file.Files.createTempDirectory("banding_idx3").toString
     Dedup.buildIndex(docsDF, "doc_id", "text", dir, numPerms = 24)
+    assert(Dedup.readIndexMeta(spark, dir)._2 == 24)
     val fates = Dedup.incremental(docsDF.limit(50), "doc_id", "text", dir)
     assert(fates.filter(col("fate") === "exact_index").count() == 50)
   }

@@ -21,7 +21,10 @@ import graft.similarity.Similarity
   *    and leaves the sidecar unchanged, a takedown-sized one lands;
   *  - re-adding a tombstoned id is refused loudly (MinHash, IVF);
   *  - the meta memo: one entry per index dir, dropped with the index,
-  *    and pinned MinHash reads that launch no inference job.
+  *    and pinned MinHash reads that launch no inference job;
+  *  - the layout rule: a directory without meta, or with a meta that
+  *    lacks a column the family writes today, is refused by every
+  *    entry point, naming the family's build call, and left as it was.
   */
 class IndexLifecycleSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -78,7 +81,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
       remove: (SparkSession, String, Seq[Long]) => Unit,
       live: String => Set[Long], fold: String => Unit,
       physical: String => Set[Long], readd: Option[(String, Seq[Long]) => Unit],
-      route: String)
+      route: String, entryPoints: Seq[(String, String => Any)])
 
   private val minhash = Family("minhash",
     idx => Dedup.buildIndex(docs(spark, ids), "doc_id", "text", idx),
@@ -94,7 +97,14 @@ class IndexLifecycleSpec extends AnyFunSuite {
     idx => spark.read.parquet(s"$idx/sigs").select("doc_id").collect()
       .map(_.getLong(0)).toSet,
     Some((idx, xs) => Dedup.appendIndex(docs(spark, xs), "doc_id", "text", idx)),
-    "buildIndex")
+    "buildIndex",
+    Seq(
+      "incremental" -> (idx => Dedup.incremental(docs(spark, ids), "doc_id", "text", idx)),
+      "appendIndex" -> (idx => Dedup.appendIndex(docs(spark, ids), "doc_id", "text", idx)),
+      "removeFromIndex" -> (idx =>
+        Dedup.removeFromIndex(docs(spark, ids).select("doc_id"), "doc_id", idx)),
+      "compactIndex" -> (idx => Dedup.compactIndex(spark, "doc_id", idx)),
+      "readIndexMeta" -> (idx => Dedup.readIndexMeta(spark, idx))))
 
   private val span: Family = Family("span",
     idx => Dedup.buildSpanIndex(docs(spark, ids), "doc_id", "text", idx, width = 2),
@@ -114,7 +124,16 @@ class IndexLifecycleSpec extends AnyFunSuite {
       ids.filter(i => spanKeys(i).subsetOf(keys)).toSet
     },
     None,
-    "buildSpanIndex")
+    "buildSpanIndex",
+    Seq(
+      "spanNovelty" -> (idx => Dedup.spanNovelty(docs(spark, ids), "doc_id", "text", idx)),
+      "spanDedupIncremental" -> (idx =>
+        Dedup.spanDedupIncremental(docs(spark, ids), "doc_id", "text", idx)),
+      "appendSpanIndex" -> (idx =>
+        Dedup.appendSpanIndex(docs(spark, ids), "doc_id", "text", idx)),
+      "removeFromSpanIndex" -> (idx =>
+        Dedup.removeFromSpanIndex(docs(spark, ids), "doc_id", "text", idx)),
+      "spanIndexKeys" -> (idx => Dedup.spanIndexKeys(spark, idx))))
 
   /** The width-2 span keys of fixture document `i`. */
   private def spanKeys(i: Long): Set[String] =
@@ -139,7 +158,20 @@ class IndexLifecycleSpec extends AnyFunSuite {
     idx => Similarity.ivfMeta(spark, idx).read(spark, "lists").select("vid")
       .collect().map(_.getLong(0)).toSet,
     Some((idx, xs) => Similarity.appendIvfIndex(vecs(spark, xs), "vec_id", "vec", idx)),
-    "buildIvfIndex")
+    "buildIvfIndex",
+    Seq(
+      "ivfLists" -> (idx => Similarity.ivfLists(spark, idx)),
+      "ivfCentroids" -> (idx => Similarity.ivfCentroids(spark, idx)),
+      "ivfProbe" -> (idx =>
+        Similarity.ivfProbe(vecs(spark, ids), idx, "vec_id", "vec", k = 1)),
+      "litIndexCandidates" -> (idx => Similarity.litIndexCandidates(spark,
+        vecs(spark, ids), idx, "vec_id", "vec", nprobe = 1)),
+      "ivfLiveCount" -> (idx => Similarity.ivfLiveCount(spark, idx)),
+      "appendIvfIndex" -> (idx =>
+        Similarity.appendIvfIndex(vecs(spark, ids), "vec_id", "vec", idx)),
+      "removeFromIvfIndex" -> (idx =>
+        Similarity.removeFromIvfIndex(vecs(spark, ids).select("vec_id"), "vec_id", idx)),
+      "rebuildIvfIndex" -> (idx => Similarity.rebuildIvfIndex(spark, idx))))
 
   private val families = Seq(minhash, span, ivf)
 
@@ -207,6 +239,66 @@ class IndexLifecycleSpec extends AnyFunSuite {
     }
   }
 
+  // --- the layout rule ----------------------------------------------
+
+  /** Every file under `dir`, relative to it. */
+  private def files(dir: String): Set[String] = {
+    val root = fs.makeQualified(new Path(dir)).toString
+    val it = fs.listFiles(new Path(dir), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+      .map(_.stripPrefix(root)).toSet
+  }
+
+  /** `call` over `idx` throws IllegalStateException naming `build`, and
+    * leaves every file under `idx` as it was.
+    */
+  private def assertRefused(idx: String, what: String, build: String)(call: => Any): Unit = {
+    val before = files(idx)
+    val e = intercept[IllegalStateException](call)
+    assert(e.getMessage.contains(build), s"$what: ${e.getMessage}")
+    assert(files(idx) == before, s"$what changed the files under $idx")
+  }
+
+  families.foreach { f =>
+    test(s"${f.name}: a directory without meta is refused by every entry point") {
+      val idx = scratch(s"${f.name}_nometa")
+      f.entryPoints.foreach { case (what, call) =>
+        assertRefused(idx, what, f.route)(call(idx))
+      }
+      assert(files(idx).isEmpty)
+    }
+  }
+
+  test("ivf: a hand-written meta without gen or n_build is refused by ivfLists, appendIvfIndex and buildIvfIndex, and its files stay") {
+    Seq("gen", "n_build").foreach { dropped =>
+      val idx = scratch(s"ivf_old_$dropped")
+      ivf.build(idx)
+      spark.read.parquet(s"$idx/meta").drop(dropped)
+        .coalesce(1).write.parquet(s"$idx/meta.hand")
+      assert(fs.delete(new Path(s"$idx/meta"), true))
+      assert(fs.rename(new Path(s"$idx/meta.hand"), new Path(s"$idx/meta")))
+      IndexStore.forget(spark, idx)
+      Seq[(String, String => Any)](
+        "ivfLists" -> (i => Similarity.ivfLists(spark, i)),
+        "appendIvfIndex" -> (i =>
+          Similarity.appendIvfIndex(vecs(spark, ids, offset = 1000L), "vec_id", "vec", i)),
+        "buildIvfIndex" -> (i => ivf.build(i))
+      ).foreach { case (what, call) =>
+        assertRefused(idx, s"$what without $dropped", "buildIvfIndex")(call(idx))
+      }
+      assert(files(idx).exists(_.startsWith("/gen-0/lists/")), files(idx))
+    }
+  }
+
+  test("minhash: incremental over an index whose meta was deleted is refused") {
+    val idx = scratch("minhash_nometa")
+    minhash.build(idx)
+    assert(fs.delete(new Path(s"$idx/meta"), true))
+    assertRefused(idx, "incremental", "buildIndex")(
+      Dedup.incremental(docs(spark, ids), "doc_id", "text", idx))
+    assert(exists(s"$idx/sigs") && exists(s"$idx/bands") && exists(s"$idx/content"))
+  }
+
   // --- the meta memo -------------------------------------------------
 
   private def entries(idx: String): Int = IndexStore.memoKeys.count(_.endsWith(idx))
@@ -234,7 +326,6 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val idx = scratch("memo_heal")
     minhash.build(idx)
     val params = Dedup.readIndexMeta(spark, idx)
-    assert(params.isDefined)
     assert(fs.rename(new Path(s"$idx/meta"), new Path(s"$idx/meta.next")))
     IndexStore.forget(spark, idx)
     assert(Dedup.readIndexMeta(spark, idx) == params)

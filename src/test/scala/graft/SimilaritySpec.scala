@@ -161,39 +161,50 @@ class SimilaritySpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("litIndexCandidates equals a driver-side probe of the same index") {
-    // the streaming-safe literal-centroid probe must select exactly
-    // the vectors of the nprobe nearest lists per query, scored with
-    // the same cosine — checked against a naive reference computed
-    // from the index's own centroid and list parquet
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_litprobe_spec_${java.lang.ProcessHandle.current().pid()}").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, kCentroids = 8)
-    val queries = emb.filter(col("vec_id") % 40 === 0)
-    val got = Similarity
-      .litIndexCandidates(spark, queries, idx, "vec_id", "embedding", nprobe = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+  /** `(query id, candidate id, cosine)` of every vector in each
+    * query's `nprobe` nearest lists of the index at `idx` — a naive
+    * reference computed on the driver from the index's own centroid
+    * and list parquet, ties to the smallest cid.
+    */
+  private def driverProbe(queries: org.apache.spark.sql.DataFrame, idx: String,
+      nprobe: Int): Set[(Long, Long, Double)] = {
     def dot(a: Seq[Double], b: Seq[Double]): Double =
       a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    def doubles(xs: scala.collection.Seq[Any]): IndexedSeq[Double] =
+      xs.map(_.asInstanceOf[Number].doubleValue).toIndexedSeq
     val cents = Similarity.ivfCentroids(spark, idx).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq, r.getDouble(2)))
+      .map(r => (r.getLong(0), doubles(r.getSeq[Any](1)), r.getDouble(2)))
     val lists = Similarity.ivfLists(spark, idx).collect()
-      .map(r => (r.getAs[Long]("cid"), r.getAs[Long]("vid"),
-        r.getAs[scala.collection.Seq[Float]]("v").toIndexedSeq.map(_.toDouble),
-        r.getAs[Double]("nrm")))
-    val want = queries.collect().flatMap { qr =>
+      .map(r => (r.getAs[Number]("cid").longValue, r.getAs[Long]("vid"),
+        doubles(r.getAs[scala.collection.Seq[Any]]("v")), r.getAs[Double]("nrm")))
+    queries.collect().flatMap { qr =>
       val qid = qr.getLong(0)
-      val qv = qr.getSeq[Float](1).toIndexedSeq.map(_.toDouble)
+      val qv = doubles(qr.getSeq[Any](1))
       val qn = math.sqrt(dot(qv, qv))
       if (qn == 0) Array.empty[(Long, Long, Double)] else {
         val probed = cents
           .map { case (cid, cv, cn) => (-dot(qv, cv) / (qn * cn), cid) }
-          .sorted.take(3).map(_._2).toSet
+          .sorted.take(nprobe).map(_._2).toSet
         lists.filter(l => probed(l._1))
           .map(l => (qid, l._2, dot(qv, l._3) / (qn * l._4)))
       }
     }.toSet
-    assert(got == want)
+  }
+
+  private def candidates(queries: org.apache.spark.sql.DataFrame, idx: String,
+      nprobe: Int): Set[(Long, Long, Double)] =
+    Similarity.litIndexCandidates(spark, queries, idx, "vec_id", "embedding", nprobe)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("litIndexCandidates equals a driver-side probe of the same index") {
+    // the streaming-safe literal-centroid probe must select exactly
+    // the vectors of the nprobe nearest lists per query, scored with
+    // the same cosine
+    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_litprobe_spec_${java.lang.ProcessHandle.current().pid()}").toString
+    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, kCentroids = 8)
+    val queries = emb.filter(col("vec_id") % 40 === 0)
+    assert(candidates(queries, idx, nprobe = 3) == driverProbe(queries, idx, 3))
     // the probe plan must be window-free — the property that makes
     // it legal on a streaming frame
     assert(!Similarity
@@ -202,47 +213,11 @@ class SimilaritySpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("boxed-literal litIndexCandidates selects identically to the expression-literal path") {
-    // Past litMax centroids the streaming probe switches from
-    // per-element expression literals (the janino-bounded array()
-    // form) to ONE boxed typedLit data node ranked with
-    // transform/array_sort/slice. The two paths must be EXACTLY
-    // interchangeable — same candidates, same cosines, same
-    // tie-breaks — so the gate's semantics are scale-continuous when
-    // an index crosses the boundary. Forced here with a tiny litMax
-    // on the same index.
-    val idx = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_litarray_spec_${java.lang.ProcessHandle.current().pid()}").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, kCentroids = 30)
-    val queries = emb.filter(col("vec_id") % 40 === 0)
-    val nprobe = 4
-    def run(litMax: Int) = Similarity
-      .litIndexCandidates(spark, queries, idx, "vec_id", "embedding",
-        nprobe, litMax = litMax)
-    val boxed = run(litMax = 8)     // 30 centroids > 8 -> boxed path
-    val exprLit = run(litMax = 600) // expression-literal path
-    val got = boxed.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val want = exprLit.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == want,
-      "boxed-literal ranking must equal the expression-literal ranking bit-for-bit")
-    assert(got.nonEmpty)
-    // still window-free — the property that makes it streamable —
-    // and the boxed plan must carry no kc-wide array() expression
-    val plan = boxed.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"))
-    spark.catalog.clearCache()
-  }
-
-  test("boxed-literal probe at a real past-the-cliff centroid count (kc > LitCentroidMax)") {
-    // The scale the clamp used to forbid, exercised for real: an
-    // index with MORE centroids than LitCentroidMax, probed through
-    // the DEFAULT routing (no forced litMax). 640 sits past the 600
-    // guard but under the measured ~736 janino cliff, so the
-    // expression-literal path still compiles correctly here and
-    // serves as the exactness reference for the boxed path at the
-    // boundary the production policy actually crosses.
+  test("litIndexCandidates equals a driver-side probe at 640 centroids, past the janino expression cliff") {
+    // More centroids than an array of one expression literal per
+    // centroid compiles comfortably (janino's method-size cliff is at
+    // ~736 elements), at a size the sqrt-kc policy reaches: the boxed
+    // centroid literal must still rank exactly.
     import spark.implicits._
     val n = 2000
     val dim = 8
@@ -255,19 +230,12 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.buildIvfIndex(vecs, "vec_id", "embedding", idx,
       kCentroids = 640)
     val kcBuilt = Similarity.ivfCentroids(spark, idx).count()
-    assert(kcBuilt > Similarity.LitCentroidMax,
-      s"test needs a past-the-clamp index, got $kcBuilt centroids")
+    assert(kcBuilt > 600, s"test needs more than 600 centroids, got $kcBuilt")
     val queries = vecs.filter(col("vec_id") % 100 === 0)
-    val boxed = Similarity
-      .litIndexCandidates(spark, queries, idx, "vec_id", "embedding",
-        nprobe = Similarity.adaptiveNprobe(kcBuilt.toInt))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exprLit = Similarity
-      .litIndexCandidates(spark, queries, idx, "vec_id", "embedding",
-        nprobe = Similarity.adaptiveNprobe(kcBuilt.toInt), litMax = 736)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(boxed == exprLit && boxed.nonEmpty,
-      "boxed ranking must stay exact past the retired clamp")
+    val nprobe = Similarity.adaptiveNprobe(kcBuilt.toInt)
+    val got = candidates(queries, idx, nprobe)
+    assert(got.nonEmpty && got == driverProbe(queries, idx, nprobe),
+      "the boxed ranking must stay exact at 640 centroids")
     spark.catalog.clearCache()
   }
 
