@@ -1683,45 +1683,37 @@ object Dedup {
     * bucketed (the delta is inserted through the table API, so new
     * files carry bucket ids like the originals).
     *
-    * Crash-safe by staging: the delta is MATERIALIZED to a scratch
-    * directory before anything writes to the index location, so a
-    * crash leaves at worst a partially visible delta and re-running
-    * the same batch converges without duplicating a key (the sidecar
-    * rewrite follows [[graft.engine.IndexStore]] CRASH SWAP).
+    * Crash-safe by convergence: the delta is ONE write job under the
+    * file commit protocol, so a crash leaves at most part of it
+    * visible, and a retry re-runs the anti-join against whatever
+    * landed — re-running the same batch never duplicates a key. The
+    * sidecar rewrite follows [[graft.engine.IndexStore]] CRASH SWAP.
     */
   def appendSpanIndex(newDocs: DataFrame, id: String, text: String,
       indexDir: String): Unit = {
     val s = newDocs.sparkSession
-    val width = readSpanIndexWidth(s, indexDir)
-    val stage = graft.engine.Scratch.dir("graft_span_append_")
-    try {
-      val batchKeysP = graft.engine.Scratch.stage(
-        spanSegments(newDocs, id, text, width).select("span_key").distinct(),
-        s"$stage/keys")
-      // Delta against the RAW key set (not the tombstone-filtered
-      // view): the table is a set, and a tombstoned key is still
-      // physically present — re-appending it would duplicate the row.
-      val deltaP = graft.engine.Scratch.stage(batchKeysP
-        .join(spanIndexKeysRaw(s, indexDir), Seq("span_key"), "left_anti"),
-        s"$stage/delta")
-      // REVIVE tombstoned keys this batch re-ingests: span keys are
-      // content-addressed, so a new arrival carrying a removed span
-      // means that content is ingested AGAIN and must suppress future
-      // occurrences — the sidecar is rewritten minus the batch's keys
-      // via the tombstones.next swap. Runs BEFORE the table
-      // append: a crash between the two leaves the revived keys
-      // already-physical and live (correct), and the staged delta's
-      // missing keys re-stage on retry.
-      IndexStore.tombstones(s, indexDir, SpanTombstones).foreach { t =>
-        IndexStore.rewriteTombstones(s, indexDir,
-          t.join(batchKeysP, Seq("span_key"), "left_anti"))
-      }
-      val buckets = readSpanIndexBuckets(s, indexDir)
-      deltaP
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "span_key").sortBy("span_key")
-        .saveAsTable(spanTableName(indexDir))
-    } finally graft.engine.Scratch.delete(stage)
+    val batchKeys = spanSegments(newDocs, id, text,
+      readSpanIndexWidth(s, indexDir)).select("span_key").distinct()
+    // REVIVE tombstoned keys this batch re-ingests: span keys are
+    // content-addressed, so a new arrival carrying a removed span
+    // means that content is ingested AGAIN and must suppress future
+    // occurrences — the sidecar is rewritten minus the batch's keys
+    // via the tombstones.next swap. Runs BEFORE the table
+    // append: a crash between the two leaves the revived keys
+    // already-physical and live (correct), and the retry's delta
+    // finds the keys still missing.
+    IndexStore.tombstones(s, indexDir, SpanTombstones).foreach { t =>
+      IndexStore.rewriteTombstones(s, indexDir,
+        t.join(batchKeys, Seq("span_key"), "left_anti"))
+    }
+    // Delta against the RAW key set (not the tombstone-filtered
+    // view): the table is a set, and a tombstoned key is still
+    // physically present — re-appending it would duplicate the row.
+    batchKeys
+      .join(spanIndexKeysRaw(s, indexDir), Seq("span_key"), "left_anti")
+      .write.mode("append").format("parquet")
+      .bucketBy(readSpanIndexBuckets(s, indexDir), "span_key").sortBy("span_key")
+      .saveAsTable(spanTableName(indexDir))
   }
 
   /** The bucketed key set of a span index, as a catalog-backed frame
@@ -1880,6 +1872,23 @@ object Dedup {
     * contract).
     */
   def spanNovelty(newDocs: DataFrame, id: String, text: String,
+      indexDir: String): DataFrame =
+    spanProbe(newDocs, id, text, indexDir)
+      .groupBy(col(id))
+      .agg(count(lit(1)).as("n_spans"),
+        sum(when(col("__ingested").isNull, 1L).otherwise(0L))
+          .as("novel_spans"))
+      .withColumn("novel_pm", expr("novel_spans * 1000 div n_spans"))
+
+  /** The segment-level rows [[spanNovelty]] aggregates: one row per
+    * `width`-token span of `newDocs` (`id`, `seg_idx`, `span`,
+    * `span_key`), LEFT-joined to the live key set, so `__ingested` is
+    * true for a span the index holds and NULL for a novel one. Callers
+    * that fold the probe into a wider per-document aggregation (the
+    * ingest gate's fates) take these rows instead of the per-doc
+    * result.
+    */
+  private[graft] def spanProbe(newDocs: DataFrame, id: String, text: String,
       indexDir: String): DataFrame = {
     val s = newDocs.sparkSession
     val width = readSpanIndexWidth(s, indexDir)
@@ -1887,11 +1896,6 @@ object Dedup {
       .select(col("span_key"), lit(true).as("__ingested"))
     spanSegments(newDocs, id, text, width)
       .join(indexed, Seq("span_key"), "left")
-      .groupBy(col(id))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(when(col("__ingested").isNull, 1L).otherwise(0L))
-          .as("novel_spans"))
-      .withColumn("novel_pm", expr("novel_spans * 1000 div n_spans"))
   }
 
   /** Dedup a NEW batch's spans against a persisted span index

@@ -63,7 +63,8 @@ object IndexStore {
   final case class Layout(family: String, build: String, columns: Seq[String])
 
   /** One memo entry: an index's meta row under the `meta/` listing
-    * fingerprint it was read at, plus the read schemas pinned for it.
+    * fingerprint it was read at, plus the read schemas and constants
+    * pinned for it.
     *
     * Pinned-schema contract: a table the entry describes keeps its
     * schema until the next meta commit (appends add rows, never
@@ -72,13 +73,23 @@ object IndexStore {
     * first read, and every later read passes that schema — no
     * one-task inference job per read. The pinned schema is exactly
     * what a plain read reports.
+    *
+    * Pinned constants ([[pin]]) follow the same rule for values a
+    * family derives from tables that never change under one meta
+    * commit (the IVF generation's centroid literal): computed once per
+    * entry, and a rebuild's new entry computes them afresh.
     */
   final class Meta private[IndexStore] (val fingerprint: String,
       val row: Row) {
     private val pinned = new ConcurrentHashMap[String, StructType]
+    private val constants = new ConcurrentHashMap[String, AnyRef]
 
     def schema(s: SparkSession, path: String): StructType =
       pinned.computeIfAbsent(path, p => s.read.parquet(p).schema)
+
+    /** The constant under `key`, computed by `make` on first use. */
+    def pin[T <: AnyRef](key: String)(make: => T): T =
+      constants.computeIfAbsent(key, _ => make).asInstanceOf[T]
   }
 
   /** One entry per index dir, keyed by its qualified path. */

@@ -57,8 +57,7 @@ object Scratch {
   /** Materialize `df` as parquet at `path` (overwriting) and return
     * the read-back, pinned to `df`'s own schema. A staged read-back
     * is graft's own file with a known schema: reading it plainly
-    * would launch a one-task schema-inference job per read-back,
-    * several per ingest epoch.
+    * would launch a one-task schema-inference job per read-back.
     */
   def stage(df: org.apache.spark.sql.DataFrame,
       path: String): org.apache.spark.sql.DataFrame = {

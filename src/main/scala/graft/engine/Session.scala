@@ -65,7 +65,7 @@ object Session {
       // sized once, by the session that first generates code). The
       // default 100 entries are split over 4 LRU segments of 25, so
       // an ingest-gate epoch's working set (~75-85 distinct classes:
-      // scoring, embedding, probe, fate join, two staged appends,
+      // scoring, embedding, probe, fate aggregation, two appends,
       // the between-epoch checks) evicted itself every epoch and
       // every epoch recompiled it, C2 re-JITting Janino and the
       // planner along the way. A whole gate benchmark run compiles

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Hashed-feature linear document scorer (SURVEY §2.D — the
@@ -50,7 +50,15 @@ object HashedLinear {
     */
   def scorePm(docs: DataFrame, weights: DataFrame, dim: Int,
       id: String, text: String, thresholdPm: Long = 0L,
-      passthrough: Seq[String] = Nil): DataFrame = {
+      passthrough: Seq[String] = Nil): DataFrame =
+    scoreWith(docs, denseWeights(weights, dim), dim, id, text,
+      thresholdPm, passthrough)
+
+  /** The weight table as [[scorePm]]'s dense `array<long>` literal —
+    * the one collect of the scorer. Callers that score many batches
+    * with one model build it once and pass it to [[scoreWith]].
+    */
+  private[graft] def denseWeights(weights: DataFrame, dim: Int): Column = {
     require(dim >= 1, s"feature dim must be >= 1, got $dim")
     val dense = new Array[Long](dim)
     val seen = new java.util.BitSet(dim)
@@ -61,7 +69,13 @@ object HashedLinear {
         seen.set(f.toInt)
         dense(f.toInt) = w
       }
-    val wLit = typedLit(dense.toSeq)
+    typedLit(dense.toSeq)
+  }
+
+  /** [[scorePm]] over a literal built by [[denseWeights]] for `dim`. */
+  private[graft] def scoreWith(docs: DataFrame, wLit: Column, dim: Int,
+      id: String, text: String, thresholdPm: Long,
+      passthrough: Seq[String]): DataFrame = {
     val toks = split(trim(lower(col(text))), "\\s+")
     val carry = passthrough.map(col)
     docs

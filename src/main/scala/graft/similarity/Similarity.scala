@@ -778,6 +778,23 @@ object Similarity {
     def read(s: org.apache.spark.sql.SparkSession,
         table: String): DataFrame =
       s.read.schema(schema(s, table)).parquet(s"$dataDir/$table")
+
+    /** The generation's centroids as ONE literal array of `(cid, cv,
+      * cnrm)` structs (`cid` long, `cv` double), plus its length —
+      * collected on the first call and pinned on the meta entry, so
+      * later probes and appends of the same generation launch no
+      * collect job. A rebuild commits new meta, hence a new entry and
+      * a fresh collect.
+      */
+    def centroids(s: org.apache.spark.sql.SparkSession): (Column, Int) =
+      entry.pin("centroids") {
+        val rows = read(s, "centroids")
+          .select(col("cid").cast("long"), toDouble(col("cv")).as("cv"),
+            col("cnrm"))
+          .collect()
+        (typedLit(rows.map(r =>
+          (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq), rows.length)
+      }
   }
 
   /** The IVF index's meta columns ([[buildIvfIndex]]). */
@@ -862,8 +879,8 @@ object Similarity {
     * delta before it lands (a retry after a partial write converges;
     * the sidecar never gains duplicate vids), and removing a vid the
     * index never held is a no-op. The delta is staged to scratch
-    * before anything writes to the index location (the
-    * [[appendIvfIndex]] crash contract).
+    * before anything writes to the index location
+    * ([[graft.engine.IndexStore.addTombstones]]).
     *
     * Re-adding a removed vid is refused by [[appendIvfIndex]] until
     * a rebuild has folded the tombstone out: its dead rows are still
@@ -920,21 +937,27 @@ object Similarity {
     * untouched, so concurrent probes keep their contract and the
     * assignment rule never shifts under a reader.
     *
-    * Idempotent and crash-safe the same way as the span index's
-    * staged append: already-indexed vids are anti-joined out (a
-    * vid-column-only read of the index — columnar, no payload I/O),
-    * the delta is MATERIALIZED to a scratch dir before anything
-    * writes to the index location, and a retry after a partial
-    * append converges without duplicating a vid.
+    * Assignment is per row, against the generation's pinned centroid
+    * literal ([[IvfMeta.centroids]]): `array_max` over the `(csim,
+    * -cid)` structs of every centroid — the same ordering, ties (to
+    * the smallest cid) and NaN handling as [[argmaxAssign]]'s
+    * `max(struct)`, without its cross join, aggregation and join back.
+    *
+    * Idempotent and crash-safe: already-indexed vids are anti-joined
+    * out (a vid-column-only read of the index — columnar, no payload
+    * I/O), and the delta is ONE write job under the file commit
+    * protocol, so a crash leaves at most part of it visible, and a
+    * retry re-runs the anti-join against whatever landed — converging
+    * without duplicating a vid.
     *
     * File layout (r15, the soak-measured fix): the delta lands as
-    * ONE file per epoch in the generation's unpartitioned `tail/`
-    * segment, not as per-cid appends into the partitioned base — a
-    * 250-epoch soak at 250k vectors measured the per-cid layout
-    * accruing ~432 files/EPOCH (one per touched cid), which made
-    * the per-epoch vid anti-join file-count-bound (2.5 s → 5.4 s
-    * over 24 epochs while rows grew 2.4%) and would have put ~10^5
-    * files between drift rebuilds. With the tail segment, file
+    * ONE file per epoch (`coalesce(1)`) in the generation's
+    * unpartitioned `tail/` segment, not as per-cid appends into the
+    * partitioned base — a 250-epoch soak at 250k vectors measured the
+    * per-cid layout accruing ~432 files/EPOCH (one per touched cid),
+    * which made the per-epoch vid anti-join file-count-bound (2.5 s →
+    * 5.4 s over 24 epochs while rows grew 2.4%) and would have put
+    * ~10^5 files between drift rebuilds. With the tail segment, file
     * growth is exactly one per epoch and the vid scan stays flat.
     * [[ivfLists]] unions the tail in; probes keep partition pruning
     * on the base branch and pay a plain filter on the (small,
@@ -967,23 +990,21 @@ object Similarity {
       IndexStore.tombstones(s, indexDir, TombstoneSchema),
       s"appendIvfIndex: batch re-adds vids tombstoned at $indexDir — " +
         "run rebuildIvfIndex first (folds removals out), then append")
-    val cents = m.read(s, "centroids")
+    val cents = m.centroids(s)._1
+    val best = array_max(transform(cents, c => struct(
+      (dot(col("v"), c.getField("_2")) / (col("nrm") * c.getField("_3")))
+        .as("csim"),
+      negate(c.getField("_1")).as("negc"))))
     val fresh = newVecs.select(col(id).as("vid"), col(vec).as("v"))
       .withColumn("nrm", norm2(col("v")))
       .filter(col("nrm") > 0)
       .join(listsAndTail(s, m).select("vid"), Seq("vid"), "left_anti")
-    val stage = graft.engine.Scratch.dir("graft_ivf_append_")
-    try {
-      // Tail files are written in the tail's pinned schema (the base
-      // lists' columns, cid as long) so every tail read can pass it;
-      // cid stays long whatever type the base's partition column has,
-      // as in every tail written before schemas were pinned.
-      castTo(graft.engine.Scratch.stage(
-          fresh.join(argmaxAssign(fresh, cents), "vid"), s"$stage/delta"),
-          m.schema(s, "tail"))
-        .coalesce(1)
-        .write.mode("append").parquet(s"${m.dataDir}/tail")
-    } finally graft.engine.Scratch.delete(stage)
+      .withColumn("cid", negate(best.getField("negc")))
+    // Tail files are written in the tail's pinned schema (the base
+    // lists' columns, cid as long) so every tail read can pass it.
+    castTo(fresh, m.schema(s, "tail"))
+      .coalesce(1)
+      .write.mode("append").parquet(s"${m.dataDir}/tail")
   }
 
   /** The (quantizer, lloydIters, kCentroids) a persisted IVF index
@@ -1235,7 +1256,8 @@ object Similarity {
     * [[ivfProbe]]'s plan ranks probed centroids with a window — fine
     * in batch, unsupported on a streaming frame. Here the centroid
     * table is driver-collected (kCentroids rows — dim-table class,
-    * the same collect contract as HashedLinear's weights) and rides
+    * the same collect contract as HashedLinear's weights; once per
+    * generation, pinned by [[IvfMeta.centroids]]) and rides
     * the plan as ONE `typedLit` array value: a single Literal node
     * holding kc `(cid, cv, cnrm)` structs as boxed data. Per-row
     * ranking is `slice(array_sort(transform(...)), 1, nprobe)` over
@@ -1268,11 +1290,7 @@ object Similarity {
       queries: DataFrame, indexDir: String, id: String, vec: String,
       nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val centRows = ivfCentroids(s, indexDir)
-      .select(col("cid"), toDouble(col("cv")).as("cv"), col("cnrm"))
-      .collect()
-    val centLit = typedLit(centRows.map(r =>
-      (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq)
+    val (centLit, kc) = ivfMeta(s, indexDir).centroids(s)
     queries
       .select(col(id), col(vec).as("__qv"))
       .withColumn("__qnrm", norm2(col("__qv")))
@@ -1283,7 +1301,7 @@ object Similarity {
             (negate(dot(col("__qv"), c.getField("_2")))
               / (col("__qnrm") * c.getField("_3"))).as("negsim"),
             c.getField("_1").as("cid")))), 1,
-          math.min(nprobe, centRows.length))))
+          math.min(nprobe, kc))))
       .select(col(id), col("__qv"), col("__qnrm"), col("__probe.cid").as("cid"))
       .join(ivfLists(s, indexDir), "cid")
       .select(col(id), col("vid").as("n_id"),

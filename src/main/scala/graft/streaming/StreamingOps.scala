@@ -326,11 +326,18 @@ object StreamingOps {
     * the embedding near-dup gate, `minNovelPm` the span-novelty
     * gate, and `rebuildFactor` the IVF drift contract
     * ([[ivfIngestLoop]]'s rule; 0 disables).
+    *
+    * The weights table is read ONCE per config instance, at the first
+    * epoch that scores with it: its dense literal is kept for every
+    * later epoch, so a changed table needs a new config.
     */
   final case class IngestGateConfig(
       weights: DataFrame, weightDim: Int, thresholdPm: Long = 0L,
       embedDim: Int = 16, maxCos: Double = 0.95,
-      minNovelPm: Long = 500L, rebuildFactor: Double = 4.0)
+      minNovelPm: Long = 500L, rebuildFactor: Double = 4.0) {
+    private[graft] lazy val weightLit: org.apache.spark.sql.Column =
+      graft.functions.HashedLinear.denseWeights(weights, weightDim)
+  }
 
   /** The COMPOSED streaming admission gate — quality (c25), embedding
     * near-dup (c26), and span novelty (c27) as ONE foreachBatch job
@@ -346,8 +353,10 @@ object StreamingOps {
     *   2. survivors are hash-embedded and probed against the
     *      persisted IVF index; best ingested cosine ≥ `maxCos` →
     *      fate `near_dup`;
-    *   3. survivors probe the span index; fewer than `minNovelPm`
-    *      per-mille novel spans → fate `span_dup`;
+    *   3. survivors — every doc that passed quality, near-dups
+    *      included — probe the span index; fewer than `minNovelPm`
+    *      per-mille novel spans → fate `span_dup`. A near-dup's
+    *      span evidence is masked to NULL, as if it never got here;
     *   4. the rest are `admitted`: the fate frame lands under
     *      `outDir/epoch=<n>/` `(id, fate, n_tokens, score_pm,
     *      max_cos, novel_pm)` — evidence columns NULL for gates a
@@ -355,6 +364,12 @@ object StreamingOps {
     *      spans and vectors appended to both indexes, so later
     *      micro-batches gate against them (the [[spanIngestLoop]] /
     *      [[ivfIngestLoop]] feedback, composed).
+    *
+    * Steps 1–3 are ONE query: the scored rows, the IVF candidate rows
+    * and the segment-level span-probe rows are unioned and folded by a
+    * single `groupBy(id)`. Each gate's evidence comes from its own row
+    * set, so the verdict is the one a cascade of semi/anti joins over
+    * each gate's survivors would reach, with no join back to the batch.
     *
     * Retries follow [[ingestEpoch]]'s protocol, with the fate frame
     * as the committed output. Admission is vs the INGESTED corpus
@@ -385,20 +400,23 @@ object StreamingOps {
       .embed(docs, id, text, cfg.embedDim).select(col(id), col("emb").as("__ev"))
     ingestEpoch("ingestGateLoop", batch, epochId, id, outDir,
         col("fate") === "admitted") {
-      val scored = graft.functions.HashedLinear.scorePm(
-        batch, cfg.weights, cfg.weightDim, id, text, cfg.thresholdPm)
-      val pass1 = batch.join(
-        scored.filter(col("keep")).select(col(id)), Seq(id), "left_semi")
-      val cos = ivfMaxCos(embed(pass1), ivfIndexDir, id, "__ev")
-      val pass2 = pass1.join(
-        cos.filter(col("max_cos") >= cfg.maxCos).select(col(id)),
-        Seq(id), "left_anti")
-      val nov = graft.dedup.Dedup
-        .spanNovelty(pass2, id, text, spanIndexDir)
-        .select(col(id), col("novel_pm"))
+      val scored = graft.functions.HashedLinear.scoreWith(batch,
+        cfg.weightLit, cfg.weightDim, id, text, cfg.thresholdPm, Seq(text))
+      val kept = scored.filter(col("keep")).select(col(id), col(text))
+      val spans = graft.dedup.Dedup.spanProbe(kept, id, text, spanIndexDir)
+        .select(col(id), lit(1L).as("__span"),
+          when(col("__ingested").isNull, 1L).otherwise(0L).as("__novel"))
       scored.select(col(id), col("n_tokens"), col("score_pm"))
-        .join(cos, Seq(id), "left")
-        .join(nov, Seq(id), "left")
+        .unionByName(ivfCandidates(embed(kept), ivfIndexDir, id, "__ev")
+          .select(col(id), col("cos")), allowMissingColumns = true)
+        .unionByName(spans, allowMissingColumns = true)
+        .groupBy(col(id))
+        .agg(max(col("n_tokens")).as("n_tokens"),
+          max(col("score_pm")).as("score_pm"),
+          max(col("cos")).as("max_cos"),
+          expr("sum(__novel) * 1000 div sum(__span)").as("novel_pm"))
+        .withColumn("novel_pm",
+          when(col("max_cos") >= cfg.maxCos, lit(null)).otherwise(col("novel_pm")))
         .select(col(id),
           when(col("score_pm") < cfg.thresholdPm, "low_quality")
             .when(col("max_cos") >= cfg.maxCos, "near_dup")
@@ -410,8 +428,8 @@ object StreamingOps {
       // The two appends touch DISJOINT indexes and both read the
       // (persisted, just-materialized) admitted frame — overlap them
       // so the epoch pays one append-latency, not two (guide §2.6;
-      // each append is a chain of small staged jobs whose cost is
-      // fixed overhead, not data).
+      // each append is one write query whose cost is fixed overhead,
+      // not data).
       graft.engine.Parallel.run(
         () => graft.dedup.Dedup.appendSpanIndex(admitted, id, text,
           spanIndexDir),
@@ -480,13 +498,18 @@ object StreamingOps {
     * index — the window-free probe at the index's adaptive nprobe.
     */
   private def ivfMaxCos(vecs: DataFrame, indexDir: String, id: String,
+      vec: String): DataFrame =
+    ivfCandidates(vecs, indexDir, id, vec)
+      .groupBy(col(id)).agg(max(col("cos")).as("max_cos"))
+
+  /** The candidate rows `(id, n_id, cos)` [[ivfMaxCos]] folds. */
+  private def ivfCandidates(vecs: DataFrame, indexDir: String, id: String,
       vec: String): DataFrame = {
     import graft.similarity.Similarity
     val s = vecs.sparkSession
     val kc = Similarity.ivfIndexMeta(s, indexDir)._3
     Similarity.litIndexCandidates(s, vecs, indexDir, id, vec,
-        nprobe = Similarity.adaptiveNprobe(kc))
-      .groupBy(col(id)).agg(max(col("cos")).as("max_cos"))
+      nprobe = Similarity.adaptiveNprobe(kc))
   }
 
   /** Start an ingest loop: `epoch` runs once per micro-batch. */

@@ -118,8 +118,8 @@ class Round15OpsSpec extends AnyFunSuite {
     // attempt 1 runs to completion, then the IVF append's effect is
     // surgically removed (delete every file it added): byte-for-byte
     // the state of a crash after appendSpanIndex committed and before
-    // appendIvfIndex wrote anything to the index location (its delta
-    // staging lives in scratch, not under the index).
+    // appendIvfIndex committed anything to the index location (its
+    // one write job commits its file only when it finishes).
     val ivfBefore = filesUnder(ivfIdx)
     val n1 = epoch()
     assert(n1 == 1L)
