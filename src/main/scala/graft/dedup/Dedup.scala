@@ -1016,7 +1016,9 @@ object Dedup {
 
   /** Build the persisted dedup index a production training-data
     * pipeline dedups each new crawl snapshot against. Layout at
-    * `indexDir` (all parquet, overwritten):
+    * `indexDir` (all parquet; the three tables land in a new
+    * generation dir `gen-<g>/`, [[graft.engine.IndexStore]] GENERATION
+    * COMMIT):
     *
     *   content/ (content_hash, keeper_id) — exact-identity map
     *   bands/   (band, band_hash, <id>)   — LSH posting lists over
@@ -1027,14 +1029,15 @@ object Dedup {
     *   sigs/    (<id>, sig)               — MinHash signatures of
     *            representatives, for probe-side verification
     *
-    *   meta/    (shingle_k, num_perms, bands, max_bucket) — the
+    *   meta/    (shingle_k, num_perms, bands, max_bucket, gen) — the
     *            banding parameters the index was written with.
     *            Probing MUST hash exactly like the writer did, so
     *            [[incremental]] reads its parameters from here; an
     *            auto-tuned build ([[AutoPerms]], the default)
     *            resolves once at build time and the choice travels
     *            with the index. Written LAST, after the three tables
-    *            ([[graft.engine.IndexStore]] META COMMIT); any
+    *            ([[graft.engine.IndexStore]] META COMMIT): a rebuild
+    *            never touches the live generation's tables, and any
     *            tombstone sidecar of the index it replaces is cleared.
     *
     * Each table is one hash-partitioned pass; nothing is collected
@@ -1057,38 +1060,37 @@ object Dedup {
     // O(perms·|text|) signature computed twice. Now: one window
     // exchange, signatures once, and the derived tables read the
     // narrow staged file (r17; guide §2.4 — shared exchange).
-    val stage = graft.engine.Scratch.dir("graft_dedup_build_")
-    try {
-      val repsP = graft.engine.Scratch.stage(docs.select(col(id), col(text))
-        .withColumn("__ch", contentHash(col(text)))
-        .withColumn("__rep", min(col(id)).over(Window.partitionBy("__ch")))
-        .filter(col(id) === col("__rep"))
-        .select(col("__ch").as("content_hash"), col(id),
-          when(length(lower(trim(col(text)))) >= shingleK,
-            minhashSignature(col(text), shingleK, np)).as("sig")),
-        s"$stage/reps")
-      // three independent derived tables over the staged file —
-      // disjoint outputs, overlapped (guide §2.6)
-      graft.engine.Parallel.run(
-        () => repsP.select(col("content_hash"), col(id).as("keeper_id"))
-          .write.mode("overwrite").parquet(s"$indexDir/content"),
-        () => repsP.filter(col("sig").isNotNull)
-          .select(col(id), explode(array(
-            bandKeyCols(col("sig"), np, bands): _*)).as("bh"))
-          .select(col(id), col("bh.band").as("band"),
-            col("bh.band_hash").as("band_hash"))
-          .groupBy("band", "band_hash")
-          .agg(cappedBucket(col(id), maxBucket).as("ds"))
-          .select(col("band"), col("band_hash"), explode(col("ds")).as(id))
-          .write.mode("overwrite").parquet(s"$indexDir/bands"),
-        () => repsP.filter(col("sig").isNotNull).select(col(id), col("sig"))
-          .write.mode("overwrite").parquet(s"$indexDir/sigs"))
-    } finally graft.engine.Scratch.delete(stage)
-    // Meta last (the IndexStore commit); a from-scratch build holds no
-    // removed rows, so any earlier sidecar is cleared after it.
-    IndexStore.commitMeta(s, indexDir, Seq((shingleK, np, bands, maxBucket))
-      .toDF("shingle_k", "num_perms", "bands", "max_bucket"))
-    IndexStore.clearTombstones(s, indexDir)
+    IndexStore.commitGeneration(s, indexDir, MinHashLayout) { (out, _) =>
+      val stage = graft.engine.Scratch.dir("graft_dedup_build_")
+      try {
+        val repsP = graft.engine.Scratch.stage(docs.select(col(id), col(text))
+          .withColumn("__ch", contentHash(col(text)))
+          .withColumn("__rep", min(col(id)).over(Window.partitionBy("__ch")))
+          .filter(col(id) === col("__rep"))
+          .select(col("__ch").as("content_hash"), col(id),
+            when(length(lower(trim(col(text)))) >= shingleK,
+              minhashSignature(col(text), shingleK, np)).as("sig")),
+          s"$stage/reps")
+        // three independent derived tables over the staged file —
+        // disjoint outputs, overlapped (guide §2.6)
+        graft.engine.Parallel.run(
+          () => repsP.select(col("content_hash"), col(id).as("keeper_id"))
+            .write.parquet(s"$out/content"),
+          () => repsP.filter(col("sig").isNotNull)
+            .select(col(id), explode(array(
+              bandKeyCols(col("sig"), np, bands): _*)).as("bh"))
+            .select(col(id), col("bh.band").as("band"),
+              col("bh.band_hash").as("band_hash"))
+            .groupBy("band", "band_hash")
+            .agg(cappedBucket(col(id), maxBucket).as("ds"))
+            .select(col("band"), col("band_hash"), explode(col("ds")).as(id))
+            .write.parquet(s"$out/bands"),
+          () => repsP.filter(col("sig").isNotNull).select(col(id), col("sig"))
+            .write.parquet(s"$out/sigs"))
+      } finally graft.engine.Scratch.delete(stage)
+      Seq((shingleK, np, bands, maxBucket))
+        .toDF("shingle_k", "num_perms", "bands", "max_bucket")
+    }
   }
 
   /** Append an ADMITTED batch to a persisted dedup index
@@ -1101,12 +1103,9 @@ object Dedup {
     * incremental's report joined back to the batch docs); the index
     * never re-derives fates.
     *
-    * What lands (each table's delta staged to scratch before
-    * anything writes to the index — the [[appendSpanIndex]]
-    * crash-retry contract):
+    * What lands, in the live generation's tables, one write job per
+    * table in this order:
     *
-    *   content/ — (content_hash, keeper_id): the batch's per-hash
-    *              keepers, minus hashes the index already maps;
     *   sigs/    — signatures of the batch's content representatives
     *              (minus ids already present);
     *   bands/   — the representatives' band keys, capped in
@@ -1116,13 +1115,21 @@ object Dedup {
     *              rebuild caps on globally smallest ids; append
     *              capping is ingestion-faithful (d46's "first is
     *              ingestion order" rule) — under-cap buckets, the
-    *              overwhelming majority, are identical either way.
+    *              overwhelming majority, are identical either way;
+    *   content/ — (content_hash, keeper_id): the batch's per-hash
+    *              keepers, minus hashes the index already maps.
+    *              LAST, because the representatives of the two
+    *              tables above are the batch minus the content
+    *              already indexed: were content to land first, a
+    *              retry would find the batch's own content indexed
+    *              and never write its sigs and bands.
     *
     * Idempotent per table: every delta is an anti-join against its
-    * OWN table (content by hash, sigs by id, bands by full key), so
-    * a retry after any partial append converges — a table that
+    * OWN table (content by hash, sigs by id, bands by full key), and
+    * each write job commits its files only when it finishes, so a
+    * retry after a crash at any point converges — a table that
     * committed contributes an empty delta, one that did not is
-    * re-staged, and no table ever gains duplicate rows. Banding
+    * written again, and no table ever gains duplicate rows. Banding
     * parameters come from the index meta (the d30 contract).
     */
   def appendIndex(admitted: DataFrame, id: String, text: String,
@@ -1131,76 +1138,66 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val m = IndexStore.committed(s, indexDir, MinHashLayout)
     val (shK, np, nb, mb) = minhashParams(m)
-    def table(t: String) = IndexStore.read(s, m, s"$indexDir/$t")
-    val stage = graft.engine.Scratch.dir("graft_dedup_append_")
-    try {
-      // Re-using a tombstoned id is refused loudly; compactIndex
-      // re-arms the id. (Same content under a FRESH id is the
-      // supported re-ingest path — the live-view anti-joins below let
-      // it land.)
-      val tomb = IndexStore.tombstones(s, indexDir, None).map(_.toDF(id))
-      IndexStore.refuseTombstoned(admitted.select(col(id)), tomb,
-        s"appendIndex: batch re-uses ids tombstoned at $indexDir — " +
-          "run compactIndex first (folds removals out), then append")
-      // LIVE content view: a content_hash whose keeper was removed no
-      // longer blocks re-ingesting that content under its new keeper
-      // (the dead row stays physical until compaction; probes filter
-      // it, so the hash resolving to two physical rows is benign).
-      val liveContent = tomb.fold(table("content"))(t =>
-        table("content").join(t.toDF("keeper_id"), Seq("keeper_id"), "left_anti"))
-      // Defensive: drop representatives whose CONTENT is already
-      // indexed before deriving the sig/band deltas. Callers normally
-      // pass only kept rows, but an exact_index row slipping in would
-      // otherwise land its sigs/bands under the NEW id (the per-table
-      // anti-joins key on id / full band key, not content), double-
-      // representing that content in the LSH tables forever.
-      val reps = contentReps(admitted.select(col(id), col(text)), id, text)
-        .withColumn("__ch", contentHash(col(text)))
-        .join(liveContent
-          .select(col("content_hash").as("__ch")), Seq("__ch"), "left_anti")
-        .drop("__ch")
-      val repsP = graft.engine.Scratch.stage(reps, s"$stage/reps")
+    val live = IndexStore.liveDir(s, indexDir)
+    def table(t: String) = IndexStore.read(s, m, s"$live/$t")
+    // Re-using a tombstoned id is refused loudly; compactIndex
+    // re-arms the id. (Same content under a FRESH id is the
+    // supported re-ingest path — the live-view anti-joins below let
+    // it land.)
+    val tomb = IndexStore.tombstones(s, indexDir, None).map(_.toDF(id))
+    IndexStore.refuseTombstoned(admitted.select(col(id)), tomb,
+      s"appendIndex: batch re-uses ids tombstoned at $indexDir — " +
+        "run compactIndex first (folds removals out), then append")
+    // LIVE content view: a content_hash whose keeper was removed no
+    // longer blocks re-ingesting that content under its new keeper
+    // (the dead row stays physical until compaction; probes filter
+    // it, so the hash resolving to two physical rows is benign).
+    val liveContent = tomb.fold(table("content"))(t =>
+      table("content").join(t.toDF("keeper_id"), Seq("keeper_id"), "left_anti"))
+    // Defensive: drop representatives whose CONTENT is already
+    // indexed before deriving the sig/band deltas. Callers normally
+    // pass only kept rows, but an exact_index row slipping in would
+    // otherwise land its sigs/bands under the NEW id (the per-table
+    // anti-joins key on id / full band key, not content), double-
+    // representing that content in the LSH tables forever.
+    val reps = contentReps(admitted.select(col(id), col(text)), id, text)
+      .withColumn("__ch", contentHash(col(text)))
+      .join(liveContent
+        .select(col("content_hash").as("__ch")), Seq("__ch"), "left_anti")
+      .drop("__ch")
 
-      val contentP = graft.engine.Scratch.stage(
-        exact(admitted, id, text).select("content_hash", "keeper_id")
-          .join(liveContent.select("content_hash"),
-            Seq("content_hash"), "left_anti"),
-        s"$stage/content")
+    reps.filter(length(lower(trim(col(text)))) >= shK)
+      .select(col(id), minhashSignature(col(text), shK, np).as("sig"))
+      .join(table("sigs").select(col(id)), Seq(id), "left_anti")
+      .write.mode("append").parquet(s"$live/sigs")
 
-      val sigsP = graft.engine.Scratch.stage(
-        repsP.filter(length(lower(trim(col(text)))) >= shK)
-          .select(col(id), minhashSignature(col(text), shK, np).as("sig"))
-          .join(table("sigs").select(col(id)), Seq(id), "left_anti"),
-        s"$stage/sigs")
+    // band delta: drop rows already present (retry convergence —
+    // full-key anti-join against the RAW table so a retry can never
+    // duplicate a physical row), then fill each bucket's remaining
+    // capacity smallest-id-first. Capacity counts LIVE rows only:
+    // tombstoned rows are invisible to probes, so they must not
+    // hold bucket slots against new arrivals.
+    val existing = table("bands")
+    val liveExisting =
+      tomb.fold(existing)(t => existing.join(t, Seq(id), "left_anti"))
+    val fresh = lshBandsResolved(reps, id, text, shK, np, nb)
+      .join(existing, Seq("band", "band_hash", id), "left_anti")
+    val room = liveExisting
+      .join(fresh.select("band", "band_hash").distinct(),
+        Seq("band", "band_hash"), "left_semi")
+      .groupBy("band", "band_hash").agg(count(lit(1)).as("__n"))
+    fresh
+      .join(room, Seq("band", "band_hash"), "left")
+      .withColumn("__n", coalesce(col("__n"), lit(0L)))
+      .withColumn("__rk", row_number().over(
+        Window.partitionBy("band", "band_hash").orderBy(col(id))))
+      .filter(col("__rk") + col("__n") <= mb)
+      .select(col("band"), col("band_hash"), col(id))
+      .write.mode("append").parquet(s"$live/bands")
 
-      // band delta: drop rows already present (retry convergence —
-      // full-key anti-join against the RAW table so a retry can never
-      // duplicate a physical row), then fill each bucket's remaining
-      // capacity smallest-id-first. Capacity counts LIVE rows only:
-      // tombstoned rows are invisible to probes, so they must not
-      // hold bucket slots against new arrivals.
-      val existing = table("bands")
-      val liveExisting =
-        tomb.fold(existing)(t => existing.join(t, Seq(id), "left_anti"))
-      val fresh = lshBandsResolved(repsP, id, text, shK, np, nb)
-        .join(existing, Seq("band", "band_hash", id), "left_anti")
-      val room = liveExisting
-        .join(fresh.select("band", "band_hash").distinct(),
-          Seq("band", "band_hash"), "left_semi")
-        .groupBy("band", "band_hash").agg(count(lit(1)).as("__n"))
-      val bandsP = graft.engine.Scratch.stage(fresh
-        .join(room, Seq("band", "band_hash"), "left")
-        .withColumn("__n", coalesce(col("__n"), lit(0L)))
-        .withColumn("__rk", row_number().over(
-          Window.partitionBy("band", "band_hash").orderBy(col(id))))
-        .filter(col("__rk") + col("__n") <= mb)
-        .select(col("band"), col("band_hash"), col(id)),
-        s"$stage/bands")
-
-      contentP.write.mode("append").parquet(s"$indexDir/content")
-      sigsP.write.mode("append").parquet(s"$indexDir/sigs")
-      bandsP.write.mode("append").parquet(s"$indexDir/bands")
-    } finally graft.engine.Scratch.delete(stage)
+    exact(admitted, id, text).select("content_hash", "keeper_id")
+      .join(liveContent.select("content_hash"), Seq("content_hash"), "left_anti")
+      .write.mode("append").parquet(s"$live/content")
   }
 
   /** DELETE documents from a persisted MinHash dedup index
@@ -1216,8 +1213,8 @@ object Dedup {
     *
     * Idempotent: already-tombstoned ids are anti-joined out of the
     * delta (retry converges, no duplicate sidecar rows); removing an
-    * id the index never held is a no-op. Staged to scratch before
-    * anything writes under the index (the [[appendIndex]] contract).
+    * id the index never held is a no-op
+    * ([[graft.engine.IndexStore.addTombstones]]).
     *
     * Re-USING a removed id in a later append is refused loudly by
     * [[appendIndex]] until a compaction folds the tombstone out
@@ -1241,33 +1238,33 @@ object Dedup {
     * tables physically and clear the sidecar — run once removals
     * accumulate (the compaction half of the delete contract; probes
     * are already correct before it runs, this reclaims the bytes and
-    * re-arms the removed ids for reuse). Each table's compacted copy
-    * is staged, then swapped in, and the sidecar is cleared LAST
-    * ([[graft.engine.IndexStore]] CRASH SWAP).
+    * re-arms the removed ids for reuse). The compacted tables are a
+    * new generation under the same meta parameters
+    * ([[graft.engine.IndexStore]] GENERATION COMMIT): a crash before
+    * its commit leaves the live tables and the sidecar in force, and
+    * re-running converges.
     */
   def compactIndex(s: org.apache.spark.sql.SparkSession, id: String,
       indexDir: String): Unit = {
     val m = IndexStore.committed(s, indexDir, MinHashLayout)
+    val live = IndexStore.liveDir(s, indexDir)
     IndexStore.tombstones(s, indexDir, None).foreach { sidecar =>
       val tomb = sidecar.toDF(id)
-      val stage = graft.engine.Scratch.dir("graft_dedup_compact_")
-      try {
+      IndexStore.commitGeneration(s, indexDir, MinHashLayout) { (out, _) =>
         Seq("content" -> tomb.toDF("keeper_id"), "sigs" -> tomb, "bands" -> tomb)
           .foreach { case (t, dead) =>
-            IndexStore.read(s, m, s"$indexDir/$t")
+            IndexStore.read(s, m, s"$live/$t")
               .join(dead, dead.columns.toSeq, "left_anti")
-              .write.mode("overwrite").parquet(s"$stage/$t")
+              .write.parquet(s"$out/$t")
           }
-        Seq("content", "sigs", "bands").foreach(t =>
-          IndexStore.swap(s, s"$stage/$t", s"$indexDir/$t"))
-        IndexStore.clearTombstones(s, indexDir)
-      } finally graft.engine.Scratch.delete(stage)
+        s.createDataFrame(java.util.List.of(m.row), m.row.schema)
+      }
     }
   }
 
   /** The MinHash index's meta columns ([[buildIndex]]). */
   private val MinHashLayout = IndexStore.Layout("MinHash", "buildIndex",
-    Seq("shingle_k", "num_perms", "bands", "max_bucket"))
+    Seq("shingle_k", "num_perms", "bands", "max_bucket", "gen"))
 
   /** The banding parameters `(shingle_k, num_perms, bands,
     * max_bucket)` a persisted index was written with ([[buildIndex]]'s
@@ -1353,9 +1350,10 @@ object Dedup {
     // tables by id just to drop a handful of rows.
     // Tables read under the schemas pinned in the index's meta entry.
     val m = IndexStore.committed(s, indexDir, MinHashLayout)
+    val live = IndexStore.liveDir(s, indexDir)
     val tomb = IndexStore.tombstones(s, indexDir, None)
     def liveById(t: String, idCol: String): DataFrame = {
-      val df = IndexStore.read(s, m, s"$indexDir/$t")
+      val df = IndexStore.read(s, m, s"$live/$t")
       tomb.fold(df)(d => df.join(broadcast(d.toDF(idCol)), Seq(idCol), "left_anti"))
     }
     val idxContent = liveById("content", "keeper_id")
@@ -1589,7 +1587,7 @@ object Dedup {
     * everything already ingested. Layout at `indexDir` (rebuilt from
     * scratch, replacing any prior index there):
     *
-    *   spans/ (span_key) — the DISTINCT md5 span keys of the
+    *   gen-<g>/spans/ (span_key) — the DISTINCT md5 span keys of the
     *          ingested corpus. Membership is all the probe needs
     *          (any ingested occurrence beats every new one — see
     *          the ordering note on [[spanDedupIncremental]]), so the
@@ -1614,7 +1612,7 @@ object Dedup {
     *          per epoch; at the session's shuffle width a probe's
     *          join runs one task per bucket, as its other shuffles
     *          do.
-    *   meta/  (width, buckets) — the span grain and bucket count
+    *   meta/  (width, buckets, gen) — the span grain and bucket count
     *          (appends and re-attaches use the recorded count, not
     *          their own session's width);
     *          the probe must segment exactly like the writer did, so
@@ -1622,18 +1620,14 @@ object Dedup {
     *          explicit width (the d30 contract: parameters travel
     *          with the index).
     *
-    * Rebuild is STAGED (r14 — the direct drop-delete-write it
-    * replaces destroyed the prior index before the new one existed):
-    * the new bucketed table lands under a hidden stage path first,
-    * then swaps into `spans/` by rename, and `meta/` is written LAST
-    * — a crash before the swap leaves the prior index fully intact
-    * (plus an orphaned stage dir the [[graft.engine.Scratch]] exit
-    * sweep removes), and a probe can never see a meta row whose
-    * spans/ has not landed ([[spanIndexKeys]] additionally refuses a
-    * spans location with no data files). The one residual window — a
-    * crash between the swap and the meta write, when the rebuild
-    * CHANGED the width — leaves new keys under the old grain until
-    * the rebuild is re-run; re-running converges.
+    * A rebuild writes its bucketed table straight into a new
+    * generation dir `gen-<g>/spans/` under the catalog name
+    * `graft_span_idx_<hash>_<g>`, and `meta/` is written LAST
+    * ([[graft.engine.IndexStore]] GENERATION COMMIT): the live
+    * generation keeps serving probes until the commit, a crash
+    * before it leaves the prior index intact, and re-running
+    * converges. After the commit the catalog tables of every other
+    * generation are dropped.
     */
   def buildSpanIndex(docs: DataFrame, id: String, text: String,
       indexDir: String, width: Int = 8): Unit = {
@@ -1641,40 +1635,19 @@ object Dedup {
     val s = docs.sparkSession
     val buckets = s.sessionState.conf.numShufflePartitions
     import s.implicits._
-    val tbl = spanTableName(indexDir)
-    val stage = graft.engine.Scratch.dir("graft_span_build_")
-    val stageTbl = s"${tbl}_stage"
-    // 1. Build the new bucketed table into the stage path; the live
-    //    index (if any) is untouched and still probe-able.
-    s.sql(s"DROP TABLE IF EXISTS $stageTbl")
-    spanSegments(docs, id, text, width)
-      .select("span_key").distinct()
-      .write
-      .bucketBy(buckets, "span_key").sortBy("span_key")
-      .option("path", s"$stage/spans")
-      .format("parquet")
-      .saveAsTable(stageTbl)
-    s.sql(s"DROP TABLE IF EXISTS $stageTbl") // files stay; name freed
-    // 2. Swap: catalog entry out, old files out, staged files in.
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    IndexStore.swap(s, s"$stage/spans", s"$indexDir/spans")
-    graft.engine.Scratch.delete(stage)
-    // 3. Meta last: readers adopt the new grain only once its keys
-    //    are fully in place.
-    IndexStore.commitMeta(s, indexDir,
-      Seq((width, buckets)).toDF("width", "buckets"))
-    // 3b. A from-scratch rebuild derives from the LIVE corpus, so any
-    //     tombstoned removals are already folded out of the new key
-    //     set — clear the sidecar (after the meta commit: a crash
-    //     earlier leaves the old index + sidecar intact and correct).
-    IndexStore.clearTombstones(s, indexDir)
-    // 4. Re-declare the catalog table over the swapped files (same
-    //    DDL path probes use to re-attach in a fresh session).
-    //    Declare WITHOUT resolving: resolving here would cache this
-    //    session's file listing, and appends from another session (a
-    //    streaming loop's cloned micro-batch session) would then be
-    //    invisible to this session's later probes.
-    declareSpanTable(s, indexDir, tbl)
+    val gen = IndexStore.commitGeneration(s, indexDir, SpanLayout) { (out, g) =>
+      val tbl = spanTableName(indexDir, g.toString)
+      s.sql(s"DROP TABLE IF EXISTS $tbl") // a crashed attempt's entry
+      spanSegments(docs, id, text, width)
+        .select("span_key").distinct()
+        .write
+        .bucketBy(buckets, "span_key").sortBy("span_key")
+        .option("path", s"$out/spans")
+        .format("parquet")
+        .saveAsTable(tbl)
+      Seq((width, buckets)).toDF("width", "buckets")
+    }
+    dropSpanTables(s, indexDir, keep = Some(spanTableName(indexDir, gen.toString)))
   }
 
   /** Append a new batch's surviving spans to a span index — after
@@ -1713,16 +1686,17 @@ object Dedup {
       .join(spanIndexKeysRaw(s, indexDir), Seq("span_key"), "left_anti")
       .write.mode("append").format("parquet")
       .bucketBy(readSpanIndexBuckets(s, indexDir), "span_key").sortBy("span_key")
-      .saveAsTable(spanTableName(indexDir))
+      .saveAsTable(liveSpanTable(s, indexDir))
   }
 
   /** The bucketed key set of a span index, as a catalog-backed frame
     * (probes join against this; the bucketed scan's hash
     * distribution is what keeps the index side exchange-free). The
-    * table name is a pure function of the index path, so any session
-    * can re-attach an index built by another: if the catalog does
-    * not know the table yet, it is (re)declared over the existing
-    * bucketed files with the bucket spec from `meta/`.
+    * table name is a pure function of the index path and the live
+    * generation, so any session can re-attach an index built by
+    * another: if the catalog does not know the table yet, it is
+    * (re)declared over the live generation's bucketed files with the
+    * bucket spec from `meta/`.
     */
   def spanIndexKeys(s: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
@@ -1743,7 +1717,7 @@ object Dedup {
 
   private def spanIndexKeysRaw(s: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val tbl = spanTableName(indexDir)
+    val tbl = liveSpanTable(s, indexDir)
     if (!s.catalog.tableExists(tbl)) declareSpanTable(s, indexDir, tbl)
     else
       // The index is a SHARED artifact: another session (a streaming
@@ -1787,23 +1761,23 @@ object Dedup {
       indexDir, SpanTombstones,
       "filter the corpus and run buildSpanIndex over it")
 
-  /** Declare the catalog table over an existing span index's bucketed
+  /** Declare the catalog table over the live generation's bucketed
     * files (no resolution, so nothing is cached in this session).
     */
   private def declareSpanTable(s: org.apache.spark.sql.SparkSession,
       indexDir: String, tbl: String): Unit = {
     val buckets = readSpanIndexBuckets(s, indexDir)
+    val spans = s"${IndexStore.liveDir(s, indexDir)}/spans"
     // Refuse to declare a table over a location with no data files:
-    // meta/ without spans/ is a half-built index (crash mid-rebuild),
-    // and an empty external table would silently score every span
-    // novel instead of failing.
-    if (!IndexStore.hasParquet(s, s"$indexDir/spans"))
+    // an empty external table would silently score every span novel
+    // instead of failing.
+    if (!IndexStore.hasParquet(s, spans))
       throw new IllegalStateException(
         s"span index at $indexDir has meta but no span data files — " +
-          "half-built index (crash mid-rebuild?); re-run buildSpanIndex")
+          "re-run buildSpanIndex")
     // LOCATION is a SQL string literal: ''-escape any quote in the
     // filesystem path rather than interpolating it raw.
-    val loc = s"$indexDir/spans".replace("'", "''")
+    val loc = spans.replace("'", "''")
     s.sql(
       s"""CREATE TABLE $tbl (span_key STRING) USING PARQUET
          |CLUSTERED BY (span_key) SORTED BY (span_key)
@@ -1812,30 +1786,47 @@ object Dedup {
     ()
   }
 
-  /** Drop the span index's catalog entry and delete its files —
+  /** Drop the span index's catalog entries and delete its files —
     * callers that build a throwaway index (c27, specs) pair this
     * with their scratch-dir cleanup so session catalogs do not
     * accumulate one external table per invocation.
     */
   def deleteSpanIndex(s: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS ${spanTableName(indexDir)}")
+    dropSpanTables(s, indexDir, keep = None)
     IndexStore.forget(s, indexDir)
     graft.engine.Scratch.delete(indexDir)
   }
 
-  /** Deterministic catalog name for the index at `indexDir` (the
-    * path IS the identity; md5 keeps it a valid identifier).
+  /** Deterministic catalog name for generation `gen` of the index at
+    * `indexDir` (the path IS the identity; md5 keeps it a valid
+    * identifier); `gen` = `*` is the pattern of every generation's.
     */
-  private def spanTableName(indexDir: String): String = {
+  private def spanTableName(indexDir: String, gen: String): String = {
     val canonical = new java.io.File(indexDir).getAbsolutePath
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(canonical.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
-    s"graft_span_idx_$h"
+    s"graft_span_idx_${h}_$gen"
   }
 
-  /** The span index's meta row `(width, buckets)`, memoized by
+  /** The catalog name of the live generation, from the memoized meta. */
+  private def liveSpanTable(s: org.apache.spark.sql.SparkSession,
+      indexDir: String): String =
+    spanTableName(indexDir, IndexStore.committed(s, indexDir, SpanLayout).gen.toString)
+
+  /** Drop the catalog entry of every generation of the index at
+    * `indexDir` but `keep`'s.
+    */
+  private def dropSpanTables(s: org.apache.spark.sql.SparkSession,
+      indexDir: String, keep: Option[String]): Unit = {
+    val catalog = s.sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase, spanTableName(indexDir, "*"))
+      .map(_.table).filterNot(keep.contains)
+      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  /** The span index's meta row `(width, buckets, gen)`, memoized by
     * [[graft.engine.IndexStore.meta]].
     */
   private def spanMeta(s: org.apache.spark.sql.SparkSession,
@@ -1843,7 +1834,7 @@ object Dedup {
     IndexStore.committed(s, indexDir, SpanLayout).row
 
   private val SpanLayout = IndexStore.Layout("span", "buildSpanIndex",
-    Seq("width", "buckets"))
+    Seq("width", "buckets", "gen"))
 
   private def readSpanIndexWidth(s: org.apache.spark.sql.SparkSession,
       indexDir: String): Int = spanMeta(s, indexDir).getAs[Int]("width")

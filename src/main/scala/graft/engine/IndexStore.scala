@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
 /** The lifecycle the three persisted index families share — MinHash
@@ -12,30 +13,36 @@ import org.apache.spark.sql.types.StructType
   * ([[graft.similarity.Similarity.buildIvfIndex]]): build, probe,
   * append, take down, compact or rebuild. Each family keeps its own
   * payload tables, segmentation and probe; the decisions below are
-  * made here once. The layout is the one every family has always
-  * written under its index dir:
+  * made here once. The layout every family writes under its index dir:
   *
-  *   meta/            one row of build parameters, the family's
-  *                    commit point ([[commitMeta]])
+  *   gen-<g>/         the payload tables of generation g; the live
+  *                    one is the `gen` its meta row names ([[liveDir]])
+  *   meta/            one row of build parameters plus `gen`, the
+  *                    family's commit point ([[commitGeneration]])
   *   tombstones/      one-column sidecar of removed ids or keys
   *                    ([[addTombstones]])
   *   meta.next/, tombstones.next/ — transient copies of a swap in
   *                    flight ([[swap]])
   *
+  * GENERATION COMMIT: build, rebuild and compaction all replace the
+  * payload the same way ([[commitGeneration]]): write generation g+1
+  * beside the live g (first deleting an orphan g+1 a crashed attempt
+  * left), commit meta naming g+1, clear the tombstone sidecar, then
+  * sweep the older generations. Appends add rows to the live
+  * generation's tables and never change meta.
+  *
   * META COMMIT: meta is written LAST, after every payload table it
   * describes has landed, through the `meta.next` swap. Readers see the
-  * complete old index or the complete new one.
+  * complete old index or the complete new one: a crash before the
+  * commit leaves generation g live and its sidecar in force, and
+  * re-running converges.
   *
-  * CRASH SWAP: every replacement of a live directory — the meta
-  * commit, a compaction's table swap, the span rebuild's key-set swap
-  * and the span revive's sidecar rewrite — stages the new copy fully,
-  * deletes the live directory and renames the copy into place; the
-  * rename is the commit. The residual window between the delete and
-  * the rename heals on the next read for `meta` and `tombstones`
-  * ([[meta]], [[tombstones]] finish the rename). A compaction clears
-  * the sidecar only after its table swaps, so a crash mid-swap leaves
-  * a mix of compacted and uncompacted tables WITH the sidecar still
-  * filtering them: probes stay correct and re-running converges.
+  * CRASH SWAP: the two replacements of a live directory in place —
+  * the meta commit and the span revive's sidecar rewrite — stage the
+  * new copy fully, delete the live directory and rename the copy into
+  * place; the rename is the commit. The window between the delete and
+  * the rename heals on the next read ([[meta]], [[tombstones]] finish
+  * the rename).
   *
   * SIZE CONTRACT: the tombstone sidecar is for TAKEDOWN-SIZED deltas
   * (opt-outs, DMCA lists, audit removals). Every probe anti-joins it
@@ -90,6 +97,9 @@ object IndexStore {
     /** The constant under `key`, computed by `make` on first use. */
     def pin[T <: AnyRef](key: String)(make: => T): T =
       constants.computeIfAbsent(key, _ => make).asInstanceOf[T]
+
+    /** The live generation (GENERATION COMMIT). */
+    def gen: Int = row.getAs[Int]("gen")
   }
 
   /** One entry per index dir, keyed by its qualified path. */
@@ -155,13 +165,39 @@ object IndexStore {
       m
     }
 
-  /** Commit `row` (a one-row frame) as the index's meta through the
-    * `meta.next` swap, replacing the memo entry.
+  /** Write and commit the next generation of the `layout` index at
+    * `dir` (GENERATION COMMIT). `write(out, g)` writes every payload
+    * table under `out`, generation g's dir, and returns the meta row:
+    * a one-row frame of the layout's columns, whose `gen`, if any, is
+    * replaced by g. The layout check runs before anything is written;
+    * meta commits through the `meta.next` swap and replaces the memo
+    * entry.
     */
-  def commitMeta(s: SparkSession, dir: String, row: DataFrame): Unit = {
-    row.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.next")
+  def commitGeneration(s: SparkSession, dir: String, layout: Layout)(
+      write: (String, Int) => DataFrame): Int = {
+    val gen = existing(s, dir, layout).fold(0)(_.gen + 1)
+    val (fs, root) = fsOf(s, dir)
+    fs.delete(new Path(root, s"gen-$gen"), true)
+    write(s"$dir/gen-$gen", gen).withColumn("gen", lit(gen))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.next")
     swap(s, s"$dir/meta.next", s"$dir/meta")
     forget(s, dir)
+    // the sidecar's rows are folded out of g; older generations go
+    fs.listStatus(root).map(_.getPath).filter { p =>
+      val n = p.getName
+      n.startsWith("tombstones") || (n.startsWith("gen-") && n != s"gen-$gen")
+    }.foreach(fs.delete(_, true))
+    gen
+  }
+
+  /** The live generation's dir of the index at `dir`, `<dir>/gen-<g>`,
+    * with g read from its memoized meta entry (no Spark job) — where
+    * every family reads and appends its payload tables.
+    */
+  private[graft] def liveDir(s: SparkSession, dir: String): String = {
+    val m = meta(s, dir).getOrElse(
+      throw new IllegalStateException(s"no index at $dir (no meta)"))
+    s"$dir/gen-${m.gen}"
   }
 
   /** Drop the index's memo entry (its dir is deleted or rebuilt). */
@@ -171,7 +207,7 @@ object IndexStore {
   /** Replace directory `live` by the fully written `staged` one:
     * delete, then rename (see CRASH SWAP above).
     */
-  def swap(s: SparkSession, staged: String, live: String): Unit = {
+  private def swap(s: SparkSession, staged: String, live: String): Unit = {
     val (fs, to) = fsOf(s, live)
     val from = new Path(staged)
     fs.delete(to, true)
@@ -236,14 +272,6 @@ object IndexStore {
   def rewriteTombstones(s: SparkSession, dir: String, kept: DataFrame): Unit = {
     kept.coalesce(1).write.mode("overwrite").parquet(s"$dir/tombstones.next")
     swap(s, s"$dir/tombstones.next", s"$dir/tombstones")
-  }
-
-  /** Delete the sidecar — once a compaction or rebuild has folded its
-    * rows out.
-    */
-  def clearTombstones(s: SparkSession, dir: String): Unit = {
-    val (fs, root) = fsOf(s, dir)
-    Seq("tombstones", "tombstones.next").foreach(t => fs.delete(new Path(root, t), true))
   }
 
   /** Refuse a batch that re-uses a tombstoned id: the id-keyed sidecar

@@ -608,10 +608,11 @@ object Similarity {
     *              caller expectations against this row, so an index
     *              built under one configuration cannot silently
     *              serve another. Meta is written LAST
-    *              ([[graft.engine.IndexStore.commitMeta]]): readers see
-    *              either the complete old index or the complete new
-    *              one, never a half-built generation, and a crash
-    *              mid-build leaves the live index intact. A directory
+    *              ([[graft.engine.IndexStore]] GENERATION COMMIT):
+    *              readers see either the complete old index or the
+    *              complete new one, never a half-built generation, a
+    *              crash mid-build leaves the live index intact, and
+    *              the commit clears the tombstone sidecar. A directory
     *              whose meta lacks any of these columns is refused,
     *              not rebuilt over ([[graft.engine.IndexStore]] LAYOUT
     *              RULE).
@@ -629,74 +630,46 @@ object Similarity {
       indexDir: String, kCentroids: Int = 0, quantizer: String = "kmeans",
       lloydIters: Int = 1): Unit = {
     val s = corpus.sparkSession
-    // Next generation: one past the live index's. The live data stays
-    // fully probe-able until the meta commit swings readers to the new
-    // generation.
-    val newGen = IndexStore.existing(s, indexDir, IvfLayout)
-      .fold(0)(ivfRow(_)._5 + 1)
-    buildIvfGeneration(corpus.select(col(id).as("vid"), col(vec).as("v")),
-      indexDir, newGen, kCentroids, quantizer, lloydIters)
-    sweepIvfGenerations(s, indexDir, keepGen = newGen)
-  }
-
-  /** Build one index generation's data dirs and COMMIT it by the
-    * meta swap — the shared core of [[buildIvfIndex]] and
-    * [[rebuildIvfIndex]]. Input is the `(vid, v)` projection;
-    * zero-norm vectors are excluded (the ivfTopK NaN guard). Meta is
-    * written LAST: a crash anywhere before the commit leaves the
-    * prior generation live and intact (plus an orphaned gen dir the
-    * next build overwrites or sweeps). The commit clears the
-    * tombstone sidecar.
-    */
-  private def buildIvfGeneration(vidV: DataFrame, indexDir: String,
-      gen: Int, kCentroids: Int, quantizer: String,
-      lloydIters: Int): Unit = {
-    val s = vidV.sparkSession
-    val dataDir = ivfGenDir(indexDir, gen)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val v = vidV
-      .withColumn("nrm", norm2(col("v")))
-      .filter(col("nrm") > 0)
-      .persist(lvl)
-    try {
-      // ONE count serves both kc sizing and the meta n_build row (the
-      // r16 verdict flagged the duplicate: kc's count and the nBuild
-      // count at commit were two jobs over the same persisted frame).
-      // kCentroids = 0 → the deployed [[sqrtKc]] policy over the
-      // VALID (norm-filtered) corpus — the same count the rebuild
-      // path sizes from, so build and drift-rebuild agree on the rule
-      val nValid = v.count()
-      val kc = if (kCentroids > 0) kCentroids else sqrtKc(nValid)
-      val cents = (quantizer match {
-        case "kmeans" => kmeansCentroids(v, kc, lloydIters)
-        case "lowid" => v.orderBy("vid").limit(kc)
-          .select(col("vid").as("cid"), col("v").as("cv"),
-            col("nrm").as("cnrm"))
-        case other => throw new IllegalArgumentException(
-          s"unknown quantizer: $other (kmeans|lowid)")
-      }).persist(lvl)
-      cents.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dataDir/centroids")
-      // co-locate each inverted list in one task before the
-      // partitioned write: without this every task opens a writer
-      // per cid it happens to hold (tasks × kCentroids small files —
-      // measured as the dominant build cost at kc≈200), with it the
-      // file count is one per list
-      v.join(argmaxAssign(v, cents), "vid")
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$dataDir/lists")
-      cents.unpersist()
-      import s.implicits._
-      IndexStore.commitMeta(s, indexDir,
-        Seq((quantizer, lloydIters, kc, nValid, gen)).toDF(
-          "quantizer", "lloyd_iters", "k_centroids", "n_build", "gen"))
-      // A new generation holds no removed vids (a rebuild reads the
-      // tombstone-filtered lists), so the sidecar is cleared — only
-      // AFTER the commit: a crash mid-build leaves the old generation
-      // live with its sidecar intact.
-      IndexStore.clearTombstones(s, indexDir)
-    } finally v.unpersist()
+    IndexStore.commitGeneration(s, indexDir, IvfLayout) { (dataDir, _) =>
+      val v = corpus.select(col(id).as("vid"), col(vec).as("v"))
+        .withColumn("nrm", norm2(col("v")))
+        .filter(col("nrm") > 0)
+        .persist(lvl)
+      try {
+        // ONE count serves both kc sizing and the meta n_build row (the
+        // r16 verdict flagged the duplicate: kc's count and the nBuild
+        // count at commit were two jobs over the same persisted frame).
+        // kCentroids = 0 → the deployed [[sqrtKc]] policy over the
+        // VALID (norm-filtered) corpus — the same count the rebuild
+        // path sizes from, so build and drift-rebuild agree on the rule
+        val nValid = v.count()
+        val kc = if (kCentroids > 0) kCentroids else sqrtKc(nValid)
+        val cents = (quantizer match {
+          case "kmeans" => kmeansCentroids(v, kc, lloydIters)
+          case "lowid" => v.orderBy("vid").limit(kc)
+            .select(col("vid").as("cid"), col("v").as("cv"),
+              col("nrm").as("cnrm"))
+          case other => throw new IllegalArgumentException(
+            s"unknown quantizer: $other (kmeans|lowid)")
+        }).persist(lvl)
+        cents.coalesce(1).write.mode("overwrite")
+          .parquet(s"$dataDir/centroids")
+        // co-locate each inverted list in one task before the
+        // partitioned write: without this every task opens a writer
+        // per cid it happens to hold (tasks × kCentroids small files —
+        // measured as the dominant build cost at kc≈200), with it the
+        // file count is one per list
+        v.join(argmaxAssign(v, cents), "vid")
+          .repartition(col("cid"))
+          .write.mode("overwrite").partitionBy("cid")
+          .parquet(s"$dataDir/lists")
+        cents.unpersist()
+        import s.implicits._
+        Seq((quantizer, lloydIters, kc, nValid)).toDF(
+          "quantizer", "lloyd_iters", "k_centroids", "n_build")
+      } finally v.unpersist()
+    }
   }
 
   /** REBUILD a persisted IVF index from its own inverted lists under
@@ -719,14 +692,12 @@ object Similarity {
     */
   def rebuildIvfIndex(s: org.apache.spark.sql.SparkSession,
       indexDir: String, kCentroids: Int = 0): Unit = {
-    val (quant, iters, _, _, gen) = ivfMetaFull(s, indexDir)
+    val (quant, iters, _, _, _) = ivfMetaFull(s, indexDir)
     // ivfLists is tombstone-filtered, so the new generation simply
     // never contains removed vids — the rebuild IS the physical half
     // of [[removeFromIvfIndex]]'s contract.
-    val vidV = ivfLists(s, indexDir).select(col("vid"), col("v"))
-    val kc = if (kCentroids > 0) kCentroids else sqrtKc(vidV.count())
-    buildIvfGeneration(vidV, indexDir, gen + 1, kc, quant, iters)
-    sweepIvfGenerations(s, indexDir, keepGen = gen + 1)
+    buildIvfIndex(ivfLists(s, indexDir), "vid", "v", indexDir, kCentroids,
+      quant, iters)
   }
 
   /** The deployed centroid-count policy shared by the batch router,
@@ -737,23 +708,6 @@ object Similarity {
   def sqrtKc(n: Long): Int =
     math.min(KCentroidsMax.toLong,
       math.max(16L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
-
-  private def ivfGenDir(indexDir: String, gen: Int): String =
-    s"$indexDir/gen-$gen"
-
-  /** Drop every generation dir except `keepGen` — run AFTER the meta
-    * commit, so a crash before the sweep only orphans files the next
-    * sweep removes.
-    */
-  private def sweepIvfGenerations(s: org.apache.spark.sql.SparkSession,
-      indexDir: String, keepGen: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen-") && n != s"gen-$keepGen") fs.delete(st.getPath, true)
-    }
-  }
 
   /** The live generation, resolved from the index's meta entry
     * ([[graft.engine.IndexStore.meta]]): the meta row `(quantizer,
@@ -814,8 +768,7 @@ object Similarity {
   private[graft] def ivfMeta(s: org.apache.spark.sql.SparkSession,
       indexDir: String): IvfMeta = {
     val m = IndexStore.committed(s, indexDir, IvfLayout)
-    val row = ivfRow(m)
-    new IvfMeta(row, ivfGenDir(indexDir, row._5), m)
+    new IvfMeta(ivfRow(m), IndexStore.liveDir(s, indexDir), m)
   }
 
   /** The live generation's centroid table (kCentroids rows), read

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.engine.IndexStore
 
 /** Incremental corpus dedup ([[Dedup.buildIndex]]/[[Dedup.incremental]],
   * d30): fates on a constructed two-snapshot corpus, idempotence of
@@ -126,7 +127,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     Dedup.appendIndex(kept1, "doc_id", "text", idx)
 
     def tableCounts() = Seq("content", "sigs", "bands")
-      .map(t => t -> spark.read.parquet(s"$idx/$t").count()).toMap
+      .map(t => t -> spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/$t").count()).toMap
     val after1 = tableCounts()
     Dedup.appendIndex(kept1, "doc_id", "text", idx)
     assert(tableCounts() == after1,
@@ -223,7 +224,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val idx = freshIdx("cap")
     Dedup.buildIndex(old, "doc_id", "text", idx, maxBucket = 2)
-    val bandsBefore = spark.read.parquet(s"$idx/bands")
+    val bandsBefore = spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/bands")
       .groupBy("band", "band_hash").count().collect()
       .map(r => (r.getAs[Number]("band").longValue(),
         r.getAs[Number]("band_hash").longValue()) -> r.getLong(2)).toMap
@@ -231,7 +232,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     Dedup.appendIndex(
       Seq((10L, mkText("delta"))).toDF("doc_id", "text"),
       "doc_id", "text", idx)
-    val bandsAfter = spark.read.parquet(s"$idx/bands")
+    val bandsAfter = spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/bands")
       .groupBy("band", "band_hash").count().collect()
       .map(r => (r.getAs[Number]("band").longValue(),
         r.getAs[Number]("band_hash").longValue()) -> r.getLong(2)).toMap

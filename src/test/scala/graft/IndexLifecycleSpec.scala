@@ -16,7 +16,10 @@ import graft.similarity.Similarity
   *  - takedown: remove → the probe excludes → compaction or rebuild
   *    folds the rows out physically and the sidecar is gone;
   *  - crash windows: a `meta.next`-only and a `tombstones.next`-only
-  *    state heal on the next read;
+  *    state heal on the next read; a rebuild (or MinHash compaction)
+  *    whose meta commit fails leaves the old index probing as before,
+  *    and re-running it converges; a MinHash append whose last table
+  *    commit fails converges on retry;
   *  - the size contract: a removal past the broadcast bound is refused
   *    and leaves the sidecar unchanged, a takedown-sized one lands;
   *  - re-adding a tombstoned id is refused loudly (MinHash, IVF);
@@ -75,13 +78,19 @@ class IndexLifecycleSpec extends AnyFunSuite {
 
   /** One index family seen through its public calls. `live` probes
     * every fixture document and returns the ids the index still
-    * matches; `readd` appends ids again.
+    * matches; `readd` appends ids again. `rebuild` replaces the index
+    * with new parameters, after which `live` is `rebuilt`.
     */
   private case class Family(name: String, build: String => Unit,
       remove: (SparkSession, String, Seq[Long]) => Unit,
       live: String => Set[Long], fold: String => Unit,
       physical: String => Set[Long], readd: Option[(String, Seq[Long]) => Unit],
-      route: String, entryPoints: Seq[(String, String => Any)])
+      route: String, entryPoints: Seq[(String, String => Any)],
+      rebuild: (SparkSession, String) => Unit, rebuilt: Set[Long])
+
+  /** The path of `table` in the live generation of the index at `idx`. */
+  private def liveTable(idx: String, table: String): String =
+    s"${IndexStore.liveDir(spark, idx)}/$table"
 
   private val minhash = Family("minhash",
     idx => Dedup.buildIndex(docs(spark, ids), "doc_id", "text", idx),
@@ -94,7 +103,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
       r
     },
     idx => Dedup.compactIndex(spark, "doc_id", idx),
-    idx => spark.read.parquet(s"$idx/sigs").select("doc_id").collect()
+    idx => spark.read.parquet(liveTable(idx, "sigs")).select("doc_id").collect()
       .map(_.getLong(0)).toSet,
     Some((idx, xs) => Dedup.appendIndex(docs(spark, xs), "doc_id", "text", idx)),
     "buildIndex",
@@ -104,7 +113,10 @@ class IndexLifecycleSpec extends AnyFunSuite {
       "removeFromIndex" -> (idx =>
         Dedup.removeFromIndex(docs(spark, ids).select("doc_id"), "doc_id", idx)),
       "compactIndex" -> (idx => Dedup.compactIndex(spark, "doc_id", idx)),
-      "readIndexMeta" -> (idx => Dedup.readIndexMeta(spark, idx))))
+      "readIndexMeta" -> (idx => Dedup.readIndexMeta(spark, idx))),
+    (s, idx) => Dedup.buildIndex(docs(s, ids.take(6)), "doc_id", "text", idx,
+      numPerms = 32),
+    ids.take(6).toSet)
 
   private val span: Family = Family("span",
     idx => Dedup.buildSpanIndex(docs(spark, ids), "doc_id", "text", idx, width = 2),
@@ -120,7 +132,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     },
     // a document is physically indexed while all its span keys are
     idx => {
-      val keys = spark.read.parquet(s"$idx/spans").collect().map(_.getString(0)).toSet
+      val keys = spark.read.parquet(liveTable(idx, "spans")).collect().map(_.getString(0)).toSet
       ids.filter(i => spanKeys(i).subsetOf(keys)).toSet
     },
     None,
@@ -133,7 +145,10 @@ class IndexLifecycleSpec extends AnyFunSuite {
         Dedup.appendSpanIndex(docs(spark, ids), "doc_id", "text", idx)),
       "removeFromSpanIndex" -> (idx =>
         Dedup.removeFromSpanIndex(docs(spark, ids), "doc_id", "text", idx)),
-      "spanIndexKeys" -> (idx => Dedup.spanIndexKeys(spark, idx))))
+      "spanIndexKeys" -> (idx => Dedup.spanIndexKeys(spark, idx))),
+    (s, idx) => Dedup.buildSpanIndex(docs(s, ids.take(6)), "doc_id", "text", idx,
+      width = 4),
+    ids.take(6).toSet)
 
   /** The width-2 span keys of fixture document `i`. */
   private def spanKeys(i: Long): Set[String] =
@@ -171,7 +186,9 @@ class IndexLifecycleSpec extends AnyFunSuite {
         Similarity.appendIvfIndex(vecs(spark, ids), "vec_id", "vec", idx)),
       "removeFromIvfIndex" -> (idx =>
         Similarity.removeFromIvfIndex(vecs(spark, ids).select("vec_id"), "vec_id", idx)),
-      "rebuildIvfIndex" -> (idx => Similarity.rebuildIvfIndex(spark, idx))))
+      "rebuildIvfIndex" -> (idx => Similarity.rebuildIvfIndex(spark, idx))),
+    (s, idx) => Similarity.rebuildIvfIndex(s, idx, kCentroids = 4),
+    ids.toSet)
 
   private val families = Seq(minhash, span, ivf)
 
@@ -237,6 +254,78 @@ class IndexLifecycleSpec extends AnyFunSuite {
       assert(sidecarRows(idx) == takedown.size * perDoc, "a refused removal wrote rows")
       assert(f.live(idx) == ids.toSet -- takedown)
     }
+
+    test(s"${f.name}: a rebuild that fails at its meta commit leaves the old index probing as before, and re-running converges") {
+      val idx = scratch(s"${f.name}_crash")
+      f.build(idx)
+      def state = (f.live(idx), IndexStore.meta(spark, idx).get.row)
+      val before = state
+      val e = intercept[Exception](
+        f.rebuild(FailingCommitProtocol.session(spark, "meta.next"), idx))
+      assert(FailingCommitProtocol.injected(e), e)
+      IndexStore.forget(spark, idx)
+      assert(state == before)
+      f.rebuild(spark, idx)
+      assert(f.live(idx) == f.rebuilt)
+      assert(IndexStore.meta(spark, idx).get.gen == 1)
+      assert(new java.io.File(idx).list().filter(_.startsWith("gen-")).toSeq == Seq("gen-1"))
+    }
+  }
+
+  test("minhash: a compaction that fails at its meta commit leaves the rows and the sidecar in force, and re-running converges") {
+    val idx = scratch("minhash_compact_crash")
+    minhash.build(idx)
+    minhash.remove(spark, idx, Seq(1L, 2L))
+    val e = intercept[Exception](Dedup.compactIndex(
+      FailingCommitProtocol.session(spark, "meta.next"), "doc_id", idx))
+    assert(FailingCommitProtocol.injected(e), e)
+    IndexStore.forget(spark, idx)
+    assert(minhash.live(idx) == ids.toSet -- Set(1L, 2L))
+    assert(minhash.physical(idx) == ids.toSet && sidecarRows(idx) == 2L)
+    Dedup.compactIndex(spark, "doc_id", idx)
+    assert(!exists(s"$idx/tombstones"))
+    assert(minhash.physical(idx) == ids.toSet -- Set(1L, 2L))
+    assert(minhash.live(idx) == ids.toSet -- Set(1L, 2L))
+  }
+
+  test("minhash: an append whose content commit fails converges on retry to the tables of a clean append") {
+    val (idx, clean) = (scratch("minhash_append_crash"), scratch("minhash_append_clean"))
+    // the batch: six new documents, one of them a copy of an indexed one
+    def batch(s: SparkSession) =
+      docs(s, ids.drop(6)).unionByName(docs(s, Seq(0L), offset = 100L))
+    Seq(idx, clean).foreach(i =>
+      Dedup.buildIndex(docs(spark, ids.take(6)), "doc_id", "text", i))
+    val e = intercept[Exception](Dedup.appendIndex(
+      batch(FailingCommitProtocol.session(spark, "content")), "doc_id", "text", idx))
+    assert(FailingCommitProtocol.injected(e), e)
+    assert(spark.read.parquet(liveTable(idx, "content")).count() == 6L,
+      "the content commit failed")
+    assert(spark.read.parquet(liveTable(idx, "sigs")).count() == 12L,
+      "sigs landed before the failure")
+    Dedup.appendIndex(batch(spark), "doc_id", "text", idx)
+    Dedup.appendIndex(batch(spark), "doc_id", "text", clean)
+    Seq("sigs", "bands", "content").foreach { t =>
+      def rows(i: String) =
+        spark.read.parquet(liveTable(i, t)).collect().map(_.toString).sorted.toSeq
+      assert(rows(idx) == rows(clean), t)
+    }
+  }
+
+  test("span: two rebuilds and a delete leave no catalog table of the index") {
+    val idx = scratch("span_catalog")
+    def tables: Set[String] = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_span_idx_")).toSet
+    val before = tables
+    span.build(idx)
+    val first = tables -- before
+    assert(first.size == 1, first)
+    span.build(idx)
+    span.build(idx)
+    val third = tables -- before
+    assert(third.size == 1 && third != first, s"$first, $third")
+    assert(span.live(idx) == ids.toSet)
+    Dedup.deleteSpanIndex(spark, idx)
+    assert(tables == before)
   }
 
   // --- the layout rule ----------------------------------------------
@@ -270,33 +359,31 @@ class IndexLifecycleSpec extends AnyFunSuite {
   }
 
   test("ivf: a hand-written meta without gen or n_build is refused by ivfLists, appendIvfIndex and buildIvfIndex, and its files stay") {
-    Seq("gen", "n_build").foreach { dropped =>
-      val idx = scratch(s"ivf_old_$dropped")
-      ivf.build(idx)
+    // and a MinHash or span meta without gen, by every entry point
+    Seq((ivf, "gen", "lists"), (ivf, "n_build", "lists"), (minhash, "gen", "sigs"),
+        (span, "gen", "spans")).foreach { case (f, dropped, table) =>
+      val idx = scratch(s"${f.name}_old_$dropped")
+      f.build(idx)
       spark.read.parquet(s"$idx/meta").drop(dropped)
         .coalesce(1).write.parquet(s"$idx/meta.hand")
       assert(fs.delete(new Path(s"$idx/meta"), true))
       assert(fs.rename(new Path(s"$idx/meta.hand"), new Path(s"$idx/meta")))
       IndexStore.forget(spark, idx)
-      Seq[(String, String => Any)](
-        "ivfLists" -> (i => Similarity.ivfLists(spark, i)),
-        "appendIvfIndex" -> (i =>
-          Similarity.appendIvfIndex(vecs(spark, ids, offset = 1000L), "vec_id", "vec", i)),
-        "buildIvfIndex" -> (i => ivf.build(i))
-      ).foreach { case (what, call) =>
-        assertRefused(idx, s"$what without $dropped", "buildIvfIndex")(call(idx))
+      (f.entryPoints :+ (f.route -> f.build)).foreach { case (what, call) =>
+        assertRefused(idx, s"${f.name} $what without $dropped", f.route)(call(idx))
       }
-      assert(files(idx).exists(_.startsWith("/gen-0/lists/")), files(idx))
+      assert(files(idx).exists(_.startsWith(s"/gen-0/$table/")), files(idx))
     }
   }
 
   test("minhash: incremental over an index whose meta was deleted is refused") {
     val idx = scratch("minhash_nometa")
     minhash.build(idx)
+    val tables = Seq("sigs", "bands", "content").map(liveTable(idx, _))
     assert(fs.delete(new Path(s"$idx/meta"), true))
     assertRefused(idx, "incremental", "buildIndex")(
       Dedup.incremental(docs(spark, ids), "doc_id", "text", idx))
-    assert(exists(s"$idx/sigs") && exists(s"$idx/bands") && exists(s"$idx/content"))
+    assert(tables.forall(exists))
   }
 
   // --- the meta memo -------------------------------------------------
@@ -347,9 +434,10 @@ class IndexLifecycleSpec extends AnyFunSuite {
       val jobs = jobsLaunchedBy(Dedup.incremental(batch, "doc_id", "text", idx))
       assert(jobs.isEmpty, s"a second incremental launched jobs $jobs")
       val m = IndexStore.meta(spark, idx).get
-      Seq("content", "sigs", "bands", "tombstones").foreach { t =>
-        val st = m.schema(spark, s"$idx/$t")
-        assert(st == spark.read.parquet(s"$idx/$t").schema, t)
+      Seq(liveTable(idx, "content"), liveTable(idx, "sigs"), liveTable(idx, "bands"),
+          s"$idx/tombstones").foreach { t =>
+        val st = m.schema(spark, t)
+        assert(st == spark.read.parquet(t).schema, t)
         assert(st.fields.exists(_.dataType == idType), s"$t: $st")
       }
       val fates = Dedup.incremental(batch, "doc_id", "text", idx)

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.engine.IndexStore
 
 /** Round-12 operators: incremental span dedup (d46 — the d30
   * build-once/probe-many amortization applied to d39's span grain)
@@ -136,8 +137,9 @@ class Round12OpsSpec extends AnyFunSuite {
     assert(out(3L) == ((2L, 1L, md5hex("q r"))),
       "appended span 'x y' must now suppress batch-3 occurrences")
     // the append must not have duplicated already-present keys
-    val n = spark.read.parquet(s"$idx/spans").count()
-    val distinctN = spark.read.parquet(s"$idx/spans").distinct().count()
+    val spans = s"${IndexStore.liveDir(spark, idx)}/spans"
+    val n = spark.read.parquet(spans).count()
+    val distinctN = spark.read.parquet(spans).distinct().count()
     assert(n == distinctN, "span index must stay a set after append")
   }
 }

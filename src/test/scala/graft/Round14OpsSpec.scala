@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.engine.IndexStore
 import graft.streaming.StreamingOps
 
 /** Round-14 contracts: crash-retry convergence of the ingest loops
@@ -130,7 +131,7 @@ class Round14OpsSpec extends AnyFunSuite {
       .map(_.name)
       .find(n => spark.table(n).inputFiles.exists(_.contains(
         new java.io.File(idx).getName))).get}")
-    graft.engine.Scratch.delete(s"$idx/spans")
+    graft.engine.Scratch.delete(s"${IndexStore.liveDir(spark, idx)}/spans")
     val e = intercept[IllegalStateException] {
       Dedup.spanNovelty(docsDf(Seq(9L -> "m n")), "doc_id", "text", idx)
     }
@@ -434,11 +435,11 @@ class Round14OpsSpec extends AnyFunSuite {
         7L -> txt,                                         // exact_index dup
         8L -> "fresh uniq1 uniq2 uniq3 uniq4 uniq5 uniq6") // genuinely new
       ), "doc_id", "text", idx)
-    val sigIds = spark.read.parquet(s"$idx/sigs")
+    val sigIds = spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/sigs")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(sigIds == Set(1L, 8L),
       s"the dup's sig must not land under the new id, got $sigIds")
-    val bandIds = spark.read.parquet(s"$idx/bands")
+    val bandIds = spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/bands")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(!bandIds.contains(7L),
       "the dup's band keys must not land under the new id")

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.engine.IndexStore
 import graft.similarity.Similarity
 
 /** Round-16 contracts: DELETION (takedown/opt-out) on the three
@@ -146,11 +147,11 @@ class Round16OpsSpec extends AnyFunSuite {
     // compaction: physical removal, sidecar cleared, id re-armed
     Dedup.compactIndex(spark, "doc_id", idx)
     assert(!new java.io.File(s"$idx/tombstones").exists())
-    assert(spark.read.parquet(s"$idx/sigs")
+    assert(spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/sigs")
       .filter(col("doc_id") === 0L).count() == 0L)
-    assert(spark.read.parquet(s"$idx/bands")
+    assert(spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/bands")
       .filter(col("doc_id") === 0L).count() == 0L)
-    assert(spark.read.parquet(s"$idx/content")
+    assert(spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/content")
       .filter(col("keeper_id") === 0L).count() == 0L)
     Dedup.appendIndex(docsDf(Seq(
       0L -> "a wholly novel document with fresh unseen content and original words")),
@@ -191,10 +192,10 @@ class Round16OpsSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$idx/tombstones").count() == 2L,
       "revive must rewrite the sidecar minus the batch's keys")
     // the physical key set gained nothing: all four keys pre-existed
-    val rawKeys = spark.read.parquet(s"$idx/spans").count()
+    val rawKeys = spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/spans").count()
     Dedup.appendSpanIndex(docsDf(Seq(21L -> "w1 w2 w3 w4")),
       "doc_id", "text", idx) // replay: no physical duplicates either
-    assert(spark.read.parquet(s"$idx/spans").count() == rawKeys,
+    assert(spark.read.parquet(s"${IndexStore.liveDir(spark, idx)}/spans").count() == rawKeys,
       "re-appending physically-present keys must not duplicate rows")
     // full rebuild over the live corpus clears the sidecar
     Dedup.buildSpanIndex(docsDf(Seq(doc, other)), "doc_id", "text", idx,

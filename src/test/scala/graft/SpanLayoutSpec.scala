@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
 import graft.dedup.Dedup
+import graft.engine.IndexStore
 
 /** The span index's file layout: its bucket count is the building
   * session's shuffle width, recorded in `meta/`, and an append adds at
@@ -35,8 +36,9 @@ class SpanLayoutSpec extends AnyFunSuite {
     spark.read.parquet(s"$idx/meta").head().getAs[Int]("buckets")
 
   private def dataFiles(idx: String): Set[String] =
-    Option(new java.io.File(s"$idx/spans").list()).fold(Set.empty[String])(
-      _.filter(f => f.endsWith(".parquet") && !f.startsWith(".")).toSet)
+    Option(new java.io.File(s"${IndexStore.liveDir(spark, idx)}/spans").list())
+      .fold(Set.empty[String])(
+        _.filter(f => f.endsWith(".parquet") && !f.startsWith(".")).toSet)
 
   private def novelty(batch: DataFrame, idx: String): Map[Long, (Long, Long)] =
     Dedup.spanNovelty(batch, "doc_id", "text", idx).collect()
